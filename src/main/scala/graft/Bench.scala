@@ -229,10 +229,10 @@ object Bench {
       java.nio.file.Paths.get("BENCH_LAST.json"), full + "\n")
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write BENCH_LAST.json: $e") }
-    def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val slowest = ok.sortBy(-_._2).take(20)
-      .map(r => "\"" + r._1 + "\":" + r3(r._2)).mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs_per_query":$nRuns,"n_queries":${settled.size},"failed":$nFail,"rechecked":${recheck.size},"resettled":${resettled.size},"queries":$slowest,"detail":"BENCH_LAST.json","sf":"$sfDir"}"""
+    def r2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
+    val slowest = ok.sortBy(-_._2).take(15)
+      .map(r => "\"" + r._1 + "\":" + r2(r._2)).mkString("{", ",", "}")
+    val json = s"""{"metric":"total","value":${r2(total)},"unit":"sec","runs_per_query":$nRuns,"n_queries":${settled.size},"failed":$nFail,"rechecked":${recheck.size},"resettled":${resettled.size},"queries":$slowest,"detail":"BENCH_LAST.json","sf":"$sfDir"}"""
     println(json)
     spark.stop()
   }

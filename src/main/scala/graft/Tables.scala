@@ -14,7 +14,22 @@ object Tables {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** Schema-declared parquet read. A schema-less `spark.read.parquet`
+    * runs a footer-inference Spark job every time a DataFrame is
+    * constructed; here Spark's own inferred schema is memoised per
+    * (application, paths, file fingerprint) and handed back through
+    * `read.schema(..)`, so a repeated read plans without a job while a
+    * rewritten dataset is re-inferred. Every parquet read under
+    * `graft.ops`/`graft.streaming` goes through this (TablesSpec's
+    * source scan enforces it). */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val schema = parquetSchemas(spark, paths)(
+      spark.read.parquet(paths: _*).schema)
+    spark.read.schema(schema).parquet(paths: _*)
+  }
+  private val parquetSchemas = new Util.FingerprintMemo[StructType]
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -42,14 +57,10 @@ object Tables {
     * term gives each part 4 DISTINCT costs, so Q2's per-part min-cost
     * supplier is unique and both engines agree without tie rules.
     * Costs are integer CENTS (the cents/e4 parity rule in [[Util]]). */
-  private val nSupCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
+  private val nSupCache = new Util.FingerprintMemo[Long]
   def partsupp(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, lit}
-    val nSup = nSupCache.getOrElseUpdate(
-      (s.sparkContext.applicationId,
-        s"$d#${graft.Util.fileFingerprint(s"$d/supplier.parquet")}"),
-      supplier(s, d).count())
+    val nSup = nSupCache(s, Seq(s"$d/supplier.parquet"))(supplier(s, d).count())
     val step = nSup / 4 + 1
     require((0 until 4).map(i => (i * step) % nSup).distinct.size == 4,
       s"partsupp stride degenerate at |supplier|=$nSup: a part's 4 " +

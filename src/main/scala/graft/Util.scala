@@ -150,6 +150,27 @@ object Util {
     md5Hex(joined)
   }
 
+  /** Driver-side memo of a value derived from files: one entry per
+    * (application id, paths), valid while the paths' [[fileFingerprint]]
+    * is unchanged. A rewritten file (new length or mtime) rebuilds on
+    * the next call and replaces the stale entry, so the memo holds one
+    * value per path set and dies with the application. */
+  final class FingerprintMemo[V] {
+    private val m = scala.collection.concurrent.TrieMap
+      .empty[(String, Seq[String]), (String, V)]
+    def apply(spark: SparkSession, paths: Seq[String])(build: => V): V = {
+      val key = (spark.sparkContext.applicationId, paths)
+      val fp = paths.map(fileFingerprint).mkString("|")
+      m.get(key) match {
+        case Some((`fp`, v)) => v
+        case _ =>
+          val v = build
+          m.put(key, (fp, v))
+          v
+      }
+    }
+  }
+
   /** Hex MD5 of a string — the shared digest for artifact keys. */
   def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

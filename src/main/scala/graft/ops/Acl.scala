@@ -38,8 +38,11 @@ import graft.Tables
   * store's `ACL_POLICY_VERSION` so an audit row names the policy
   * generation it was resolved under. The DuckDB oracles replay the
   * SAME store (read_json_auto at dump time), so an edited policy
-  * re-verifies end to end. Everything below is metadata-sized except
-  * the documents scan each view prunes. */
+  * re-verifies end to end. Views compile their policy values on the
+  * driver from the store snapshot ([[Config.snapshot]], read once per
+  * store fingerprint), so building a view launches no Spark job;
+  * everything below is metadata-sized except the documents scan each
+  * view prunes. */
 object Acl {
 
   /** The reference's `map_roles`, lifted verbatim: the privileged idp
@@ -56,9 +59,8 @@ object Acl {
     else if (groups.nonEmpty) "Viewer"
     else "Public"
 
-  /** [[roleOf]] as a plan expression over a groups ARRAY column with
-    * the privileged group as a COLUMN (policy data riding a broadcast
-    * one-row lookup, never a literal). */
+  /** [[roleOf]] as a plan expression over a groups ARRAY column, with
+    * the privileged group compiled from the store. */
   private def roleExpr(groups: Column, admin: Column): Column =
     when(array_contains(groups, admin), lit("Admin"))
       .when(size(groups) > 0, lit("Viewer"))
@@ -72,15 +74,6 @@ object Acl {
   def tenantOfSource(tmod: Column): Column =
     pmod(regexp_extract(col("source"), "[0-9]+", 0).cast("long"), tmod)
 
-  /** One-row broadcast policy lookups (the [[Config.valueRow]]
-    * convention): the store value rides the plan as data, so a policy
-    * edit needs no recompilation and the plan is scan + broadcast at
-    * any data scale. */
-  private def policyRow(spark: SparkSession, key: String, default: String,
-      as: String, typ: String = "string"): DataFrame =
-    Config.valueRow(spark, key, default)
-      .select(col("value").cast(typ).as(as))
-
   /** `acl_audit` — the RESOLUTION table a governance review reads:
     * one row per STORE principal (`ACL_GROUPS_<name>` keys, values a
     * |-separated idp group list — the OIDC callback's `me["groups"]`
@@ -92,48 +85,52 @@ object Acl {
     * predicate — the oracle recomputes them from the same store.
     * Viewers scope to tenant (md5-of-principal mod ACL_TENANT_MOD:
     * deterministic, oracle-replayable); Admin sees everything; Public
-    * sees no rows. All policy inputs are broadcast one-row lookups;
-    * the one corpus scan feeds the 3-row tenant aggregate. */
+    * sees no rows.
+    *
+    * POLICY COMPILE (the [[aclRowFilter]]/[[aclMaskedView]]
+    * convention): the admin group, tenant modulus and policy version
+    * become plan literals from the [[Config.snapshot]], resolved by
+    * [[Config.resolvedValue]] — `valueRow`'s max-of-duplicates rule,
+    * the oracle's `max(CASE ...)` — and the principals are a local
+    * relation over the same snapshot. The corpus is scanned ONCE: the
+    * per-tenant counts fold into a single row (tenant → rows map plus
+    * the grand total) that is broadcast onto the principals. The
+    * total is `coalesce`d to 0 so an empty corpus gives Admin
+    * `visible_rows = 0`, as the oracle's `count(1)` does. */
   def aclAudit(spark: SparkSession, sfDir: String): DataFrame = {
-    val admin = broadcast(policyRow(spark, "ACL_ADMIN_GROUP", AdminGroup,
-      "admin_group"))
-    val tmod = broadcast(policyRow(spark, "ACL_TENANT_MOD", "3",
-      "tmod", "long"))
-    val pv = broadcast(policyRow(spark, "ACL_POLICY_VERSION", "0",
-      "policy_version", "long"))
-    val prin = Config.store(spark)
+    val admin = lit(Config.resolvedValue(spark, "ACL_ADMIN_GROUP", AdminGroup))
+    val tmod = lit(Config.resolvedValue(spark, "ACL_TENANT_MOD", "3"))
+      .cast("long")
+    val pv = lit(Config.resolvedValue(spark, "ACL_POLICY_VERSION", "0"))
+      .cast("long")
+    val prin = Config.snapshotFrame(spark)
       .filter(col("key").startsWith("ACL_GROUPS_"))
       .select(expr("substring(key, 12)").as("principal"),
         filter(split(coalesce(col("value"), lit("")), "\\|"),
           g => g =!= "").as("groups"))
-      .crossJoin(admin).crossJoin(tmod)
       .select(col("principal"),
-        roleExpr(col("groups"), col("admin_group")).as("role"),
+        roleExpr(col("groups"), admin).as("role"),
         size(col("groups")).as("n_groups"),
         pmod(conv(substring(md5(col("principal")), 1, 8), 16, 10)
-          .cast("long"), col("tmod")).as("tenant"),
-        col("tmod"))
-    val docs = Tables.documents(spark, sfDir)
-      .crossJoin(tmod)
-      .select(col("doc_id"), tenantOfSource(col("tmod")).as("tenant"))
-    val perTenant = docs.groupBy(col("tenant"))
-      .agg(count(lit(1)).as("tenant_rows"))
-    // grand total from the tmod-row tenant aggregate, not a second
-    // corpus scan
-    val total = perTenant.agg(sum(col("tenant_rows")).as("all_rows"))
-    prin.join(broadcast(perTenant), Seq("tenant"), "left")
-      .crossJoin(broadcast(total))
-      .crossJoin(pv)
+          .cast("long"), tmod).as("tenant"))
+    val counts = Tables.documents(spark, sfDir)
+      .groupBy(tenantOfSource(tmod).as("tenant"))
+      .agg(count(lit(1)).as("n"))
+      .agg(map_from_entries(collect_list(when(col("tenant").isNotNull,
+          struct(col("tenant"), col("n"))))).as("tenant_rows"),
+        coalesce(sum(col("n")), lit(0L)).as("all_rows"))
+    prin.crossJoin(broadcast(counts))
       .select(col("principal"), col("role"), col("n_groups"),
         when(col("role") === "Viewer", col("tenant")).as("tenant"),
         when(col("role") === "Admin", col("all_rows"))
-          .when(col("role") === "Viewer", coalesce(col("tenant_rows"), lit(0L)))
+          .when(col("role") === "Viewer", coalesce(
+            try_element_at(col("tenant_rows"), col("tenant")), lit(0L)))
           .otherwise(lit(0L)).as("visible_rows"),
         when(col("role") === "Admin", lit(5))
           .when(col("role") === "Viewer", lit(5))
           .otherwise(lit(0)).as("visible_cols"),
         (col("role") === "Admin").as("raw_text"),
-        col("policy_version"))
+        pv.as("policy_version"))
       .orderBy(col("principal"))
   }
   private def storeSql: String =
@@ -188,9 +185,9 @@ object Acl {
     * its md5 digest — joinable and countable, unreadable (the
     * dynamic-data-masking contract; dropping the column instead
     * silently breaks every downstream consumer). The mask list is a
-    * POLICY COMPILE: a bounded driver read of one store row (the
-    * `Variable.get` surface) decides the projection, because a
-    * projection is plan structure, not row data. Pure map-side after
+    * POLICY COMPILE: one store-snapshot lookup (the `Variable.get`
+    * surface) decides the projection, because a projection is plan
+    * structure, not row data. Pure map-side after
     * that: masking is per-row codegen'd work, zero shuffle beyond the
     * presentation sort, identical plan at 100 TB. Every masked row is
     * hash-compared against the oracle, which replays the same store
@@ -240,7 +237,7 @@ object Acl {
       .empty[(String, String, Long, Long), Seq[String]]
 
   def aclRowFilter(spark: SparkSession, sfDir: String): DataFrame = {
-    // policy compile: two bounded store-row reads (the Variable.get
+    // policy compile: two store-snapshot lookups (the Variable.get
     // surface) — the values parameterize a pushed literal predicate
     val tmod = Config.getLong(spark, "ACL_TENANT_MOD", 3L)
     val tenant = Config.getLong(spark, "ACL_VIEW_TENANT", 1L)

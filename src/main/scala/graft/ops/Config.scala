@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
 import graft.Util._
@@ -12,17 +13,21 @@ import graft.Util._
   * `f"BACKUP_{device}_HOST"` — dags/Backups.py:55; JSON-schema-validated
   * `Param`s — dags/DNS_Requests.py:28-32, read at :101).
   *
-  * The store is a tiny KV table (fixtures/graft_config.jsonl). Two ways
-  * to consume it, both cluster-safe because the table is metadata-sized:
+  * The store is a tiny KV table (fixtures/graft_config.jsonl). It is
+  * read ONCE per (application, store path, file fingerprint) into a
+  * driver-side [[snapshot]] — Spark's own JSON reader, so parsing is
+  * unchanged — and every consumer serves from that snapshot, so no
+  * config lookup launches a Spark job after the first:
   *
-  *  - **In-plan** ([[valueRow]]): broadcast cross-join of the one-row
-  *    lookup onto the data, so thresholds stay declarative — a re-run
-  *    with a different config row needs no recompilation and the plan
-  *    is scan + broadcast at any data scale.
+  *  - **In-plan** ([[valueRow]], [[snapshotFrame]]): one-row / store-
+  *    sized local relations joined onto the data, so thresholds stay
+  *    declarative and the plan is scan + broadcast at any data scale.
+  *    Editing the store file changes its fingerprint, so the next
+  *    construction re-reads it — a config edit, not a recompile.
   *  - **Driver-side** ([[getString]]/[[getLong]]/...): the Airflow
   *    `Variable.get(key, default)` shape for values that configure the
-  *    job itself (paths, retry counts) rather than the data plan. The
-  *    collect is a bounded single-row lookup on a metadata table.
+  *    job itself (paths, retry counts, policy compiles) rather than
+  *    the data plan.
   *
   * [[Param]] mirrors the validated-params surface: typed, defaulted,
   * range/enum-checked at job start, failing fast with the offending
@@ -37,33 +42,68 @@ object Config {
   /** The KV store as a DataFrame. Explicit schema: a malformed store
     * must fail loudly here, not downstream. */
   def store(spark: SparkSession, dir: String = Tables.FixturesDir): DataFrame =
-    spark.read.schema(configSchema).json(s"$dir/graft_config.jsonl")
+    spark.read.schema(configSchema).json(storePath(dir))
 
-  /** One-row frame `(value)` for `key`, falling back to `default` when
-    * absent — broadcast-join this onto data instead of collecting.
-    * The aggregate keeps it one row even if the key is missing.
-    * `max` (not `first`) so a duplicated key resolves deterministically
-    * with max as the tie-break, matching the DuckDB oracles'
-    * `max(CASE...)`. Note [[getString]] is stricter: it fail-fasts on
-    * CONFLICTING duplicates instead of picking the max — driver-side
-    * lookups want the loud failure, query-side frames want a value the
-    * oracle can reproduce. */
-  def valueRow(spark: SparkSession, key: String, default: String): DataFrame =
-    store(spark)
-      .filter(col("key") === key)
-      .agg(coalesce(max(col("value")), lit(default)).as("value"))
+  private def storePath(dir: String): String = s"$dir/graft_config.jsonl"
+
+  /** The store's `(key, value)` rows in file order, collected once per
+    * (application id, store path, `fileFingerprint`) — the key
+    * convention of the other fingerprint-keyed session memos, so a
+    * rewritten store is re-read by the next lookup and the snapshot
+    * dies with the application. */
+  def snapshot(spark: SparkSession,
+      dir: String = Tables.FixturesDir): Seq[(String, String)] =
+    snapshots(spark, Seq(storePath(dir)))(
+      store(spark, dir).collect().map(r => (r.getString(0), r.getString(1)))
+        .toSeq)
+  private val snapshots = new FingerprintMemo[Seq[(String, String)]]
+
+  /** The [[snapshot]] as a local relation `(key, value)`: joins and
+    * filters on it plan without a file scan. */
+  def snapshotFrame(spark: SparkSession,
+      dir: String = Tables.FixturesDir): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(
+      snapshot(spark, dir).map { case (k, v) => Row(k, v) }.asJava,
+      new StructType().add("key", StringType).add("value", StringType))
+  }
+
+  /** The value [[valueRow]] resolves for `key`: the max of its non-null
+    * values, compared as `UTF8String` the way Spark's `max` orders
+    * strings, or `default` when there is none — so a duplicated key
+    * resolves deterministically, matching the DuckDB oracles'
+    * `max(CASE...)`. Policy compiles that turn store values into plan
+    * literals use this rule, not [[getString]]'s fail-fast. */
+  def resolvedValue(spark: SparkSession, key: String, default: String,
+      dir: String = Tables.FixturesDir): String =
+    snapshot(spark, dir)
+      .collect { case (`key`, v) if v != null => UTF8String.fromString(v) }
+      .reduceOption((a, b) => if (a.binaryCompare(b) >= 0) a else b)
+      .map(_.toString).getOrElse(default)
+
+  /** One-row local relation `(value)` holding [[resolvedValue]] —
+    * broadcast-join this onto data instead of collecting. Note
+    * [[getString]] is stricter: it fail-fasts on CONFLICTING
+    * duplicates instead of picking the max — driver-side lookups want
+    * the loud failure, query-side frames want a value the oracle can
+    * reproduce. */
+  def valueRow(spark: SparkSession, key: String, default: String,
+      dir: String = Tables.FixturesDir): DataFrame =
+    spark.createDataFrame(
+      java.util.List.of(Row(resolvedValue(spark, key, default, dir))),
+      StructType(Seq(StructField("value", StringType, nullable = false))))
 
   // -- driver-side Variable.get surface -----------------------------------
 
   /** `Variable.get(key, default)`. A key present with a null value
     * (fixture line missing the field) falls back to the default too —
-    * matching [[valueRow]]'s coalesce, so the two surfaces agree. A key
+    * matching [[valueRow]]'s rule, so the two surfaces agree. A key
     * present more than once with CONFLICTING values fails loudly: the
     * three lookup surfaces (this, [[valueRow]], the oracle) could
     * otherwise silently disagree on which copy wins. */
-  def getString(spark: SparkSession, key: String, default: String): String = {
-    val vals = store(spark).filter(col("key") === key).select(col("value"))
-      .collect().map(r => Option(r.getString(0))).toSeq
+  def getString(spark: SparkSession, key: String, default: String,
+      dir: String = Tables.FixturesDir): String = {
+    val vals = snapshot(spark, dir).collect { case (`key`, v) => Option(v) }
     if (vals.flatten.distinct.size > 1)
       throw new IllegalStateException(
         s"config key '$key' has ${vals.size} conflicting entries: " +
@@ -218,7 +258,8 @@ object Config {
       .csv(s"${Tables.FixturesDir}/devices.csv")
       .withColumn("cfg_key", Config.dynamicKey("BACKUP_%s_HOST", col("device")))
     devices
-      .join(broadcast(store(spark)), devices("cfg_key") === col("key"), "left")
+      .join(broadcast(snapshotFrame(spark)), devices("cfg_key") === col("key"),
+        "left")
       .select(col("device"), col("cfg_key"),
         col("value").as("backup_host"),
         col("value").isNotNull.as("configured"))

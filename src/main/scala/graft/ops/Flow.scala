@@ -162,7 +162,7 @@ object Flow {
     // time; the key carries the content fingerprint so a rebuilt
     // artifact gets a fresh read (and the rebuild above evicts first).
     sharedReads.getOrElseUpdate(s"$slot:$contentKey",
-      spark.read.parquet(dir))
+      Tables.parquet(spark, dir))
   }
   private val sharedReads =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]

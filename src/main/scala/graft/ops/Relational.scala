@@ -707,7 +707,10 @@ object Relational {
       .agg(sum(col("n")).as("n"), sum(col("q")).as("q"))
       .select(lit(null).cast("string").as("l_returnflag"), col("l_linestatus"),
         col("n"), col("q"))
-    val total = base.agg(sum(col("n")).as("n"), sum(col("q")).as("q"))
+    // coalesce: over empty input native CUBE's grand total counts 0,
+    // where a sum over the empty detail grain is NULL
+    val total = base
+      .agg(coalesce(sum(col("n")), lit(0L)).as("n"), sum(col("q")).as("q"))
       .select(lit(null).cast("string").as("l_returnflag"),
         lit(null).cast("string").as("l_linestatus"), col("n"), col("q"))
     base.select(col("l_returnflag"), col("l_linestatus"), col("n"), col("q"))
@@ -1039,8 +1042,10 @@ object Relational {
       .select(coalesce(col("l_returnflag"), lit("<all>")).as("rflag"),
         lit("<all>").as("lstatus"), lit(0).as("g_rflag"),
         lit(1).as("g_lstatus"), col("n"), col("price_cents"))
+    // coalesce: the () set counts 0 over empty input (see aggCube)
     val total = base
-      .agg(sum(col("n")).as("n"), sum(col("price_cents")).as("price_cents"))
+      .agg(coalesce(sum(col("n")), lit(0L)).as("n"),
+        sum(col("price_cents")).as("price_cents"))
       .select(lit("<all>").as("rflag"), lit("<all>").as("lstatus"),
         lit(1).as("g_rflag"), lit(1).as("g_lstatus"),
         col("n"), col("price_cents"))

@@ -258,7 +258,7 @@ object Sinks {
       .filter(col("path").endsWith(".parquet"))
       .select(regexp_extract(col("path"), "day=([^/]+)", 1).as("day"))
       .groupBy(col("day")).agg(count(lit(1)).as("n_files"))
-    spark.read.parquet(out)
+    Tables.parquet(spark, out)
       .groupBy(col("day").cast("string").as("day"))
       .agg(count(lit(1)).as("n_rows"))
       .join(files, "day")
@@ -300,7 +300,7 @@ object Sinks {
     }
     val target = graft.Tables.events(spark, sfDir)
       .agg(min(to_date(col("ts")).cast("string")).as("target_day"))
-    spark.read.parquet(out)
+    Tables.parquet(spark, out)
       .withColumn("day", col("day").cast("string"))
       .join(broadcast(target), col("day") === col("target_day"))
       .groupBy(col("day"))

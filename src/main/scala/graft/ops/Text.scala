@@ -789,7 +789,7 @@ object Text {
         .groupBy(col("doc_id"), col("term"))
         .agg(count(lit(1)).as("tf"))
         .write.mode("overwrite").parquet(s"$dir/tf")
-      val tf = spark.read.parquet(s"$dir/tf")
+      val tf = Tables.parquet(spark, s"$dir/tf")
       tf.groupBy(col("term"))
         .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
         .write.mode("overwrite").parquet(s"$dir/term_stats")
@@ -803,7 +803,7 @@ object Text {
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), size(tokens).cast("long").as("n_tokens"))
         .write.mode("overwrite").parquet(s"$dir/doc_len")
-      spark.read.parquet(s"$dir/doc_stats")
+      Tables.parquet(spark, s"$dir/doc_stats")
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_total"))
         .write.mode("overwrite").parquet(s"$dir/totals")
     }
@@ -819,9 +819,8 @@ object Text {
 
   /** Memoized read of an immutable lexical-index table: a retrieval
     * query references 4–8 of these per construction, and each fresh
-    * `spark.read.parquet` pays driver-side listing + footer schema
-    * inference (~tens of ms — measured as the whole regression when
-    * the stats split first landed). The resolved DIR NAME embeds the
+    * read pays a driver-side listing plus a fingerprint walk for its
+    * schema memo ([[Tables.parquet]]). The resolved DIR NAME embeds the
     * source fingerprint tag, so the invalidation contract is byte-for
     * byte the old one: regenerated data → new tag → new key; stale
     * entries are simply never hit again. Keyed per session instance
@@ -830,7 +829,7 @@ object Text {
     scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
   private def lexRead(spark: SparkSession, path: String): DataFrame =
     lexReadCache.getOrElseUpdate(
-      (System.identityHashCode(spark), path), spark.read.parquet(path))
+      (System.identityHashCode(spark), path), Tables.parquet(spark, path))
 
   /** The tf postings of just the retrieval query terms — the pushed
     * `In(term, ...)` scan every leg starts from. */
@@ -1217,7 +1216,7 @@ object Text {
       sfDir: String): DataFrame = {
     import spark.implicits._
     val dir = Vector.persistIndexDir(spark, sfDir)
-    val cents = spark.read.parquet(s"$dir/centroids.parquet")
+    val cents = Tables.parquet(spark, s"$dir/centroids.parquet")
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
       .map { case (c, v) => (c, v.toArray) }
     val nprobe = math.min(3, cents.length)
@@ -1240,7 +1239,7 @@ object Text {
     }
     val probedCells = probePairs.map(_._2).distinct.sorted
     val probe = probePairs.toDF("qid", "cell")
-    spark.read.parquet(s"$dir/assign.parquet")
+    Tables.parquet(spark, s"$dir/assign.parquet")
       .filter(col("cell").isin(probedCells.map(Int.box): _*))
       .join(broadcast(probe), Seq("cell"))
       .select(col("qid"), col("vec_id"),
@@ -2128,7 +2127,7 @@ object Text {
         .foreach(graft.Util.deleteRecursively)
       docSurprisal(spark, sfDir).write.mode("overwrite").parquet(dir)
     }
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
   }
 
   def unigramLogprob(spark: SparkSession, sfDir: String): DataFrame =
@@ -3931,7 +3930,7 @@ object Text {
   def tFixEncoding(spark: SparkSession, sfDir: String): DataFrame = {
     ensureMojibake(spark)
     val fixed = graft.functions.EncodingExpr.fix_encoding(col("corrupted"))
-    spark.read.parquet(mojibakePath)
+    Tables.parquet(spark, mojibakePath)
       .select(col("doc_id"), col("kind"), fixed.as("fixed"),
         graft.functions.EncodingExpr.enc_repair_passes(col("corrupted"))
           .as("n_passes"),
@@ -4256,7 +4255,7 @@ object Text {
         .limit(0)
     val srcDigest = base
       .select(col("doc_id"), sha2(col("text"), 256).as("src_h"))
-    spark.read.parquet(out)
+    Tables.parquet(spark, out)
       .select(col("doc_id"), col("split").cast("string").as("split"),
         col("shard").cast("long").as("shard"), col("bin"), col("n_tokens"),
         sha2(col("text"), 256).as("w_h"),
@@ -4440,7 +4439,7 @@ object Text {
             plan.limit(0).select(col("split"), col("shard"), col("bin"),
               col("n_before").as("n_rb"), col("tok_before").as("tok_rb"),
               col("n_before").as("left_rb"))
-          else spark.read.parquet(over)
+          else Tables.parquet(spark, over)
             .select(col("split").cast("string").as("split"),
               col("shard").cast("long").as("shard"), col("bin"),
               col("n_tokens"), col("doc_id"))
@@ -4481,7 +4480,7 @@ object Text {
         val o = s"$root/$tag"
         if (!new java.io.File(s"$o/_SUCCESS").exists()) {
           graft.Util.vacuumSiblings(root, tag)
-          spark.read.parquet(baseOut)
+          Tables.parquet(spark, baseOut)
             .filter(cellPred(touched)) // partition-pruned: touched only
             .filter(!isRetracted)
             .write.partitionBy("split", "shard").mode("overwrite")
@@ -4525,7 +4524,7 @@ object Text {
           .withColumn("cleared_rb", lit(0L))
           .withColumn("still_rb", lit(0L))
       } else {
-        val rb = spark.read.parquet(over)
+        val rb = Tables.parquet(spark, over)
           .select(col("split").cast("string").as("split"),
             col("shard").cast("long").as("shard"), col("bin"),
             col("n_tokens"), col("doc_id"))
@@ -4598,7 +4597,7 @@ object Text {
         val o = s"$root/$tag"
         if (!new java.io.File(s"$o/_SUCCESS").exists()) {
           graft.Util.vacuumSiblings(root, tag)
-          spark.read.parquet(baseOut)
+          Tables.parquet(spark, baseOut)
             .filter(cellPred(touched)) // partition-pruned: touched only
             .filter(!isRetracted || isCleared)
             .write.partitionBy("split", "shard").mode("overwrite")
@@ -4732,7 +4731,7 @@ object Text {
       .count(f => f.isDirectory && f.getName.startsWith("gen") &&
         new java.io.File(f, "_SUCCESS").exists())
     def layout(dir: String): DataFrame =
-      spark.read.parquet(dir)
+      Tables.parquet(spark, dir)
         .select(col("doc_id"),
           col("split").cast("string").as("split"),
           col("shard").cast("long").as("shard"),
@@ -4753,7 +4752,7 @@ object Text {
       if (!anyParquetPart(new java.io.File(spec.logDir)))
         layout(base).select(col("split"), col("shard")).limit(0)
       else retractManifestOf(spark, sfDir)
-        .join(spark.read.parquet(spec.logDir).select(col("doc_id")),
+        .join(Tables.parquet(spark, spec.logDir).select(col("doc_id")),
           Seq("doc_id"))
         .select(col("split"), col("shard")).distinct()
     val overDf =
@@ -4863,7 +4862,7 @@ object Text {
       if (!anyParquetPart(new java.io.File(v2)))
         man.limit(0).select(col("doc_id"), col("split"), col("shard"),
           col("bin"), col("n_tokens"))
-      else spark.read.parquet(v2)
+      else Tables.parquet(spark, v2)
         .select(col("doc_id"),
           col("split").cast("string").as("split"),
           col("shard").cast("long").as("shard"),
@@ -5357,7 +5356,7 @@ object Text {
     * them as inferred dir keys). */
   private def chainCompactRead(spark: SparkSession,
       sfDir: String): DataFrame =
-    spark.read.parquet(chainCompactDir(spark, sfDir))
+    Tables.parquet(spark, chainCompactDir(spark, sfDir))
       .select(col("doc_id"),
         col("split").cast("string").as("split"),
         col("shard").cast("long").as("shard"),

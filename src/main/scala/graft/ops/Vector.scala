@@ -450,7 +450,7 @@ object Vector {
       sfDir: String): DataFrame = {
     import spark.implicits._
     val dir = persistIndexDir(spark, sfDir)
-    val cents = spark.read.parquet(s"$dir/centroids.parquet")
+    val cents = Tables.parquet(spark, s"$dir/centroids.parquet")
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
       .map { case (c, v) => (c, v.toArray) }
     // bounded: |QueryIds| rows collected, vectors included by contract
@@ -461,7 +461,7 @@ object Vector {
     val qrows = q.map { case (id, v, n) => (id, nearest(cents)(v), v, n) }
     val cells = qrows.map(_._2).distinct.sorted
     val qs = broadcast(qrows.toSeq.toDF("qid", "qcell", "qv", "na"))
-    val pairs = spark.read.parquet(s"$dir/assign.parquet")
+    val pairs = Tables.parquet(spark, s"$dir/assign.parquet")
       .filter(col("cell").isin(cells.map(Int.box): _*))
       .crossJoin(qs)
       .filter(col("vec_id") =!= col("qid") && col("cell") === col("qcell"))
@@ -567,7 +567,7 @@ object Vector {
     * (no loss, no duplication across the two writes). */
   def annIndexAppend(spark: SparkSession, sfDir: String): DataFrame =
     appendGates(spark, sfDir,
-      spark.read.parquet(s"${incrIndexDir(spark, sfDir)}/assign.parquet"))
+      Tables.parquet(spark, s"${incrIndexDir(spark, sfDir)}/assign.parquet"))
 
   /** Build-once accessor for the incremental index artifact
     * (persisted centroids + base⊕delta assignment): runs
@@ -621,7 +621,7 @@ object Vector {
         baseFiles.map(_._1).mkString("\n").getBytes("UTF-8"))
       // phase 2 — the append job: centroids come from the ARTIFACT,
       // only delta rows are scored, the write is an append
-      val persistedCs = spark.read.parquet(s"$dir/centroids.parquet")
+      val persistedCs = Tables.parquet(spark, s"$dir/centroids.parquet")
         .as[(Int, Seq[Double])].collect().sortBy(_._1)
         .map { case (c, v) => (c, v.toArray) }
       Tables.embeddings(spark, sfDir).filter(isIncrDelta)
@@ -659,8 +659,8 @@ object Vector {
   def annIndexVersionDiff(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val dir = incrIndexDir(spark, sfDir)
-    val a = spark.read.parquet(s"$dir/assign.parquet")
-    val persistedCs = spark.read.parquet(s"$dir/centroids.parquet")
+    val a = Tables.parquet(spark, s"$dir/assign.parquet")
+    val persistedCs = Tables.parquet(spark, s"$dir/centroids.parquet")
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
       .map { case (c, v) => (c, v.toArray) }
     val rescored = Tables.embeddings(spark, sfDir)
@@ -736,7 +736,7 @@ object Vector {
       sfDir: String): String = {
     val dir = incrIndexDir(spark, sfDir) + "_chain"
     if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      spark.read.parquet(s"${incrIndexDir(spark, sfDir)}/assign.parquet")
+      Tables.parquet(spark, s"${incrIndexDir(spark, sfDir)}/assign.parquet")
         .filter(annChainPred(4))
         .write.partitionBy("cell").mode("overwrite").parquet(dir)
     }
@@ -755,14 +755,14 @@ object Vector {
     * only. */
   def annVersionLog(spark: SparkSession, sfDir: String): DataFrame = {
     val assign =
-      spark.read.parquet(s"${incrIndexDir(spark, sfDir)}/assign.parquet")
+      Tables.parquet(spark, s"${incrIndexDir(spark, sfDir)}/assign.parquet")
     def agg(df: DataFrame, v: Int): DataFrame =
       df.agg(count(lit(1)).as("n_vecs"))
         .select(lit(v).as("version"), col("n_vecs"))
     val vols = (1 to 4).map(v => agg(assign.filter(annChainPred(v)), v))
       .reduce(_ unionByName _)
       .unionByName(
-        agg(spark.read.parquet(annChainCompactDir(spark, sfDir)), 5))
+        agg(Tables.parquet(spark, annChainCompactDir(spark, sfDir)), 5))
     val meta = Seq((1, null.asInstanceOf[Integer], "base"),
       (2, Integer.valueOf(1), "append"), (3, Integer.valueOf(2), "retract"),
       (4, Integer.valueOf(3), "reinstate"), (5, Integer.valueOf(4), "compact"))
@@ -829,10 +829,10 @@ object Vector {
     import scala.jdk.CollectionConverters._
     val v1Files = java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get(s"$dir/manifest_v1.txt")).asScala.toSeq
-    val v1 = spark.read.parquet(
+    val v1 = Tables.parquet(spark,
       v1Files.map(n => s"$dir/assign.parquet/$n"): _*)
-    val v2 = spark.read.parquet(s"$dir/assign.parquet")
-    val v5 = spark.read.parquet(annChainCompactDir(spark, sfDir))
+    val v2 = Tables.parquet(spark, s"$dir/assign.parquet")
+    val v5 = Tables.parquet(spark, annChainCompactDir(spark, sfDir))
       .select(col("vec_id"), col("cell"))
     val versioned = v1.withColumn("version", lit(1))
       .unionByName(v2.withColumn("version", lit(2)))
@@ -984,7 +984,7 @@ object Vector {
     val staged = graft.streaming.EventsStream.runIncremental(
       spark, assignedDelta, "annx", sfDir,
       org.apache.spark.sql.streaming.OutputMode.Update())
-    val assigned = spark.read.parquet(assignDir)
+    val assigned = Tables.parquet(spark, assignDir)
       .unionByName(staged.select(col("vec_id"), col("cell")))
     appendGates(spark, sfDir, assigned)
   }
@@ -1118,7 +1118,7 @@ object Vector {
       }.toDF("qid", "cell", "qv", "qn")
     val cells = probed.select(col("cell")).distinct()
       .as[Int].collect().sorted
-    val cand = spark.read.parquet(s"$dir/assign.parquet")
+    val cand = Tables.parquet(spark, s"$dir/assign.parquet")
       .filter(col("cell").isin(cells.map(Int.box): _*))
       .select(col("cell"), col("vec_id"),
         col("embedding").as("cv"), col("nrm2").as("cn"))
@@ -1141,7 +1141,7 @@ object Vector {
     import spark.implicits._
     import org.apache.spark.sql.types._
     val dir = persistIndexDir(spark, sfDir)
-    val cents = spark.read.parquet(s"$dir/centroids.parquet")
+    val cents = Tables.parquet(spark, s"$dir/centroids.parquet")
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
       .map { case (c, v) => (c, v.toArray) }
     val nprobe = math.min(4, cents.length)
@@ -1218,11 +1218,11 @@ object Vector {
       sfDir: String): DataFrame = {
     import spark.implicits._
     val dir = persistIndexDir(spark, sfDir)
-    val cents = spark.read.parquet(s"$dir/centroids.parquet")
+    val cents = Tables.parquet(spark, s"$dir/centroids.parquet")
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
       .map { case (c, v) => (c, v.toArray) }
     val nprobe = math.min(4, cents.length)
-    val feedDf = spark.read.parquet(serveFeedDir(spark, sfDir))
+    val feedDf = Tables.parquet(spark, serveFeedDir(spark, sfDir))
     val qs = broadcast(feedDf
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
         col("nrm2").as("na")))
@@ -1236,7 +1236,7 @@ object Vector {
     val probeMap = broadcast(probePairs.toDF("qid", "cell"))
     val wB = Window.partitionBy(col("qid"))
       .orderBy(col("sim_e4").desc, col("vec_id"))
-    spark.read.parquet(s"$dir/assign.parquet")
+    Tables.parquet(spark, s"$dir/assign.parquet")
       .filter(col("cell").isin(probedCells.map(Int.box): _*))
       .select(col("cell"), col("vec_id"),
         col("embedding").as("cv"), col("nrm2").as("cn"))
@@ -1341,7 +1341,7 @@ object Vector {
         bk.zipWithIndex.map { case (cent, c) => (m, c, cent.toSeq) }
       }.toSeq.toDF("m", "code", "centroid")
         .write.mode("overwrite").parquet(s"$dir/books.parquet")
-      spark.read.parquet(s"$dir/assign.parquet")
+      Tables.parquet(spark, s"$dir/assign.parquet")
         .select(col("cell"), col("vec_id"), col("embedding"))
         .as[(Int, Long, Array[Float])]
         .map { case (cell, id, v) => (cell, id, pqCodeBytes(books, v)) }
@@ -1387,7 +1387,7 @@ object Vector {
         val lut = pqLut(books, qv)
         nearestCells(cents, nprobe)(qv).map(c => (qid, c, lut))
       }.toDF("qid", "cell", "lut")
-    val adc = spark.read.parquet(s"$dir/codes.parquet")
+    val adc = Tables.parquet(spark, s"$dir/codes.parquet")
       .filter(col("cell").isin(cells.map(Int.box): _*))
       .join(broadcast(probed), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
@@ -1453,7 +1453,7 @@ object Vector {
     val qs = broadcast(batch
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
         col("nrm2").as("qn")).distinct())
-    val exact = spark.read.parquet(s"$dir/assign.parquet")
+    val exact = Tables.parquet(spark, s"$dir/assign.parquet")
       .filter(col("cell").isin(shortCells.map(Int.box): _*) &&
         col("vec_id").isin(ids.map(Long.box): _*))
       .select(col("vec_id"), col("embedding").as("cv"),
@@ -1495,7 +1495,7 @@ object Vector {
     import spark.implicits._
     import org.apache.spark.sql.types._
     val dir = persistPqDir(spark, sfDir)
-    val cents = spark.read.parquet(s"$dir/centroids.parquet")
+    val cents = Tables.parquet(spark, s"$dir/centroids.parquet")
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
       .map { case (c, v) => (c, v.toArray) }
     val books = pqTrain(spark, sfDir, iters = 3)
@@ -1525,12 +1525,12 @@ object Vector {
       sfDir: String): DataFrame = {
     import spark.implicits._
     val dir = persistPqDir(spark, sfDir)
-    val cents = spark.read.parquet(s"$dir/centroids.parquet")
+    val cents = Tables.parquet(spark, s"$dir/centroids.parquet")
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
       .map { case (c, v) => (c, v.toArray) }
     val books = pqTrain(spark, sfDir, iters = 3)
     servePqBatch(dir, cents, books, math.min(4, cents.length),
-      spark.read.parquet(serveFeedDir(spark, sfDir))
+      Tables.parquet(spark, serveFeedDir(spark, sfDir))
         .select(col("vec_id"), col("embedding"), col("nrm2")))
   }
 
@@ -1597,11 +1597,11 @@ object Vector {
     * (the corpus-retract r13 edge). */
   private[graft] def retractIndexGates(spark: SparkSession, sfDir: String,
       assignDir: String, overDir: String): DataFrame = {
-    val base = spark.read.parquet(assignDir)
+    val base = Tables.parquet(spark, assignDir)
     val over =
       if (!Text.anyParquetPart(new java.io.File(overDir)))
         base.limit(0)
-      else spark.read.parquet(overDir).select(col("vec_id"), col("cell"))
+      else Tables.parquet(spark, overDir).select(col("vec_id"), col("cell"))
     // live = untouched base cells ∪ overlay. Touched cells come from
     // the BASE's retract flags, NOT from the overlay's observed cells:
     // a cell whose vectors are ALL retracted writes no overlay
@@ -1663,9 +1663,9 @@ object Vector {
     if (!new java.io.File(s"$overDir/_SUCCESS").exists()) {
       // the scrub: touched cells from the assignment METADATA (bounded
       // by k), then a partition-pruned CoW rewrite of only those cells
-      val touched = spark.read.parquet(assignDir).filter(isVecRetracted)
+      val touched = Tables.parquet(spark, assignDir).filter(isVecRetracted)
         .select(col("cell")).distinct().collect().map(_.getInt(0))
-      spark.read.parquet(assignDir)
+      Tables.parquet(spark, assignDir)
         .filter(col("cell").isin(touched.map(Int.box): _*))
         .filter(!isVecRetracted)
         .write.partitionBy("cell").mode("overwrite").parquet(overDir)
@@ -1709,9 +1709,9 @@ object Vector {
     // overlay write must re-run, never be read as complete (review
     // r15 #2; the corpus twin's _SUCCESS rule)
     if (!new java.io.File(s"$overDir/_SUCCESS").exists()) {
-      val touched = spark.read.parquet(assignDir).filter(isVecCleared)
+      val touched = Tables.parquet(spark, assignDir).filter(isVecCleared)
         .select(col("cell")).distinct().collect().map(_.getInt(0))
-      spark.read.parquet(assignDir)
+      Tables.parquet(spark, assignDir)
         .filter(col("cell").isin(touched.map(Int.box): _*))
         .filter(!isVecRetracted || isVecCleared)
         .write.partitionBy("cell").mode("overwrite").parquet(overDir)
@@ -1727,10 +1727,10 @@ object Vector {
     * top-10. */
   private[graft] def reinstateIndexGates(spark: SparkSession, sfDir: String,
       assignDir: String, overDir: String): DataFrame = {
-    val base = spark.read.parquet(assignDir)
+    val base = Tables.parquet(spark, assignDir)
     val over =
       if (!Text.anyParquetPart(new java.io.File(overDir))) base.limit(0)
-      else spark.read.parquet(overDir).select(col("vec_id"), col("cell"))
+      else Tables.parquet(spark, overDir).select(col("vec_id"), col("cell"))
     val touchedCells = base.filter(isVecCleared)
       .select(col("cell")).distinct()
     val live = base.join(touchedCells, Seq("cell"), "left_anti")
@@ -1772,7 +1772,7 @@ object Vector {
       Tables.embeddings(spark, sfDir).filter(isVecCleared)
         .select(col("vec_id")))
     val over = graft.streaming.StreamCow.run(spark, spec,
-      spark.read.parquet(spec.baseDir).select(col("vec_id"), col("cell")))
+      Tables.parquet(spark, spec.baseDir).select(col("vec_id"), col("cell")))
     reinstateIndexGates(spark, sfDir, spec.baseDir, over)
   }
   /** Oracle: counts are vec_id arithmetic; the gates assert at their
@@ -1810,7 +1810,7 @@ object Vector {
       Tables.embeddings(spark, sfDir).filter(isVecRetracted)
         .select(col("vec_id")))
     val over = graft.streaming.StreamCow.run(spark, spec,
-      spark.read.parquet(spec.baseDir).select(col("vec_id"), col("cell")))
+      Tables.parquet(spark, spec.baseDir).select(col("vec_id"), col("cell")))
     retractIndexGates(spark, sfDir, spec.baseDir, over)
   }
 
@@ -1836,13 +1836,13 @@ object Vector {
       Tables.embeddings(spark, sfDir).filter(isVecRetracted)
         .select(col("vec_id")))
     val over = graft.streaming.StreamCow.run(spark, spec,
-      spark.read.parquet(spec.baseDir).select(col("vec_id"), col("cell")))
+      Tables.parquet(spark, spec.baseDir).select(col("vec_id"), col("cell")))
     val curBase = graft.streaming.StreamCow.currentBase(spec)
     val nGens = Option(new java.io.File(spec.root).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .count(f => f.isDirectory && f.getName.startsWith("gen") &&
         new java.io.File(f, "_SUCCESS").exists())
-    val base = spark.read.parquet(curBase)
+    val base = Tables.parquet(spark, curBase)
     // mask = the generation's own retract flags (the fold already
     // removed every earlier takedown, so curBase's flagged vecs ARE
     // the post-roll log); the overlay read is restricted to the same
@@ -1851,7 +1851,7 @@ object Vector {
     val touched = base.filter(isVecRetracted).select(col("cell")).distinct()
     val overDf =
       (if (!Text.anyParquetPart(new java.io.File(over))) base.limit(0)
-       else spark.read.parquet(over).select(base.columns.map(col): _*))
+       else Tables.parquet(spark, over).select(base.columns.map(col): _*))
         .join(touched, Seq("cell"), "left_semi")
     val live = base.join(touched, Seq("cell"), "left_anti")
       .unionByName(overDf)
@@ -1912,7 +1912,7 @@ object Vector {
     * vacuum_ok = superseded dirs gone, v2 committed. */
   def annIndexCompact(spark: SparkSession, sfDir: String): DataFrame = {
     val spec = streamAnnRetractSpec(spark, sfDir, "graft_ann_compact")
-    val locator = spark.read.parquet(spec.baseDir)
+    val locator = Tables.parquet(spark, spec.baseDir)
       .select(col("vec_id"), col("cell"))
     if (!new java.io.File(s"${spec.compactDir}/_SUCCESS").exists()) {
       graft.streaming.StreamCow.stageFeed(spec,
@@ -1927,12 +1927,12 @@ object Vector {
     val v2read =
       if (!Text.anyParquetPart(new java.io.File(spec.compactDir)))
         locator.limit(0)
-      else spark.read.parquet(spec.compactDir)
+      else Tables.parquet(spark, spec.compactDir)
         .select(col("vec_id"), col("cell").cast("int").as("cell"))
     val vacuumOk = !new java.io.File(spec.overlayDir).exists() &&
       !new java.io.File(spec.logDir).exists() &&
       new java.io.File(s"${spec.compactDir}/_SUCCESS").exists()
-    val audit = spark.read.parquet(spec.baseDir)
+    val audit = Tables.parquet(spark, spec.baseDir)
       .groupBy(col("cell")).agg(
         count(lit(1)).as("n_before"),
         sum(when(isVecRetracted, 1L).otherwise(0L)).as("n_ret"))

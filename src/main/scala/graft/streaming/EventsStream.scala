@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
 
+import graft.Tables
+
 /** Structured Streaming surface (SURVEY.md §3/§2.4 D4): the reference's
   * cron-scheduled pipelines map to repeated `Trigger.AvailableNow`
   * micro-batch runs over newly staged files — same DataFrame
@@ -156,7 +158,7 @@ object EventsStream {
     // (outSchema) would not carry — both branches and all modes must
     // return the same shape (r8 advice)
     if (fs.exists(outPath))
-      spark.read.parquet(outDir)
+      Tables.parquet(spark, outDir)
         .select(outSchema.fieldNames.map(col).toSeq: _*)
     else spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
@@ -1193,7 +1195,7 @@ object EventsStream {
         val prevDir = new java.io.File(s"$stateDir/v$lastVersion")
         val merged =
           if (lastVersion >= 0 && prevDir.exists())
-            latestWins(spark.read.parquet(prevDir.getPath)
+            latestWins(Tables.parquet(spark, prevDir.getPath)
               .unionByName(incoming))
           else incoming
         merged.write.mode("overwrite").parquet(s"$stateDir/v$id")

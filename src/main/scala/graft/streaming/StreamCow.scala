@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
+import graft.Tables
+
 /** THE stream-CoW micro-batch protocol — the one implementation of the
   * copy-on-write takedown stream both lifecycles run (the corpus twin
   * `stream_retract` over the packed-corpus layout, the index twin
@@ -169,7 +171,7 @@ object StreamCow {
         (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
         val ss = batch.sparkSession
         batch.write.mode("overwrite").parquet(s"$logDir/batch=$id")
-        val cum = ss.read.parquet(logDir).select(col(spec.keyCol))
+        val cum = Tables.parquet(ss, logDir).select(col(spec.keyCol))
         val cells = locator
           .join(batch.select(col(spec.keyCol)).distinct(), Seq(spec.keyCol))
           .select(spec.partCols.map(col): _*).distinct().collect().toSeq
@@ -184,8 +186,8 @@ object StreamCow {
         // non-empty one). r16 advice.
         def baseFrame(path: String): DataFrame =
           if (graft.Util.anyParquetPart(new java.io.File(path)))
-            ss.read.parquet(path)
-          else ss.read.parquet(spec.baseDir).filter(lit(false))
+            Tables.parquet(ss, path)
+          else Tables.parquet(ss, spec.baseDir).filter(lit(false))
         if (cells.nonEmpty) {
           val pred = cellsPred(spec.partCols, cells)
           val touchedBase = baseFrame(curBase).filter(pred)
@@ -258,7 +260,7 @@ object StreamCow {
         spec.autoCompactLogRows.foreach { thr =>
           if (spec.staticRetract.isEmpty &&
               graft.Util.anyParquetPart(new java.io.File(logDir)) &&
-              ss.read.parquet(logDir).count() > thr) {
+              Tables.parquet(ss, logDir).count() > thr) {
             val g = genOf(curBase, spec) + 1
             val to = new java.io.File(spec.genDir(g))
             foldInto(ss, spec, curBase, to)
@@ -378,8 +380,8 @@ object StreamCow {
           !graft.Util.anyParquetPart(new java.io.File(fromBase)))
         Set.empty[Seq[Any]]
       else {
-        val cum = spark.read.parquet(spec.logDir).select(col(spec.keyCol))
-        spark.read.parquet(fromBase)
+        val cum = Tables.parquet(spark, spec.logDir).select(col(spec.keyCol))
+        Tables.parquet(spark, fromBase)
           .select((spec.keyCol +: spec.partCols).map(col): _*)
           .join(cum, Seq(spec.keyCol))
           .select(spec.partCols.map(col): _*).distinct()

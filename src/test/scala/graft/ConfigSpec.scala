@@ -145,4 +145,46 @@ class ConfigSpec extends SparkSuite {
     assert(auditRows.find(_.getString(0) == "ev")
       .exists(_.getString(1) == "Public"))
   }
+
+  test("store snapshot: a rewritten store is seen by the next lookup; " +
+      "duplicates resolve to the max in valueRow and fail in getString") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cfgsnap")
+    val file = dir.resolve("graft_config.jsonl")
+    val d = dir.toString
+    def write(lines: String*): Unit =
+      java.nio.file.Files.writeString(file, lines.mkString("", "\n", "\n"))
+    def kv(k: String, v: String) = s"""{"key": "$k", "value": "$v"}"""
+    def row(key: String): String =
+      Config.valueRow(spark, key, "dflt", d).collect().head.getString(0)
+
+    write(kv("k", "6"))
+    assert(Config.getString(spark, "k", "dflt", d) == "6")
+    assert(row("k") == "6")
+    // new length
+    write(kv("k", "12"))
+    assert(Config.getString(spark, "k", "dflt", d) == "12")
+    assert(row("k") == "12")
+    // same length, only the mtime moves
+    val mtime = file.toFile.lastModified
+    write(kv("k", "34"))
+    assert(file.toFile.setLastModified(mtime + 5000))
+    assert(Config.getString(spark, "k", "dflt", d) == "34")
+    assert(row("k") == "34")
+
+    // duplicated key: valueRow takes the max as a string ("9" > "10"),
+    // getString refuses to pick; a null value falls back to the default
+    write(kv("k", "9"), kv("k", "10"), """{"key": "n"}""")
+    assert(row("k") == "9")
+    val e = intercept[IllegalStateException](Config.getString(spark, "k", "dflt", d))
+    assert(e.getMessage.contains("'k'") && e.getMessage.contains("conflicting"))
+    assert(row("n") == "dflt" && Config.getString(spark, "n", "dflt", d) == "dflt")
+
+    // the max orders UTF-8 bytes like Spark's max, not UTF-16 units:
+    // U+FF5E sorts above a surrogate pair in Java, below it in UTF-8
+    write(kv("u", "\uff5e"), kv("u", "\ud83d\ude00"))
+    val sparkMax = Config.store(spark, d).filter(col("key") === "u")
+      .agg(max(col("value"))).collect().head.getString(0)
+    assert(sparkMax == "\ud83d\ude00")
+    assert(row("u") == sparkMax)
+  }
 }

@@ -1,0 +1,68 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.FileSourceScanExec
+
+/** DataFrame construction of the read-only queries launches no
+  * Spark job: config lookups serve from the store snapshot, parquet
+  * reads carry a memoised schema instead of a footer-inference job,
+  * and `acl_audit` scans the corpus once. */
+class ConstructionJobsSpec extends SparkSuite {
+
+  /** `body`'s result and the number of Spark jobs started while it ran. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerDrain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("read-only queries construct their DataFrame without a Spark job") {
+    val queries = Seq("acl_audit", "acl_row_filter", "config_dynamic_key",
+      "v1_freshness", "t_unigram_logprob")
+    val jobs = queries.map { q =>
+      // the first call may build session artifacts and IN-lists
+      SparkEntry.queries(q)(spark, sf)
+      q -> jobsDuring(SparkEntry.queries(q)(spark, sf))._2
+    }
+    assert(jobs.forall(_._2 == 0),
+      "construction jobs per query: " + jobs.mkString(", "))
+    // the counter is live: an action in the window is seen
+    assert(jobsDuring(Tables.documents(spark, sf).count())._2 > 0)
+  }
+
+  test("a repeated Tables.parquet read plans without a Spark job") {
+    val path = s"$sf/documents.parquet"
+    val first = Tables.parquet(spark, path)
+    val (again, jobs) = jobsDuring(Tables.parquet(spark, path))
+    assert(jobs == 0, s"$jobs job(s) for a memoised-schema read")
+    assert(again.schema == first.schema)
+    assert(again.schema == spark.read.parquet(path).schema,
+      "the declared schema is Spark's own inferred schema")
+  }
+
+  test("acl_audit plans one documents scan and no config-store scan") {
+    val plan = Util.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+      graft.ops.Acl.aclAudit(spark, sf).queryExecution.executedPlan
+    }
+    val scans = plan.collectWithSubqueries { case s: FileSourceScanExec =>
+      s.relation.location.rootPaths.map(_.toString)
+    }.flatten
+    assert(scans.count(_.endsWith("documents.parquet")) == 1,
+      s"exactly one corpus scan expected: $scans\n$plan")
+    assert(!scans.exists(_.contains("graft_config")),
+      s"policy comes from the store snapshot, not a scan: $scans")
+  }
+}

@@ -48,4 +48,58 @@ class TablesSpec extends SparkSuite {
       .select(col("us")).collect().map(_.getLong(0)).toSet
     assert(got == Set(1706659200000000L))
   }
+
+  test("Tables.parquet re-infers the schema of a rewritten file") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_pqmemo")
+    def partOf(df: org.apache.spark.sql.DataFrame, name: String)
+        : java.nio.file.Path = {
+      val out = tmp.resolve(name).toString
+      df.coalesce(1).write.parquet(out)
+      new java.io.File(out).listFiles().find(_.getName.endsWith(".parquet"))
+        .get.toPath
+    }
+    val a = partOf(Seq((1L, "a")).toDF("id", "s"), "a")
+    val b = partOf(Seq((2L, 2.5, "b")).toDF("id", "x", "s"), "b")
+    val path = tmp.resolve("t.parquet")
+    java.nio.file.Files.copy(a, path)
+    assert(Tables.parquet(spark, path.toString).columns.toSeq == Seq("id", "s"))
+    // same path, new length and mtime: the memo must not serve the old
+    // schema
+    java.nio.file.Files.copy(b, path,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val df = Tables.parquet(spark, path.toString)
+    assert(df.columns.toSeq == Seq("id", "x", "s"))
+    assert(df.collect().toSeq == Seq(org.apache.spark.sql.Row(2L, 2.5, "b")))
+  }
+
+  test("src/main has no schema-less .read.parquet( outside Tables.parquet") {
+    // a schema-less read launches a footer-inference job at every
+    // DataFrame construction; Tables.parquet memoises the schema. The
+    // probe mains are diagnostics, not queries, and are exempt.
+    import scala.jdk.CollectionConverters._
+    val schemaLess = """\.read\s*\.parquet\(""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala") &&
+        !p.getFileName.toString.endsWith("Probe.scala"))
+    assert(files.exists(_.getFileName.toString == "Tables.scala"))
+    val hits = files.flatMap { p =>
+      val src = java.nio.file.Files.readString(p)
+      val lines = src.split("\n", -1)
+      def lineOf(offset: Int): Int = src.substring(0, offset).count(_ == '\n')
+      // the helper's own inference read is the one allowed site
+      val helper =
+        if (p.getFileName.toString != "Tables.scala") Range(0, 0)
+        else {
+          val from = lines.indexWhere(_.contains("def parquet("))
+          Range(from, lines.indexWhere(_.contains("parquetSchemas ="), from))
+        }
+      schemaLess.findAllMatchIn(src).map(m => lineOf(m.start))
+        .filterNot(helper.contains)
+        .map(l => s"$p:${l + 1}: ${lines(l).trim}")
+    }
+    assert(hits.isEmpty, "schema-less parquet reads — use Tables.parquet:\n" +
+      hits.mkString("\n"))
+  }
 }
