@@ -60,7 +60,8 @@ object ServeScanProbe {
 
     val n = graft.ops.Vector.corpusN(spark, sfDir)
     val t0 = System.nanoTime()
-    val dir = graft.ops.Vector.persistPqDir(spark, sfDir) // builds IVF+PQ
+    val dir = graft.ops.Vector.persistIndexDir(spark, sfDir)
+    val pqDir = graft.ops.Vector.persistPqDir(spark, sfDir)
     val buildSec = (System.nanoTime() - t0) / 1e9
     val cents = spark.read.parquet(s"$dir/centroids.parquet")
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
@@ -92,11 +93,12 @@ object ServeScanProbe {
     // frame's own execution, then the batch kernel's re-rank fetch
     val t2 = System.nanoTime()
     val pqCells = graft.ops.Vector.servePqCells(cents, nprobe, batch)
-    val shortFrame = graft.ops.Vector.servePqShortlist(dir, cents, books,
+    val shortFrame = graft.ops.Vector.servePqShortlist(pqDir, cents, books,
       nprobe, pqCells, batch)
     val shortRows = shortFrame.queryExecution.toRdd.count()
     val pqCodesScanned = rowsRead(shortFrame, "codes.parquet")
-    val pq = graft.ops.Vector.servePqBatch(dir, cents, books, nprobe, batch)
+    val pq = graft.ops.Vector.servePqBatch(dir, pqDir, cents, books, nprobe,
+      batch)
     val pqRows = pq.queryExecution.toRdd.count()
     val pqSec = (System.nanoTime() - t2) / 1e9
     val pqAssignScanned = rowsRead(pq, "assign.parquet")
@@ -116,7 +118,7 @@ object ServeScanProbe {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
       else Seq(f)
-    val codeBytes = walk(new java.io.File(s"$dir/codes.parquet"))
+    val codeBytes = walk(new java.io.File(s"$pqDir/codes.parquet"))
       .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
 
     System.err.println(

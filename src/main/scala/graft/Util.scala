@@ -54,11 +54,14 @@ object Util {
   }
 
   /** Session-scoped staging root under java.io.tmpdir, deleted
-    * recursively on JVM exit. Every operator that persists artifacts
-    * across calls within one session (streaming checkpoints, ANN index,
-    * the k7/k8/k9 sink gates) allocates under this root, so sessions
-    * never accumulate orphaned per-applicationId directories across
-    * runs (r7 advice). One shutdown hook per distinct root. */
+    * recursively on JVM exit. Every operator that persists state
+    * across calls within one session (streaming checkpoints, the
+    * k8/k9 sink gates, StreamCow staging) allocates under this root,
+    * so sessions never accumulate orphaned per-applicationId
+    * directories across runs (r7 advice). One shutdown hook per
+    * distinct root. A build-once artifact DERIVED FROM A DATASET does
+    * not call this directly: it goes through [[graft.Artifacts]],
+    * which keys, commits and vacuums it. */
   def sessionTmpDir(spark: SparkSession, prefix: String): String = {
     val root = s"${System.getProperty("java.io.tmpdir")}/${prefix}_" +
       spark.sparkContext.applicationId
@@ -109,11 +112,10 @@ object Util {
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 
   /** Drop every sibling directory under `root` except `keep` — the
-    * stale-fingerprint vacuum every fingerprint-keyed session sink
-    * runs before (re)building, so in-place dataset regenerations
-    * don't multiply full-table copies on disk. One shared copy
-    * (k7_pruned_read, corpus_build_run) so a future hardening lands
-    * everywhere. */
+    * stale-fingerprint vacuum of the streaming staging roots
+    * (StreamCow feeds, the dedup-retract feed), so in-place dataset
+    * regenerations don't multiply copies on disk. Dataset artifacts
+    * vacuum through [[graft.Artifacts]]. */
   private[graft] def vacuumSiblings(root: String, keep: String): Unit =
     Option(new java.io.File(root).listFiles())
       .getOrElse(Array.empty[java.io.File])

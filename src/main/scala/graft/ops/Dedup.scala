@@ -151,14 +151,14 @@ object Dedup {
     * volume (never corpus-sized), and the corpus pipelines, the
     * drop-lineage audit and the clustering tail each consumed it by
     * re-running the bucket self-join + exact verification per
-    * invocation. File-backed (the sharedTableOf rationale: several
-    * consumer actions, codegen-fused read-back). The registered
+    * invocation. A [[graft.Artifacts]] table (several consumer
+    * actions, codegen-fused read-back). The registered
     * `dedup_minhash_lsh` query stays un-memoized so its bench row
     * keeps measuring the real LSH sweep — the ann_brute_topk
     * convention. */
   private[ops] def minhashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    Flow.sharedTableOf(spark, s"minhash_pairs:$sfDir",
-        graft.Util.fileFingerprint(s"$sfDir/documents.parquet")) {
+    graft.Artifacts.table(spark, "graft_shared_table/minhash_pairs", sfDir,
+        Seq(s"$sfDir/documents.parquet")) {
       minhashPairsCompute(spark, sfDir)
     }
   /** The near-dup acceptance threshold (3-word-shingle Jaccard) —

@@ -79,15 +79,12 @@ object Flow {
 
   /** D3 — persist-once registry: one shared upstream scan feeds many
     * downstream branches without re-reading (dags/Backups.py:142-153).
-    * Catalyst does not cache across actions; this does. */
+    * Catalyst does not cache across actions; this does. Slots are keyed
+    * per session so a cached frame from a stopped session is never
+    * handed to a new one. File-backed dataset artifacts go through
+    * [[graft.Artifacts]] instead. */
   private val shared = TrieMap.empty[String, (String, DataFrame)]
   private val sharedLocks = TrieMap.empty[String, Object]
-  /** Keyed per session so a cached frame from a stopped session is
-    * never handed to a new one. Callers whose upstream is a DATASET
-    * (not a fixed fixture) must use [[sharedScanOf]] so the key
-    * carries a content fingerprint. */
-  def sharedScan(spark: SparkSession, key: String)(
-      mk: => DataFrame): DataFrame = sharedScanOf(spark, key, "")(mk)
 
   /** Content-aware persist-once: `prefix` names the derived frame,
     * `contentKey` fingerprints its input files
@@ -128,50 +125,6 @@ object Flow {
           df
       }
     }
-  }
-  /** The FILE-backed registry: materialize `mk` to a session-scoped
-    * parquet keyed by (prefix, contentKey) and read it back as a
-    * plain scan. Prefer this over [[sharedScanOf]] when ONE consumer
-    * action references the artifact several times (aggregate +
-    * broadcast subtrees): an InMemoryTableScan read pays deserialized
-    * cache batches outside whole-stage codegen PER subtree job —
-    * measured 4× slower than the parquet read-back on
-    * t_curriculum_resume and 2× on t_bm25_topk (r15) — while a file
-    * scan is codegen-fused, survives spark.catalog.clearCache()
-    * without the self-heal re-persist, and is immune to the
-    * cache-manager plan-substitution hazard by construction (there is
-    * no plan to substitute). Build is synchronized per slot and
-    * committed via _SUCCESS; stale contentKeys vacuum on rotation. */
-  def sharedTableOf(spark: SparkSession, prefix: String, contentKey: String)(
-      mk: => DataFrame): DataFrame = {
-    val slot = s"${System.identityHashCode(spark)}:table:$prefix"
-    val lock = sharedLocks.getOrElseUpdate(slot, new Object)
-    val root = graft.Util.sessionTmpDir(spark, "graft_shared_table") + "/" +
-      java.lang.Long.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash(prefix) & 0xffffffffL)
-    val dir = s"$root/$contentKey"
-    lock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        graft.Util.vacuumSiblings(root, contentKey)
-        sharedReads.remove(s"$slot:$contentKey")
-        mk.write.mode("overwrite").parquet(dir)
-      }
-    }
-    // memoized lazy read (r18): re-reading the immutable artifact per
-    // call pays driver-side listing + footer schema inference each
-    // time; the key carries the content fingerprint so a rebuilt
-    // artifact gets a fresh read (and the rebuild above evicts first).
-    sharedReads.getOrElseUpdate(s"$slot:$contentKey",
-      Tables.parquet(spark, dir))
-  }
-  private val sharedReads =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  def clearShared(): Unit = {
-    shared.values.foreach { case (_, df) =>
-      try df.unpersist() catch { case _: IllegalStateException => () }
-    }
-    shared.clear()
   }
 
   // D3 — two branches over one persisted upstream.

@@ -1156,13 +1156,7 @@ object Relational {
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
         .filter(f => f.getName.contains(s"_bkt_${dsKey}_"))
-        .foreach { f =>
-          def rm(x: java.io.File): Unit = {
-            Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-            x.delete(); ()
-          }
-          rm(f)
-        }
+        .foreach(graft.Util.deleteRecursively)
       Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"),
           revenueCents("l_extendedprice", "l_discount").cast("long").as("rev_cents"))
@@ -1649,8 +1643,8 @@ object Relational {
     * value-deterministic. Self-loops retained here: pagerank keeps
     * them, triangles filters them — callers apply their own policy. */
   private[graft] def graphRawEdges(spark: SparkSession, sfDir: String): DataFrame =
-    Flow.sharedTableOf(spark, s"graph_edges:$sfDir",
-        graft.Util.fileFingerprint(s"$sfDir/lineitem.parquet")) {
+    graft.Artifacts.table(spark, "graft_shared_table/graph_edges", sfDir,
+        Seq(s"$sfDir/lineitem.parquet")) {
       val w = Window.partitionBy(col("l_orderkey"))
         .orderBy(col("l_linenumber"), col("src"))
       Tables.lineitem(spark, sfDir)

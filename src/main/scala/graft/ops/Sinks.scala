@@ -144,8 +144,7 @@ object Sinks {
   // breaks the oracle hash.
   def k4RetentionRun(spark: SparkSession, sfDir: String): DataFrame = {
     val stageDir = s"${graft.Util.sessionTmpDir(spark, "graft_retain")}/" +
-      java.lang.Integer.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash(sfDir))
+      graft.Util.md5Hex(sfDir)
     val serConf = graft.Util.serHadoopConf(spark)
     val sd = stageDir
     val sdPath = new org.apache.hadoop.fs.Path(sd)
@@ -280,27 +279,16 @@ object Sinks {
   // oracle's rows for that day; the target day is the corpus minimum,
   // computed as a broadcast scalar (no driver collect).
   def k7PrunedRead(spark: SparkSession, sfDir: String): DataFrame = {
-    // own dataset-keyed sink under its OWN session root, written once
-    // per (session, dataset CONTENT). Sharing k7's dir would be doubly
-    // wrong: k7 stages whichever dataset ran last, and k7's
-    // mode(overwrite) write wipes the root — nesting under it would
-    // delete this copy on every k7 run and pollute k7's partition
-    // discovery in between. The key is a file FINGERPRINT, not the
-    // path: a regenerated events table must rebuild the sink, never
-    // serve the stale one (the Vector.dataKey artifact rule).
-    val root = graft.Util.sessionTmpDir(spark, "graft_part_pruned")
-    val tag = graft.Util.fileFingerprint(s"$sfDir/events.parquet")
-    val out = s"$root/$tag"
-    if (!new java.io.File(s"$out/_SUCCESS").exists()) {
-      // a rotated fingerprint (in-place regeneration) supersedes every
-      // sibling copy — drop them so repeated regenerations don't
-      // multiply full-table sinks on disk
-      graft.Util.vacuumSiblings(root, tag)
-      writeDayPartitioned(spark, sfDir, out, salt = 4)
-    }
+    // own dataset artifact, written once per (session, dataset
+    // content). Sharing k7's dir would be doubly wrong: k7 stages
+    // whichever dataset ran last, and k7's mode(overwrite) write wipes
+    // the root — nesting under it would delete this copy on every k7
+    // run and pollute k7's partition discovery in between.
+    val out = graft.Artifacts.dir(spark, "graft_part_pruned", sfDir,
+      Seq(s"$sfDir/events.parquet"))(writeDayPartitioned(spark, sfDir, _, 4))
     val target = graft.Tables.events(spark, sfDir)
       .agg(min(to_date(col("ts")).cast("string")).as("target_day"))
-    Tables.parquet(spark, out)
+    graft.Artifacts.read(spark, out)
       .withColumn("day", col("day").cast("string"))
       .join(broadcast(target), col("day") === col("target_day"))
       .groupBy(col("day"))

@@ -727,7 +727,7 @@ object Text {
     // read pays deserialized cache batches outside whole-stage
     // codegen — the parquet read-back is the faster AND
     // substitution-safe form.
-    lexRead(spark, s"${lexIndexDir(spark, sfDir)}/tf")
+    graft.Artifacts.read(spark, s"${lexIndexDir(spark, sfDir)}/tf")
 
   /** Per-TERM statistics of the lexical index — (term, df, cf):
     * document frequency (`count(1)` over the distinct (doc, term) tf
@@ -737,20 +737,20 @@ object Text {
     * alternative re-aggregated the full billion-term vocabulary per
     * invocation to use |query-terms| of the values. */
   private[graft] def termStats(spark: SparkSession, sfDir: String): DataFrame =
-    lexRead(spark, s"${lexIndexDir(spark, sfDir)}/term_stats")
+    graft.Artifacts.read(spark, s"${lexIndexDir(spark, sfDir)}/term_stats")
 
   /** Per-DOC statistics of the lexical index — (doc_id, dl): document
     * length in token occurrences (`sum(tf)` per doc — Lucene's norms
     * file). Corpus-sized, so consumers JOIN it (never broadcast). */
   private[graft] def docStats(spark: SparkSession, sfDir: String): DataFrame =
-    lexRead(spark, s"${lexIndexDir(spark, sfDir)}/doc_stats")
+    graft.Artifacts.read(spark, s"${lexIndexDir(spark, sfDir)}/doc_stats")
 
   /** Collection totals of the lexical index — ONE row
     * (n_docs, dl_total): doc count and total token occurrences
     * (query-likelihood's c_total ≡ dl_total — both are `sum(tf)` over
     * the whole tf table). Broadcast-sized by construction. */
   private[graft] def lexTotals(spark: SparkSession, sfDir: String): DataFrame =
-    lexRead(spark, s"${lexIndexDir(spark, sfDir)}/totals")
+    graft.Artifacts.read(spark, s"${lexIndexDir(spark, sfDir)}/totals")
 
   /** Build-once root of the lexical index artifact: `tf/` plus the
     * statistics tables every production inverted index persists next
@@ -761,28 +761,14 @@ object Text {
     * rows, same integers, one build (r18 optimization: the
     * full-vocabulary df/cf aggregation and the full-corpus dl/totals
     * passes leave the per-query path; a leg now scans its query
-    * terms' postings instead of the vocabulary). `totals/` is written
-    * LAST and is the existence guard, so a build torn between writes
-    * rebuilds instead of serving a partial artifact. */
-  private def lexIndexDir(spark: SparkSession, sfDir: String): String = {
-    val root = graft.Util.sessionTmpDir(spark, "graft_retrieval_tf")
-    // tag = <dataset-path hash>_<content fingerprint>: the vacuum must
-    // scope to THIS dataset's stale generations only — with the BPE
-    // trainer now reading the index, one session legitimately builds
-    // indexes for several corpora (the multi-corpus BpeSpec), and the
-    // old vacuum-everything-but-me deleted another dataset's LIVE
-    // artifact out from under its memoized readers (FAILED_READ_FILE).
-    val pathTag = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sfDir))
-    val tag = pathTag + "_" +
-      graft.Util.fileFingerprint(s"$sfDir/documents.parquet")
-    val dir = s"$root/$tag"
-    if (!new java.io.File(s"$dir/totals/_SUCCESS").exists()) {
-      Option(new java.io.File(root).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith(pathTag + "_") &&
-          f.getName != tag)
-        .foreach(graft.Util.deleteRecursively)
+    * terms' postings instead of the vocabulary). Committed as one
+    * [[graft.Artifacts]] directory, so a build torn between its writes
+    * rebuilds instead of serving a partial artifact, and a session
+    * indexing several corpora (the multi-corpus BpeSpec) keeps each
+    * one's index live. */
+  private def lexIndexDir(spark: SparkSession, sfDir: String): String =
+    graft.Artifacts.dir(spark, "graft_retrieval_tf", sfDir,
+        Seq(s"$sfDir/documents.parquet")) { dir =>
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), explode(tokens).as("term"))
         .filter(col("term") =!= "")
@@ -807,29 +793,13 @@ object Text {
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_total"))
         .write.mode("overwrite").parquet(s"$dir/totals")
     }
-    dir
-  }
 
   /** Raw whitespace-token length per doc — (doc_id, n_tokens), the
     * context-pack budget unit persisted with the index (r18: the pack
     * stage joined a fresh corpus scan+tokenize to fetch ≤ |Q|×10 doc
     * lengths — at 100 TB a full corpus pass per prompt-assembly run). */
   private[graft] def docLen(spark: SparkSession, sfDir: String): DataFrame =
-    lexRead(spark, s"${lexIndexDir(spark, sfDir)}/doc_len")
-
-  /** Memoized read of an immutable lexical-index table: a retrieval
-    * query references 4–8 of these per construction, and each fresh
-    * read pays a driver-side listing plus a fingerprint walk for its
-    * schema memo ([[Tables.parquet]]). The resolved DIR NAME embeds the
-    * source fingerprint tag, so the invalidation contract is byte-for
-    * byte the old one: regenerated data → new tag → new key; stale
-    * entries are simply never hit again. Keyed per session instance
-    * (the sharedTableOf slot convention). */
-  private val lexReadCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-  private def lexRead(spark: SparkSession, path: String): DataFrame =
-    lexReadCache.getOrElseUpdate(
-      (System.identityHashCode(spark), path), Tables.parquet(spark, path))
+    graft.Artifacts.read(spark, s"${lexIndexDir(spark, sfDir)}/doc_len")
 
   /** The tf postings of just the retrieval query terms — the pushed
     * `In(term, ...)` scan every leg starts from. */
@@ -1864,8 +1834,8 @@ object Text {
     * un-memoized (the ann_brute_topk convention: its bench row
     * measures the real probe). */
   private def contamIds(spark: SparkSession, sfDir: String): DataFrame =
-    Flow.sharedTableOf(spark, s"contam_ids:$sfDir",
-        graft.Util.fileFingerprint(s"$sfDir/documents.parquet")) {
+    graft.Artifacts.table(spark, "graft_shared_table/contam_ids", sfDir,
+        Seq(s"$sfDir/documents.parquet")) {
       decontam(spark, sfDir).filter(col("contaminated"))
         .select(col("doc_id"))
     }
@@ -2109,26 +2079,9 @@ object Text {
     * cache-substitution hazard entirely (no plan to substitute).
     * Metadata-sized: one row per doc, three integer columns. */
   private def docSurprisalArtifact(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val root = graft.Util.sessionTmpDir(spark, "graft_doc_surprisal")
-    // dataset-path-scoped vacuum (the lexIndexDir r18 fix): a session
-    // training LMs for several corpora must not delete another
-    // dataset's live artifact when it builds its own
-    val pathTag = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sfDir))
-    val tag = pathTag + "_" +
-      graft.Util.fileFingerprint(s"$sfDir/documents.parquet")
-    val dir = s"$root/$tag"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      Option(new java.io.File(root).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith(pathTag + "_") &&
-          f.getName != tag)
-        .foreach(graft.Util.deleteRecursively)
-      docSurprisal(spark, sfDir).write.mode("overwrite").parquet(dir)
-    }
-    Tables.parquet(spark, dir)
-  }
+      sfDir: String): DataFrame =
+    graft.Artifacts.table(spark, "graft_doc_surprisal", sfDir,
+      Seq(s"$sfDir/documents.parquet"))(docSurprisal(spark, sfDir))
 
   def unigramLogprob(spark: SparkSession, sfDir: String): DataFrame =
     docSurprisalArtifact(spark, sfDir)
@@ -4223,17 +4176,12 @@ object Text {
   /** Ensure the packed-corpus layout exists for this dataset (write
     * once per session/dataset, fingerprint-keyed); returns its root.
     * Shared by [[corpusBuildRun]] and [[corpusRetractRun]]. */
-  private def corpusRunLayout(spark: SparkSession, sfDir: String): String = {
-    val root = graft.Util.sessionTmpDir(spark, "graft_corpus_run")
-    val tag = graft.Util.fileFingerprint(s"$sfDir/documents.parquet")
-    val out = s"$root/$tag"
-    if (!new java.io.File(s"$out/_SUCCESS").exists()) {
-      graft.Util.vacuumSiblings(root, tag)
+  private def corpusRunLayout(spark: SparkSession, sfDir: String): String =
+    graft.Artifacts.dir(spark, "graft_corpus_run", sfDir,
+        Seq(s"$sfDir/documents.parquet")) { out =>
       corpusWriteFrame(spark, sfDir)
         .write.partitionBy("split", "shard").mode("overwrite").parquet(out)
     }
-    out
-  }
 
   /** Does a committed parquet layout actually contain part files?
     * (One shared implementation — [[graft.Util.anyParquetPart]].) */
@@ -4387,8 +4335,8 @@ object Text {
     * this artifact's cache entry. */
   private def retractManifestOf(spark: SparkSession,
       sfDir: String): DataFrame =
-    Flow.sharedTableOf(spark, s"retract_manifest:$sfDir",
-        graft.Util.fileFingerprint(s"$sfDir/documents.parquet")) {
+    graft.Artifacts.table(spark, "graft_shared_table/retract_manifest", sfDir,
+        Seq(s"$sfDir/documents.parquet")) {
       corpusBuildPipeline(spark, sfDir)
         .withColumn("retracted", isRetracted)
     }
@@ -4473,21 +4421,15 @@ object Text {
     val plan = retractPlanOf(spark, sfDir)
     val touched = touchedCellsOf(plan)
     val over =
-      if (touched.isEmpty) "" else {
-        val baseOut = corpusRunLayout(spark, sfDir)
-        val root = graft.Util.sessionTmpDir(spark, "graft_corpus_retract")
-        val tag = graft.Util.fileFingerprint(s"$sfDir/documents.parquet")
-        val o = s"$root/$tag"
-        if (!new java.io.File(s"$o/_SUCCESS").exists()) {
-          graft.Util.vacuumSiblings(root, tag)
-          Tables.parquet(spark, baseOut)
+      if (touched.isEmpty) "" else
+        graft.Artifacts.dir(spark, "graft_corpus_retract", sfDir,
+            Seq(s"$sfDir/documents.parquet")) { o =>
+          Tables.parquet(spark, corpusRunLayout(spark, sfDir))
             .filter(cellPred(touched)) // partition-pruned: touched only
             .filter(!isRetracted)
             .write.partitionBy("split", "shard").mode("overwrite")
             .parquet(o)
         }
-        o
-      }
     retractAudit(spark, plan, touched, over)
   }
 
@@ -4590,21 +4532,15 @@ object Text {
     val plan = reinstatePlanOf(spark, sfDir)
     val touched = touchedCellsOf(plan, "n_cleared")
     val over =
-      if (touched.isEmpty) "" else {
-        val baseOut = corpusRunLayout(spark, sfDir)
-        val root = graft.Util.sessionTmpDir(spark, "graft_corpus_reinstate")
-        val tag = graft.Util.fileFingerprint(s"$sfDir/documents.parquet")
-        val o = s"$root/$tag"
-        if (!new java.io.File(s"$o/_SUCCESS").exists()) {
-          graft.Util.vacuumSiblings(root, tag)
-          Tables.parquet(spark, baseOut)
+      if (touched.isEmpty) "" else
+        graft.Artifacts.dir(spark, "graft_corpus_reinstate", sfDir,
+            Seq(s"$sfDir/documents.parquet")) { o =>
+          Tables.parquet(spark, corpusRunLayout(spark, sfDir))
             .filter(cellPred(touched)) // partition-pruned: touched only
             .filter(!isRetracted || isCleared)
             .write.partitionBy("split", "shard").mode("overwrite")
             .parquet(o)
         }
-        o
-      }
     reinstateAudit(spark, plan, touched, over)
   }
 
@@ -4799,10 +4735,9 @@ object Text {
       prefix: String = "graft_stream_retract",
       staticRetract: Option[Column] = None)
       : graft.streaming.StreamCow.Spec = {
-    val root = graft.Util.sessionTmpDir(spark, prefix)
-    val tag = graft.Util.fileFingerprint(s"$sfDir/documents.parquet")
     graft.streaming.StreamCow.Spec("doc_id", Seq("split", "shard"),
-      corpusRunLayout(spark, sfDir), s"$root/$tag", staticRetract)
+      corpusRunLayout(spark, sfDir), graft.Artifacts.path(spark, prefix,
+        sfDir, Seq(s"$sfDir/documents.parquet")), staticRetract)
   }
 
   /** `corpus_compact_run` — MAJOR COMPACTION of the retract
@@ -5146,8 +5081,8 @@ object Text {
     * substitute it for the append query's own plan (the
     * retract-manifest rule). */
   private def versionManifest(spark: SparkSession, sfDir: String): DataFrame =
-    Flow.sharedTableOf(spark, s"version_diff_manifest:$sfDir",
-        graft.Util.fileFingerprint(s"$sfDir/documents.parquet")) {
+    graft.Artifacts.table(spark, "graft_shared_table/version_diff_manifest",
+        sfDir, Seq(s"$sfDir/documents.parquet")) {
       corpusAppendPipeline(spark, sfDir).withColumn("vd", lit(true))
     }
 
@@ -5329,27 +5264,23 @@ object Text {
 
   /** The full-chain MAJOR COMPACTION artifact: v4's live view folded
     * into a fresh frozen base, partitioned by (split, shard),
-    * committed under _SUCCESS — the Iceberg "rewrite data files"
-    * semantics applied to the END of the lifecycle chain (the
-    * retract-family's [[corpusCompactRun]] compacts its own base-
-    * minus-takedowns state; this one compacts the append⊕retract⊕
-    * reinstate composition). Write cost is one manifest-sized job
-    * (per-doc metadata rows, never text); every later asof(v5) is a
-    * partitioned parquet read of the committed files. */
-  private def chainCompactDir(spark: SparkSession, sfDir: String): String = {
-    val root = graft.Util.sessionTmpDir(spark, "graft_chain_compact")
-    val tag = graft.Util.fileFingerprint(s"$sfDir/documents.parquet")
-    val dir = s"$root/$tag"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      graft.Util.vacuumSiblings(root, tag)
+    * committed as a [[graft.Artifacts]] directory — the Iceberg
+    * "rewrite data files" semantics applied to the END of the
+    * lifecycle chain (the retract-family's [[corpusCompactRun]]
+    * compacts its own base-minus-takedowns state; this one compacts
+    * the append⊕retract⊕reinstate composition). Write cost is one
+    * manifest-sized job (per-doc metadata rows, never text); every
+    * later asof(v5) is a partitioned parquet read of the committed
+    * files. */
+  private def chainCompactDir(spark: SparkSession, sfDir: String): String =
+    graft.Artifacts.dir(spark, "graft_chain_compact", sfDir,
+        Seq(s"$sfDir/documents.parquet")) { dir =>
       versionManifest(spark, sfDir)
         .filter(chainPred(4))
         .select(col("doc_id"), col("bin"), col("n_tokens"),
           col("split"), col("shard"))
         .write.partitionBy("split", "shard").mode("overwrite").parquet(dir)
     }
-    dir
-  }
 
   /** asof(v5): the committed compact artifact read back, partition
     * columns re-cast to the manifest's types (partitionBy round-trips

@@ -406,15 +406,12 @@ object Vector {
     * assignment sweep plus a full-corpus vec_id join — at 100 TB and
     * a serving cadence, the scale-killer this layout removes. The
     * vectors are stored exactly once per index (the assignment IS the
-    * index's posting payload, the standard IVF flat layout), and the
-    * completion gate is the partitioned write's own _SUCCESS, written
-    * last — a torn build has no marker and rebuilds. */
+    * index's posting payload, the standard IVF flat layout), committed
+    * as one [[graft.Artifacts]] directory — a torn build rebuilds. */
   private[graft] def persistIndexDir(spark: SparkSession,
       sfDir: String): String = {
     import spark.implicits._
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(dataKey(sfDir).hashCode)
-    if (!new java.io.File(s"$dir/assign.parquet/_SUCCESS").exists()) {
+    annArtifact(spark, "graft_ann_index", sfDir) { dir =>
       // centroids.parquet is part of the artifact on purpose: an
       // out-of-corpus query vector needs the centroids to pick its
       // probe cells — the serving stream and the IVF dense leg both
@@ -429,8 +426,14 @@ object Vector {
         .write.partitionBy("cell").mode("overwrite")
         .parquet(s"$dir/assign.parquet")
     }
-    dir
   }
+
+  /** A [[graft.Artifacts]] directory derived from the embeddings
+    * table — the input every index artifact below is keyed on. */
+  private def annArtifact(spark: SparkSession, kind: String, sfDir: String)(
+      build: String => Unit): String =
+    graft.Artifacts.dir(spark, kind, sfDir,
+      Seq(s"$sfDir/embeddings.parquet"))(build)
 
   /** Partition-pruned probe of the PERSISTED artifact — the consumer
     * shape the cell-partitioned layout exists for: the contract
@@ -575,35 +578,20 @@ object Vector {
     * artifact dir — shared with [[annIndexVersionDiff]]. */
   private def incrIndexDir(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val k = corpusK(spark, sfDir)
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(dataKey(sfDir).hashCode) + "_incr"
-    val assignDir = s"$dir/assign.parquet"
-    def listFiles() = Option(new java.io.File(assignDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .map(f => (f.getName, f.length, f.lastModified)).sortBy(_._1).toSeq
-    // Two-phase commit marker: the bare assignDir probe is NOT a safe
-    // build gate — an interrupted build leaves assign.parquet present
-    // but the manifest or delta append unwritten, and the build would
-    // never re-run (the same class of bug the retract/reinstate
-    // overlays fixed via _SUCCESS probes). The marker is written LAST,
-    // after manifest + append + the append-only assertion; a dir
-    // without it is a torn build and is wiped before rebuilding.
-    val commitMarker = new java.io.File(s"$dir/_SUCCESS")
-    if (new java.io.File(assignDir).exists() && !commitMarker.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
-    if (!commitMarker.exists()) {
+    // one artifact for both phases: the commit marker lands after
+    // manifest + append + the append-only assertion, so a build
+    // interrupted between them is wiped and rebuilt, never served
+    annArtifact(spark, "graft_ann_index/incr", sfDir) { dir =>
+      val assignDir = s"$dir/assign.parquet"
+      def listFiles() = Option(new java.io.File(assignDir).listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+        .map(f => (f.getName, f.length, f.lastModified)).sortBy(_._1).toSeq
       // Deterministic shared kernel over the base slice (same
       // executor-merged, ascending-partition-fold association as the
       // full-corpus trainer).
-      val cs = kmeansCentroidsOn(spark, sfDir, k, iters = 3,
-        Some(!isIncrDelta), tag = "#base")
+      val cs = kmeansCentroidsOn(spark, sfDir, corpusK(spark, sfDir),
+        iters = 3, Some(!isIncrDelta), tag = "#base")
       // phase 1 — the index build: centroids + base assignment
       cs.toSeq.map { case (c, v) => (c, v.toSeq) }.toDF("cell", "centroid")
         .write.mode("overwrite").parquet(s"$dir/centroids.parquet")
@@ -633,10 +621,7 @@ object Vector {
       val rewritten = baseFiles.filterNot(after.contains)
       require(rewritten.isEmpty,
         s"index append rewrote base files: ${rewritten.map(_._1).mkString(", ")}")
-      // commit: everything above is durable and verified
-      java.nio.file.Files.write(commitMarker.toPath, Array.empty[Byte])
     }
-    dir
   }
 
   /** `ann_index_version_diff` — the SNAPSHOT SUMMARY between index
@@ -729,19 +714,16 @@ object Vector {
 
   /** The index chain's MAJOR COMPACTION artifact: v4's live
     * assignment folded into a fresh cell-partitioned base, committed
-    * under _SUCCESS — asof(v5) reads these files back, so the
-    * compaction boundary is checked physically. Metadata-sized write
-    * (assignment rows, never embeddings). */
+    * as a [[graft.Artifacts]] directory — asof(v5) reads these files
+    * back, so the compaction boundary is checked physically.
+    * Metadata-sized write (assignment rows, never embeddings). */
   private def annChainCompactDir(spark: SparkSession,
-      sfDir: String): String = {
-    val dir = incrIndexDir(spark, sfDir) + "_chain"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+      sfDir: String): String =
+    annArtifact(spark, "graft_ann_index/chain", sfDir) { dir =>
       Tables.parquet(spark, s"${incrIndexDir(spark, sfDir)}/assign.parquet")
         .filter(annChainPred(4))
         .write.partitionBy("cell").mode("overwrite").parquet(dir)
     }
-    dir
-  }
 
   /** `ann_version_log` — the registry VERSION LOG for the vector
     * index (one row per committed version: parent, kind, live vector
@@ -955,18 +937,16 @@ object Vector {
     import spark.implicits._
     import org.apache.spark.sql.types._
     val k = corpusK(spark, sfDir)
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(dataKey(sfDir).hashCode) + "_stream"
-    val assignDir = s"$dir/assign.parquet"
     // phase 1 — identical deterministic kernel to the batch append
     // (memoized per dataset+tag, so batch and stream share ONE train)
     val cs = kmeansCentroidsOn(spark, sfDir, k, iters = 3,
       Some(!isIncrDelta), tag = "#base")
-    if (!new java.io.File(assignDir).exists())
+    val assignDir = annArtifact(spark, "graft_ann_index/stream", sfDir) {
       Tables.embeddings(spark, sfDir).filter(!isIncrDelta)
         .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
         .map { case (id, v) => (id, nearest(cs)(v)) }.toDF("vec_id", "cell")
-        .write.mode("overwrite").parquet(assignDir)
+        .write.mode("overwrite").parquet(_)
+    }
     // phase 2 — the delta arrives as a stream; assignment is pure
     // map work against the closure-shipped centroid array
     val embSchema = new StructType().add("vec_id", LongType)
@@ -1010,20 +990,14 @@ object Vector {
     * Shared by the serving stream and its batch comparator
     * [[serveBatchTopk]] so both answer the same request set. */
   private[graft] def serveFeedDir(spark: SparkSession,
-      sfDir: String): String = {
-    val feed = graft.Util.sessionTmpDir(spark, "graft_ann_serve") + "/" +
-      java.lang.Integer.toHexString(dataKey(sfDir).hashCode) + "/feed"
-    if (!new java.io.File(s"$feed/_SUCCESS").exists()) {
-      val rootFile = new java.io.File(feed).getParentFile
-      graft.Util.vacuumSiblings(rootFile.getParent, rootFile.getName)
+      sfDir: String): String =
+    annArtifact(spark, "graft_ann_serve", sfDir) {
       withNorm2(spark, sfDir).filter(isServeQuery)
         .select(col("vec_id"), col("embedding"), col("nrm2"),
           pmod(col("vec_id"), lit(3)).cast("int").as("slice"))
         .repartition(col("slice"))
-        .write.partitionBy("slice").mode("overwrite").parquet(feed)
+        .write.partitionBy("slice").mode("overwrite").parquet(_)
     }
-    feed
-  }
 
   /** `stream_ann_query` — the SERVING leg of the index lifecycle
     * (judge r16 next-round #4): every stream twin so far is
@@ -1258,7 +1232,9 @@ object Vector {
     * corpus-bounded), and BOTH serving legs' gates consult it — one
     * corpus sweep per session instead of one per gate invocation
     * (r18, guide §1.2: don't recompute ground truth you already
-    * have). */
+    * have). Return contract: `(qid, vec_id)` only — the memo keeps
+    * membership, not scores, so a caller needing `sim_e4` must
+    * re-score those pairs itself. */
   private val serveBruteCache = scala.collection.concurrent.TrieMap
     .empty[(String, String), Seq[(Long, Long)]]
   private[graft] def serveBruteTopk(spark: SparkSession,
@@ -1320,7 +1296,7 @@ object Vector {
       v: Array[Float]): Array[Byte] =
     Array.tabulate(PqM)(m => pqNearest(books(m), v, m * PqSub).toByte)
 
-  /** Extends the persisted IVF artifact with its PQ coding:
+  /** The PQ coding of the persisted IVF artifact, its own artifact:
     * `books.parquet` (the M×K trained codebooks, a 128-row dim table)
     * and `codes.parquet` — PARTITIONED BY cell, one row per vector
     * carrying only `(vec_id, code binary(8))`. At 100 TB this is the
@@ -1329,19 +1305,17 @@ object Vector {
     * touches full vectors only for the shortlist's point reads.
     * Codes derive from the SAME persisted assignment (one pruned-free
     * read of assign.parquet at build time), so code cells and vector
-    * cells can never drift. Build-once: completion marker is the
-    * partitioned write's own _SUCCESS, written last. */
+    * cells can never drift. */
   private[graft] def persistPqDir(spark: SparkSession,
       sfDir: String): String = {
     import spark.implicits._
-    val dir = persistIndexDir(spark, sfDir)
-    if (!new java.io.File(s"$dir/codes.parquet/_SUCCESS").exists()) {
+    annArtifact(spark, "graft_ann_index/pq", sfDir) { dir =>
       val books = pqTrain(spark, sfDir, iters = 3)
       books.zipWithIndex.flatMap { case (bk, m) =>
         bk.zipWithIndex.map { case (cent, c) => (m, c, cent.toSeq) }
       }.toSeq.toDF("m", "code", "centroid")
         .write.mode("overwrite").parquet(s"$dir/books.parquet")
-      Tables.parquet(spark, s"$dir/assign.parquet")
+      Tables.parquet(spark, s"${persistIndexDir(spark, sfDir)}/assign.parquet")
         .select(col("cell"), col("vec_id"), col("embedding"))
         .as[(Int, Long, Array[Float])]
         .map { case (cell, id, v) => (cell, id, pqCodeBytes(books, v)) }
@@ -1350,7 +1324,6 @@ object Vector {
         .write.partitionBy("cell").mode("overwrite")
         .parquet(s"$dir/codes.parquet")
     }
-    dir
   }
 
   /** The probed-cell set of one serving micro-batch: each arrival's
@@ -1431,14 +1404,14 @@ object Vector {
     * separately-inspectable frame, because executing it to the
     * point-read list erases the codes scan from the final re-rank
     * plan); this method executes the shortlist and re-ranks. */
-  private[graft] def servePqBatch(dir: String,
+  private[graft] def servePqBatch(dir: String, pqDir: String,
       cents: Array[(Int, Array[Double])],
       books: Array[Array[Array[Double]]], nprobe: Int,
       batch: DataFrame): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
     val cells = servePqCells(cents, nprobe, batch)
-    val short = servePqShortlist(dir, cents, books, nprobe, cells, batch)
+    val short = servePqShortlist(pqDir, cents, books, nprobe, cells, batch)
     // bounded: |batch| × C (cell, qid, vec_id) triples — the
     // point-read list
     val shortTriples = short.as[(Int, Long, Long)].collect().toSeq
@@ -1494,7 +1467,8 @@ object Vector {
       sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = persistPqDir(spark, sfDir)
+    val dir = persistIndexDir(spark, sfDir)
+    val pqDir = persistPqDir(spark, sfDir)
     val cents = Tables.parquet(spark, s"$dir/centroids.parquet")
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
       .map { case (c, v) => (c, v.toArray) }
@@ -1513,7 +1487,7 @@ object Vector {
     val staged = graft.streaming.EventsStream.runIncrementalMapped(
       spark, src, "annservepq", feed, outSchema,
       org.apache.spark.sql.streaming.OutputMode.Update())(
-      servePqBatch(dir, cents, books, nprobe, _))
+      servePqBatch(dir, pqDir, cents, books, nprobe, _))
     serveGates(spark, sfDir, staged, servePqBatchTopk(spark, sfDir),
       ServeRecallFloor)
   }
@@ -1524,12 +1498,13 @@ object Vector {
   private[graft] def servePqBatchTopk(spark: SparkSession,
       sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = persistPqDir(spark, sfDir)
+    val dir = persistIndexDir(spark, sfDir)
+    val pqDir = persistPqDir(spark, sfDir)
     val cents = Tables.parquet(spark, s"$dir/centroids.parquet")
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
       .map { case (c, v) => (c, v.toArray) }
     val books = pqTrain(spark, sfDir, iters = 3)
-    servePqBatch(dir, cents, books, math.min(4, cents.length),
+    servePqBatch(dir, pqDir, cents, books, math.min(4, cents.length),
       Tables.parquet(spark, serveFeedDir(spark, sfDir))
         .select(col("vec_id"), col("embedding"), col("nrm2")))
   }
@@ -1571,12 +1546,10 @@ object Vector {
     * the only duplicated work is the assignment map + one partitioned
     * write (metadata-only — this copy stays vector-free because the
     * retract gates audit membership, never similarity payloads). */
-  private def retractBaseAssign(spark: SparkSession, sfDir: String): String = {
+  private[graft] def retractBaseAssign(spark: SparkSession,
+      sfDir: String): String = {
     import spark.implicits._
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(dataKey(sfDir).hashCode) + "_retract"
-    val assignDir = s"$dir/assign.parquet"
-    if (!new java.io.File(assignDir).exists()) {
+    annArtifact(spark, "graft_ann_index/retract", sfDir) { dir =>
       val cs = kmeansCentroids(spark, sfDir, k = corpusK(spark, sfDir),
         iters = 3)
       cs.toSeq.map { case (c, v) => (c, v.toSeq) }.toDF("cell", "centroid")
@@ -1584,9 +1557,9 @@ object Vector {
       Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
         .map { case (id, v) => (id, nearest(cs)(v)) }.toDF("vec_id", "cell")
-        .write.partitionBy("cell").mode("overwrite").parquet(assignDir)
-    }
-    assignDir
+        .write.partitionBy("cell").mode("overwrite")
+        .parquet(s"$dir/assign.parquet")
+    } + "/assign.parquet"
   }
 
   /** The gate tail both retract twins share: live = (base cells the
@@ -1659,19 +1632,29 @@ object Vector {
 
   def annIndexRetract(spark: SparkSession, sfDir: String): DataFrame = {
     val assignDir = retractBaseAssign(spark, sfDir)
-    val overDir = assignDir.stripSuffix("/assign.parquet") + "/overlay.parquet"
-    if (!new java.io.File(s"$overDir/_SUCCESS").exists()) {
-      // the scrub: touched cells from the assignment METADATA (bounded
-      // by k), then a partition-pruned CoW rewrite of only those cells
-      val touched = Tables.parquet(spark, assignDir).filter(isVecRetracted)
+    // the scrub: touched cells from the assignment METADATA (bounded
+    // by k), then a partition-pruned CoW rewrite of only those cells
+    val overDir = annOverlay(spark, sfDir, "retract_overlay", assignDir,
+      isVecRetracted, !isVecRetracted)
+    retractIndexGates(spark, sfDir, assignDir, overDir)
+  }
+
+  /** A copy-on-write overlay of the retract base `assignDir`: the
+    * cells holding a `touch` row, rewritten (partition-pruned) to
+    * their `keep` rows — one [[graft.Artifacts]] directory per
+    * (`name`, dataset). */
+  private def annOverlay(spark: SparkSession, sfDir: String,
+      name: String, assignDir: String,
+      touch: org.apache.spark.sql.Column,
+      keep: org.apache.spark.sql.Column): String =
+    annArtifact(spark, s"graft_ann_index/$name", sfDir) { dir =>
+      val touched = Tables.parquet(spark, assignDir).filter(touch)
         .select(col("cell")).distinct().collect().map(_.getInt(0))
       Tables.parquet(spark, assignDir)
         .filter(col("cell").isin(touched.map(Int.box): _*))
-        .filter(!isVecRetracted)
-        .write.partitionBy("cell").mode("overwrite").parquet(overDir)
+        .filter(keep)
+        .write.partitionBy("cell").mode("overwrite").parquet(dir)
     }
-    retractIndexGates(spark, sfDir, assignDir, overDir)
-  }
 
   /** Cleared subset of the vector takedown list for
     * [[annIndexReinstate]] — the even half, mirroring the corpus
@@ -1703,19 +1686,8 @@ object Vector {
     * retract one. */
   def annIndexReinstate(spark: SparkSession, sfDir: String): DataFrame = {
     val assignDir = retractBaseAssign(spark, sfDir)
-    val overDir = assignDir.stripSuffix("/assign.parquet") +
-      "/reinstate_overlay.parquet"
-    // commit-marker gating, not bare dir existence: an interrupted
-    // overlay write must re-run, never be read as complete (review
-    // r15 #2; the corpus twin's _SUCCESS rule)
-    if (!new java.io.File(s"$overDir/_SUCCESS").exists()) {
-      val touched = Tables.parquet(spark, assignDir).filter(isVecCleared)
-        .select(col("cell")).distinct().collect().map(_.getInt(0))
-      Tables.parquet(spark, assignDir)
-        .filter(col("cell").isin(touched.map(Int.box): _*))
-        .filter(!isVecRetracted || isVecCleared)
-        .write.partitionBy("cell").mode("overwrite").parquet(overDir)
-    }
+    val overDir = annOverlay(spark, sfDir, "reinstate_overlay", assignDir,
+      isVecCleared, !isVecRetracted || isVecCleared)
     reinstateIndexGates(spark, sfDir, assignDir, overDir)
   }
 
@@ -1883,10 +1855,9 @@ object Vector {
       prefix: String = "graft_ann_sretract",
       staticRetract: Option[org.apache.spark.sql.Column] = None)
       : graft.streaming.StreamCow.Spec = {
-    val root = graft.Util.sessionTmpDir(spark, prefix)
-    val tag = java.lang.Integer.toHexString(dataKey(sfDir).hashCode)
     graft.streaming.StreamCow.Spec("vec_id", Seq("cell"),
-      retractBaseAssign(spark, sfDir), s"$root/$tag", staticRetract)
+      retractBaseAssign(spark, sfDir), graft.Artifacts.path(spark, prefix,
+        sfDir, Seq(s"$sfDir/embeddings.parquet")), staticRetract)
   }
 
   /** `ann_index_compact` — MAJOR COMPACTION of the index-side CoW

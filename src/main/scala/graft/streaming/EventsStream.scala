@@ -130,9 +130,8 @@ object EventsStream {
   def runIncrementalMapped(spark: SparkSession, df: DataFrame, name: String,
       srcDir: String, outSchema: StructType, mode: OutputMode)(
       f: DataFrame => DataFrame): DataFrame = {
-    val key = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(srcDir))
-    val base = s"${graft.Util.sessionTmpDir(spark, "graft_stream")}/${name}_$key"
+    val base = s"${graft.Util.sessionTmpDir(spark, "graft_stream")}/" +
+      s"${name}_${graft.Util.md5Hex(srcDir)}"
     val outDir = s"$base/out"
     val isComplete = mode == OutputMode.Complete()
     val q = df.writeStream
@@ -939,8 +938,8 @@ object EventsStream {
   private def streamDedupRetractInner(spark: SparkSession,
       sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = s"${graft.Util.sessionTmpDir(spark, "graft_dedup_retract")}/" +
-      graft.Util.fileFingerprint(s"$sfDir/documents.parquet")
+    val root = graft.Artifacts.path(spark, "graft_dedup_retract", sfDir,
+      Seq(s"$sfDir/documents.parquet"))
     val feed = s"$root/feed"
     stageRetractFeed(spark, sfDir, feed)
     val feedSchema = new StructType().add("phase", IntegerType)
@@ -960,7 +959,7 @@ object EventsStream {
         TimeMode.None(), OutputMode.Update())
       .toDF("new_id", "index_id")
     // checkpoint/state/output key = the FINGERPRINTED root, not the
-    // sfDir path: an in-place dataset regeneration must rotate the
+    // sfDir path alone: an in-place dataset regeneration must rotate the
     // streaming state with the feed, or ghost postings from the old
     // corpus would survive in the ListState (review r15 finding; the
     // Util.fileFingerprint artifact rule applied to checkpoints)

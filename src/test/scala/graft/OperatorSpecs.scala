@@ -780,9 +780,8 @@ class TextOpsSpec extends SparkSuite {
     }
     // the reinstate overlay holds EXACTLY the touched cells' live set:
     // cleared docs present, still-retracted docs absent
-    val root = graft.Util.sessionTmpDir(spark, "graft_corpus_reinstate")
-    val tag = graft.Util.fileFingerprint(s"$sf/documents.parquet")
-    val over = spark.read.parquet(s"$root/$tag")
+    val over = spark.read.parquet(graft.Artifacts.path(spark,
+      "graft_corpus_reinstate", sf, Seq(s"$sf/documents.parquet")))
     assert(over.filter(col("doc_id") % 89 === 3 && col("doc_id") % 2 =!= 0)
       .count() == 0, "still-retracted docs must not be reinstated")
     val clearedInOverlay = over
@@ -974,10 +973,10 @@ class TextOpsSpec extends SparkSuite {
     val touchedWithSurvivor =
       cellAgg.filter { case (_, (nr, nb)) => nr > 0 && nb > nr }.keySet
     if (touched.nonEmpty) {
-      val root = graft.Util.sessionTmpDir(spark, "graft_corpus_retract")
-      val tag = graft.Util.fileFingerprint(s"$sf/documents.parquet")
+      val over = graft.Artifacts.path(spark, "graft_corpus_retract", sf,
+        Seq(s"$sf/documents.parquet"))
       val cells = for {
-        s <- Option(new java.io.File(s"$root/$tag").listFiles()).toSeq.flatten
+        s <- Option(new java.io.File(over).listFiles()).toSeq.flatten
         if s.isDirectory && s.getName.startsWith("split=")
         h <- Option(s.listFiles()).toSeq.flatten
         if h.isDirectory && h.getName.startsWith("shard=")
@@ -1298,10 +1297,9 @@ class VectorSpec extends SparkSuite {
       assert(r.getAs[Boolean]("recall_ok"), s"survivor recall floor: $r")
       assert(r.getAs[Boolean]("cow_ok"), s"per-cell reconciliation: $r")
     }
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(Vector.dataKey(sf).hashCode) + "_retract"
-    val base = spark.read.parquet(s"$dir/assign.parquet")
-    val over = spark.read.parquet(s"$dir/overlay.parquet")
+    val base = spark.read.parquet(Vector.retractBaseAssign(spark, sf))
+    val over = spark.read.parquet(graft.Artifacts.path(spark,
+      "graft_ann_index/retract_overlay", sf, Seq(s"$sf/embeddings.parquet")))
     // overlay cells == exactly the cells that contained a retracted vec
     val touched = base.filter(pmod(col("vec_id"), lit(89L)) === 3L)
       .select("cell").distinct().collect().map(_.getInt(0)).toSet
@@ -1362,8 +1360,8 @@ class VectorSpec extends SparkSuite {
     }
     // the persisted assignment really contains the late batch (the
     // append happened) — read it back through the same session root
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(Vector.dataKey(sf).hashCode) + "_incr"
+    val dir = graft.Artifacts.path(spark, "graft_ann_index/incr", sf,
+      Seq(s"$sf/embeddings.parquet"))
     val assigned = spark.read.parquet(s"$dir/assign.parquet")
     val nDelta = assigned.filter(pmod(col("vec_id"), lit(101)) === 13).count()
     val nExpect = Tables.embeddings(spark, sf)
@@ -1416,13 +1414,12 @@ class VectorSpec extends SparkSuite {
       emb.count() - emb.filter(pmod(col("vec_id"), lit(89)) === 3).count()
         + nCleared)
     // the overlay restores cleared vectors at EXACTLY their base cells
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(Vector.dataKey(sf).hashCode) + "_retract"
-    val base = spark.read.parquet(s"$dir/assign.parquet")
+    val base = spark.read.parquet(Vector.retractBaseAssign(spark, sf))
       .filter(pmod(col("vec_id"), lit(89)) === 3 &&
         pmod(col("vec_id"), lit(2)) === 0)
       .select(col("vec_id"), col("cell").cast("int"))
-    val over = spark.read.parquet(s"$dir/reinstate_overlay.parquet")
+    val over = spark.read.parquet(graft.Artifacts.path(spark,
+      "graft_ann_index/reinstate_overlay", sf, Seq(s"$sf/embeddings.parquet")))
       .filter(pmod(col("vec_id"), lit(89)) === 3)
       .select(col("vec_id"), col("cell").cast("int"))
     assert(over.exceptAll(base).count() == 0 &&
@@ -1447,8 +1444,8 @@ class VectorSpec extends SparkSuite {
     assert(rows.forall(_.getAs[Boolean]("stable")))
     // time travel reads the manifest's files, never the trainer: the
     // v1 leg of the plan scans exactly the manifest's file count
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(Vector.dataKey(sf).hashCode) + "_incr"
+    val dir = graft.Artifacts.path(spark, "graft_ann_index/incr", sf,
+      Seq(s"$sf/embeddings.parquet"))
     val man = java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get(s"$dir/manifest_v1.txt"))
     assert(!man.isEmpty, "v1 manifest committed by the base build")

@@ -1280,7 +1280,7 @@ class ScaleSpec extends SparkSuite {
         .exists(p => p.toString.contains("assign.parquet") ||
           p.toString.contains("embeddings.parquet"))),
       "the ADC stage must touch only the 16 B/vec codes")
-    val pq = graft.ops.Vector.servePqBatch(pqDir, cents, books,
+    val pq = graft.ops.Vector.servePqBatch(dir, pqDir, cents, books,
       pqNprobe, batch)
     pinned(pq, "servePqBatch")
     val assignScans = scans(pq).filter(_.relation.location.rootPaths
@@ -1297,11 +1297,19 @@ class ScaleSpec extends SparkSuite {
     // probe's plan must SCAN assign.parquet — a plan that re-derives
     // cells through the typed assignment stage would re-train on every
     // probe, the cost decoupling the artifact exists to provide.
+    // (scan root paths, not the plan string: its Location field is
+    // cut at spark.sql.maxMetadataStringLength characters)
+    import org.apache.spark.sql.execution.FileSourceScanExec
     graft.ops.Vector.annIndexPersist(spark, sf).collect()
-    val plan = graft.ops.Vector.annIndexPersist(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("assign.parquet"),
-      s"probe must read the persisted assignment:\n${plan.take(1500)}")
+    val plan = graft.Util.withConf(spark, "spark.sql.adaptive.enabled",
+        "false") {
+      graft.ops.Vector.annIndexPersist(spark, sf).queryExecution.executedPlan
+    }
+    val roots = (plan +: plan.subqueries).flatMap(_.collect {
+      case f: FileSourceScanExec => f.relation.location.rootPaths
+    }).flatten.map(_.toString)
+    assert(roots.exists(_.endsWith("assign.parquet")),
+      s"probe must read the persisted assignment:\n${plan.toString.take(1500)}")
   }
 
   test("cross-modal pair dedup reuses the persisted phash scan") {
@@ -1529,5 +1537,33 @@ class ScaleSpec extends SparkSuite {
       assert(ex.size <= 3,
         s"one event pass + bounded stage agg, not per-stage re-shuffles:\n$plan")
     }
+  }
+
+  test("global windows sort fixed-size spines, never data") {
+    // a Window.orderBy without a partition key runs in ONE task; each
+    // such site is safe only because its input is a spine whose size
+    // the query fixes — pin that size, per site
+    import org.apache.spark.sql.execution.window.WindowExec
+    def inputs(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      graft.Util.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+        df.queryExecution.executedPlan
+          .collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
+          .map(_.child.execute().count())
+      }
+    // d4 plan/run: the "0 */6 * * *" ticks of January 2024 plus the
+    // closing 2024-02-01 00:00 tick — 4 × 31 + 1
+    // (d4_backfill_plan reads the spine on both sides of its counts
+    // join: one window per read)
+    for (d4 <- Seq(graft.ops.Flow.d4BackfillPlan(spark, sf),
+        graft.ops.Flow.d4BackfillRun(spark, sf))) {
+      val ticks = inputs(d4)
+      assert(ticks.nonEmpty && ticks.forall(_ == 125L), ticks)
+    }
+    // histogram percentiles: the merged bins, capped at 256
+    val bins = inputs(graft.ops.Relational.histQuantileRollup(spark, sf))
+    assert(bins.size == 1 && bins.head > 0 && bins.head <= 256, bins)
+    // version logs: one row per chain version
+    assert(inputs(graft.ops.Text.corpusVersionLog(spark, sf)) == Seq(5L))
+    assert(inputs(graft.ops.Vector.annVersionLog(spark, sf)) == Seq(5L))
   }
 }

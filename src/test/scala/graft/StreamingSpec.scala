@@ -85,8 +85,7 @@ class StreamingSpec extends SparkSuite {
     // image. (Spark 4 refuses in-place commit-log tampering on a
     // checkpoint this session already ran — the clone sidesteps the
     // guard without weakening the scenario.)
-    val key = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir.toString))
+    val key = graft.Util.md5Hex(dir.toString)
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_stream_" +
       spark.sparkContext.applicationId
     def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
@@ -160,7 +159,7 @@ class StreamingSpec extends SparkSuite {
     // candidate set (a superset of what ever lived in MG state) stays
     // within shards x (1/phi) per batch — independent of |keys| and n
     val candDir = s"${graft.Util.sessionTmpDir(spark, "graft_stream")}/" +
-      s"hh_${java.lang.Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sf))}/out"
+      s"hh_${graft.Util.md5Hex(sf)}/out"
     val perBatch = spark.read.parquet(candDir)
       .groupBy(col("batch")).count().collect().map(_.getLong(1))
     assert(perBatch.nonEmpty, "guard: candidate dump must exist")
@@ -216,8 +215,7 @@ class StreamingSpec extends SparkSuite {
     // the processor's occupancy emissions — per cell, the max
     // occupancy equals that cell's delta count (ONE counter per cell
     // is the whole state), and the touched-cell count is bounded by k
-    val key = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sf))
+    val key = graft.Util.md5Hex(sf)
     val staged = spark.read.parquet(
       s"${graft.Util.sessionTmpDir(spark, "graft_stream")}/annx_$key/out")
     val perCell = staged.groupBy(col("cell"))
@@ -275,9 +273,8 @@ class StreamingSpec extends SparkSuite {
     // the feed is sliced into 3 files at maxFilesPerTrigger=1, so the
     // scrub genuinely ran across MULTIPLE micro-batches (cumulative
     // CoW, not a single-shot rewrite) whenever any doc was retracted
-    val tag = graft.Util.fileFingerprint(s"$sf/documents.parquet")
-    val logDir = new java.io.File(
-      s"${graft.Util.sessionTmpDir(spark, "graft_stream_retract")}/$tag/log")
+    val logDir = new java.io.File(graft.Artifacts.path(spark,
+      "graft_stream_retract", sf, Seq(s"$sf/documents.parquet")) + "/log")
     val batches = Option(logDir.listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith("batch="))
     if (got.exists(_._5 > 0))
@@ -300,10 +297,8 @@ class StreamingSpec extends SparkSuite {
       "recall and CoW reconciliation gates must hold")
     // 3 feed slices at maxFilesPerTrigger=1: the scrub really ran
     // across multiple micro-batches whenever anything was retracted
-    val tag = java.lang.Integer.toHexString(
-      graft.ops.Vector.dataKey(sf).hashCode)
-    val logDir = new java.io.File(
-      s"${graft.Util.sessionTmpDir(spark, "graft_ann_sretract")}/$tag/log")
+    val logDir = new java.io.File(graft.Artifacts.path(spark,
+      "graft_ann_sretract", sf, Seq(s"$sf/embeddings.parquet")) + "/log")
     val batches = Option(logDir.listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith("batch="))
     if (got.exists(_._5 > 0))
@@ -325,11 +320,7 @@ class StreamingSpec extends SparkSuite {
     // the serve stream genuinely crossed micro-batches: each of the 3
     // feed slices is non-empty for this query set, and each arrival's
     // top-k lands in its own batch partition of the staged output
-    val key = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(
-        graft.Util.sessionTmpDir(spark, "graft_ann_serve") + "/" +
-          java.lang.Integer.toHexString(
-            graft.ops.Vector.dataKey(sf).hashCode) + "/feed"))
+    val key = graft.Util.md5Hex(graft.ops.Vector.serveFeedDir(spark, sf))
     val outDir = new java.io.File(
       s"${graft.Util.sessionTmpDir(spark, "graft_stream")}/annserve_$key/out")
     val batches = Option(outDir.listFiles()).toSeq.flatten
@@ -455,18 +446,16 @@ class StreamingSpec extends SparkSuite {
       "index reinstate recall + reconciliation gates must hold")
     // the cleared feeds really staged as 3 slices -> multi-batch CoW
     // on BOTH sides
-    def batchesUnder(prefix: String, tag: String) = {
-      val logDir = new java.io.File(
-        s"${graft.Util.sessionTmpDir(spark, prefix)}/$tag/log")
+    def batchesUnder(prefix: String, table: String) = {
+      val logDir = new java.io.File(graft.Artifacts.path(spark, prefix, sf,
+        Seq(s"$sf/$table.parquet")) + "/log")
       Option(logDir.listFiles()).toSeq.flatten
         .filter(f => f.isDirectory && f.getName.startsWith("batch="))
     }
-    val cBatches = batchesUnder("graft_stream_reinstate",
-      graft.Util.fileFingerprint(s"$sf/documents.parquet"))
+    val cBatches = batchesUnder("graft_stream_reinstate", "documents")
     assert(cBatches.length > 1,
       s"corpus side: expected multiple micro-batches, saw ${cBatches.length}")
-    val iBatches = batchesUnder("graft_ann_sreinstate",
-      java.lang.Integer.toHexString(graft.ops.Vector.dataKey(sf).hashCode))
+    val iBatches = batchesUnder("graft_ann_sreinstate", "embeddings")
     assert(iBatches.length > 1,
       s"index side: expected multiple micro-batches, saw ${iBatches.length}")
     // re-trigger with no new arrivals is a no-op on both sides
@@ -484,8 +473,8 @@ class StreamingSpec extends SparkSuite {
     assert(batch.exists(_._2 % 16 == 12),
       "guard: the takedown must remove at least one real pair")
     // the feed really staged as 3 ordered phase files -> 3 micro-batches
-    val root = s"${graft.Util.sessionTmpDir(spark, "graft_dedup_retract")}/" +
-      graft.Util.fileFingerprint(s"$sf/documents.parquet")
+    val root = graft.Artifacts.path(spark, "graft_dedup_retract", sf,
+      Seq(s"$sf/documents.parquet"))
     val feedFiles = new java.io.File(s"$root/feed").listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     assert(feedFiles.map(_.getName).toSeq == Seq("p0.parquet", "p1.parquet",
@@ -1086,9 +1075,8 @@ class StreamingSpec extends SparkSuite {
     assert(first.nonEmpty && first.forall(r =>
         r.getBoolean(8) && r.getBoolean(11)),
       "guard: compact_ok and vacuum_ok must hold on the completed run")
-    val tag = graft.Util.fileFingerprint(s"$sf/documents.parquet")
-    val root =
-      s"${graft.Util.sessionTmpDir(spark, "graft_corpus_compact")}/$tag"
+    val root = graft.Artifacts.path(spark, "graft_corpus_compact", sf,
+      Seq(s"$sf/documents.parquet"))
     for (d <- Seq("overlay", "log"))
       assert(new java.io.File(s"$root/$d").mkdirs(),
         s"guard: could not simulate stranded $d")
