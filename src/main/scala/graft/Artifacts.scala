@@ -34,6 +34,7 @@ object Artifacts {
 
   private val locks = TrieMap.empty[String, Object]
   private val reads = TrieMap.empty[(SparkSession, String), DataFrame]
+  private val snapshots = TrieMap.empty[(SparkSession, String), Any]
 
   /** Where (kind, sfDir) lives for the inputs' current content; builds
     * nothing. */
@@ -56,8 +57,10 @@ object Artifacts {
         if (!marker.exists()) {
           Option(root.listFiles()).toSeq.flatten
             .foreach(Util.deleteRecursively)
-          reads.keys.filter(_._2.startsWith(root.getPath + "/"))
-            .foreach(reads.remove)
+          val under = root.getPath + "/"
+          reads.keys.filter(_._2.startsWith(under)).foreach(reads.remove)
+          snapshots.keys.filter(_._2.startsWith(under))
+            .foreach(snapshots.remove)
           build(out)
           java.nio.file.Files.write(marker.toPath, Array.empty[Byte])
         }
@@ -83,4 +86,12 @@ object Artifacts {
     * a rebuild evicts the entries under its root. */
   def read(spark: SparkSession, path: String): DataFrame =
     reads.getOrElseUpdate((spark, path), Tables.parquet(spark, path))
+
+  /** Driver-side value `f` derives from a committed artifact at `path`
+    * (a one-row statistic, a fixed lookup table), computed once per
+    * session and artifact generation. Like [[read]] it needs no
+    * fingerprint walk of its own — the generation is in the path — and
+    * the rebuild that evicts [[read]]'s entries evicts these too. */
+  def snapshot[V](spark: SparkSession, path: String)(f: => V): V =
+    snapshots.getOrElseUpdate((spark, path), f).asInstanceOf[V]
 }

@@ -98,9 +98,13 @@ object PlanManifest {
   /** Fingerprint every registry query at `sfDir`. Queries whose
     * construction throws are recorded as `error:<class>` so the
     * manifest stays total. The session must have AQE disabled for
-    * stable shapes. */
+    * stable shapes. The custom rules are installed first: several
+    * builders install them into the session as a side effect, so
+    * without this a rank-filter plan (agg_mode) would fingerprint
+    * differently depending on which queries the session ran before. */
   def manifest(spark: SparkSession, sfDir: String)
-      : Seq[(String, Map[String, String])] =
+      : Seq[(String, Map[String, String])] = {
+    graft.plans.Plans.install(spark)
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (n, _) => Excluded(n) }
       .map { case (name, fn) =>
@@ -110,6 +114,7 @@ object PlanManifest {
             Map("error" -> e.getClass.getSimpleName) }
         (name, fp)
       }
+  }
 
   def toJson(m: Seq[(String, Map[String, String])]): String = {
     def q(s: String): String = "\"" + s.flatMap {

@@ -173,6 +173,17 @@ object Util {
     }
   }
 
+  /** One row per value of `table(key)`: a driver-side lookup table
+    * joined onto a scan as a plan literal, where a broadcast of the
+    * same rows as a local relation would cost a Spark job of its own.
+    * A key absent from the table gives no row, as an inner join would,
+    * and never an ANSI error (`try_element_at`). Use it in a select or
+    * withColumn (a generator). */
+  def explodeLookup[K: scala.reflect.runtime.universe.TypeTag,
+      V: scala.reflect.runtime.universe.TypeTag](
+      table: Map[K, Seq[V]], key: Column): Column =
+    explode(try_element_at(typedLit(table), key))
+
   /** Hex MD5 of a string — the shared digest for artifact keys. */
   def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

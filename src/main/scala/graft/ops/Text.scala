@@ -695,10 +695,11 @@ object Text {
     * classic lexical-retrieval baseline TF-IDF lacks (term-frequency
     * saturation via k1, doc-length normalization via b). One term
     * explode feeds tf / df / dl in bounded-key aggregates; the query
-    * set broadcasts and prunes the tf table to query terms BEFORE the
-    * scoring joins, so the scored row count is O(query-term matches),
-    * not O(corpus postings). Corpus scalars (N, Σdl) ride a one-row
-    * broadcast. Per-(doc,term) contributions floor to e4 and SUM AS
+    * set prunes the tf table to query terms BEFORE the scoring joins,
+    * so the scored row count is O(query-term matches), not O(corpus
+    * postings). The query set with each term's df, and the corpus
+    * scalars (N, Σdl), enter the plan as literals from the index's
+    * [[lexSnapshot]]. Per-(doc,term) contributions floor to e4 and SUM AS
     * INTEGERS per doc — partition-order-independent, and the oracle
     * replays the identically-parenthesized arithmetic (the t_tfidf
     * ln-parity precedent). k1 = 1.2, b = 0.75. */
@@ -807,30 +808,68 @@ object Text {
     termFreqs(spark, sfDir)
       .filter(col("term").isin(RetrievalQueries.map(_._2).distinct: _*))
 
-  def bm25Topk(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val qdf = broadcast(RetrievalQueries.toDF("query_id", "term"))
+  /** The index statistics the retrieval legs read for the fixed query
+    * set: the collection totals — `dlTotal` is None when no doc has a
+    * token — and (df, cf) of each [[RetrievalQueries]] term the index
+    * holds. */
+  private[graft] case class LexSnapshot(nDocs: Long, dlTotal: Option[Long],
+      termStats: Map[String, (Long, Long)]) {
+    /** term → the queries holding it, with its df. */
+    def queriesOf: Map[String, Seq[QueryDf]] =
+      RetrievalQueries.flatMap { case (q, t) =>
+        termStats.get(t).map { case (df, _) => t -> QueryDf(q, df) }
+      }.groupBy(_._1).map { case (t, v) => t -> v.map(_._2) }
+    /** query → its terms the index holds, with their cf. */
+    def termsOf: Map[String, Seq[TermCf]] =
+      RetrievalQueries.flatMap { case (q, t) =>
+        termStats.get(t).map { case (_, cf) => q -> TermCf(t, cf) }
+      }.groupBy(_._1).map { case (q, v) => q -> v.map(_._2) }
+  }
+  private[graft] case class QueryDf(query_id: String, df: Long)
+  private[graft] case class TermCf(term: String, cf: Long)
+
+  /** [[LexSnapshot]] of the committed lexical index, read once per
+    * index generation (two small scans: the one-row totals and the
+    * term-pushed term_stats). The legs take these as literals, so a
+    * warm call plans no broadcast of a one-row or query-set-sized
+    * side — each such broadcast is a Spark job of its own. */
+  private[graft] def lexSnapshot(spark: SparkSession,
+      sfDir: String): LexSnapshot = {
+    val dir = lexIndexDir(spark, sfDir)
+    graft.Artifacts.snapshot(spark, dir) {
+      val t = graft.Artifacts.read(spark, s"$dir/totals")
+        .select(col("n_docs"), col("dl_total")).head()
+      val ts = termStats(spark, sfDir)
+        .filter(col("term").isin(RetrievalQueries.map(_._2).distinct: _*))
+        .select(col("term"), col("df"), col("cf")).collect()
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      LexSnapshot(t.getLong(0),
+        if (t.isNullAt(1)) None else Some(t.getLong(1)), ts)
+    }
+  }
+
+  def bm25Topk(spark: SparkSession, sfDir: String): DataFrame =
+    bm25Ranked(spark, sfDir).orderBy(col("query_id"), col("rk"))
+
+  /** [[bm25Topk]] without its final sort — the leg the fusions take. */
+  private def bm25Ranked(spark: SparkSession, sfDir: String): DataFrame = {
     // r18: df/dl/totals come from the index's persisted statistics
     // tables instead of per-invocation full-vocabulary / full-corpus
-    // re-aggregation; the tf and term_stats scans carry the query
-    // terms as PushedFilters (plans/r18/rag_*_{before,after}.txt).
-    // Same integers — the stats ARE the former aggregates, persisted.
-    val tf = queryTermFreqs(spark, sfDir)
-    val dft = broadcast(termStats(spark, sfDir)
-      .filter(col("term").isin(RetrievalQueries.map(_._2).distinct: _*))
-      .select(col("term"), col("df")))
-    val dl = docStats(spark, sfDir)
-    val stats = lexTotals(spark, sfDir)
-    val contrib = tf.join(qdf, Seq("term"))
-      .join(dft, Seq("term"))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
+    // re-aggregation; the tf scan carries the query terms as
+    // PushedFilters (plans/r18/rag_*_{before,after}.txt). The query
+    // set with each term's df is a literal map exploded onto the
+    // postings, and N / Σdl are literals (plans/pr6).
+    val snap = lexSnapshot(spark, sfDir)
+    val contrib = queryTermFreqs(spark, sfDir)
+      .withColumn("q", explodeLookup(snap.queriesOf, col("term")))
+      .select(col("doc_id"), col("tf"), col("q.query_id"), col("q.df"))
+      .join(docStats(spark, sfDir), Seq("doc_id"))
       .withColumn("score_e4",
         floor(lit(10000.0) *
-          log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
+          log(lit(1.0) + (lit(snap.nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
           (col("tf") * lit(2.2)) /
           (col("tf") + lit(1.2) * (lit(1.0) - lit(0.75) +
-            lit(0.75) * col("dl") * col("n_docs") / col("dl_total"))))
+            lit(0.75) * col("dl") * lit(snap.nDocs) / typedLit(snap.dlTotal))))
           .cast("long"))
     // (r18 note: repartition(query_id) before this aggregate would fuse
     // the agg + window exchanges, but partitioning by query_id alone
@@ -846,7 +885,6 @@ object Text {
     scored.withColumn("rk", row_number().over(w).cast("int"))
       .filter(col("rk") <= 10)
       .select(col("query_id"), col("rk"), col("doc_id"), col("score_e4"))
-      .orderBy(col("query_id"), col("rk"))
   }
   /** BM25 CTE chain ending in `bm25rank(query_id, rk, doc_id,
     * score_e4)` — ONE SQL definition for [[bm25TopkSql]] and the
@@ -913,34 +951,30 @@ object Text {
     * (query_id, rk, doc_id). Shared by [[ragFusionRrf]] and
     * [[ragEvalRecall]]. */
   private[graft] def qlTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val qdf = broadcast(RetrievalQueries.toDF("query_id", "term"))
     // r18: dl/cf/c_total come from the index's persisted statistics
-    // tables (same integers as the former per-invocation aggregates);
-    // the left join resolving each (candidate, query-term) tf can see
+    // (same integers as the former per-invocation aggregates); the
+    // left join resolving each (candidate, query-term) tf can see
     // only query-term postings by construction, so it joins the
-    // term-pushed tf scan, not the full table.
+    // term-pushed tf scan, not the full table. The query set and c_total
+    // are literals from the [[lexSnapshot]].
+    val snap = lexSnapshot(spark, sfDir)
     val tf = queryTermFreqs(spark, sfDir)
-    val dl = docStats(spark, sfDir)
-    val ctot = lexTotals(spark, sfDir)
-      .select(col("dl_total").as("c_total"))
-    // query terms with their collection stats (zero-cf terms drop:
-    // term_stats only holds terms with cf ≥ 1, so the inner join is
-    // the same filter)
-    val qcf = qdf.join(termStats(spark, sfDir)
-      .filter(col("term").isin(RetrievalQueries.map(_._2).distinct: _*))
-      .select(col("term"), col("cf")), Seq("term"))
-    val cand = tf.join(qdf, Seq("term"))
-      .select(col("query_id"), col("doc_id")).distinct()
+    val cand = tf
+      .select(col("doc_id"),
+        explodeLookup(snap.queriesOf, col("term")).as("q"))
+      .select(col("q.query_id"), col("doc_id")).distinct()
+    // each candidate against every query term with its collection
+    // frequency (zero-cf terms drop: term_stats only holds terms with
+    // cf ≥ 1, so they are absent from the snapshot)
     val contrib = cand
-      .join(broadcast(qcf), Seq("query_id"))
+      .withColumn("t", explodeLookup(snap.termsOf, col("query_id")))
+      .select(col("query_id"), col("doc_id"), col("t.term"), col("t.cf"))
       .join(tf, Seq("doc_id", "term"), "left")
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(ctot))
+      .join(docStats(spark, sfDir), Seq("doc_id"))
       .withColumn("ql_term_e4",
         floor(lit(10000.0) * log(
           (coalesce(col("tf"), lit(0L)) +
-            lit(2000.0) * col("cf") / col("c_total")) /
+            lit(2000.0) * col("cf") / typedLit(snap.dlTotal)) /
           (col("dl") + lit(2000.0)))).cast("long"))
     val qlScored = contrib.groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("ql_term_e4")).as("ql_e4"))
@@ -969,26 +1003,19 @@ object Text {
     * embeddings table, ranking with the SAME bitwise float contract
     * as the ANN operators (dot_f32's left-assoc double accumulation,
     * replayed term-for-term by the oracle's [[Vector.dotDuck]]).
-    * Query vectors broadcast; the corpus side streams map-side
+    * The query vectors are literals ([[denseQueries]]) exploded onto
+    * each corpus row; the corpus side streams map-side
     * through the [[graft.plans.GroupTopK]] partial-heap prune, so
     * the final ranking window sorts ≤ partitions × |Q| × 10
     * survivors — the brute-force baseline shape; at 100 TB the IVF
     * leg (`ann_ivf_topk`) swaps in without changing the fusion. */
   private[graft] def denseTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     def dot(a: String, b: String) =
       graft.functions.VectorExpr.dot_f32(col(a), col(b))
-    val emb = Tables.embeddings(spark, sfDir)
+    val pairs = Tables.embeddings(spark, sfDir)
       .withColumn("nrm2", dot("embedding", "embedding"))
-    val qmap = broadcast(DenseQueryVecs.toDF("qid", "vec_id"))
-    // the query ids are driver literals — push them into the scan so
-    // resolving |Q| query vectors is a pruned point read, not a full
-    // embeddings pass (r18; PushedFilters: In(vec_id, ...))
-    val qs = emb.filter(col("vec_id")
-        .isin(DenseQueryVecs.map(p => Long.box(p._2)): _*))
-      .join(qmap, "vec_id")
-      .select(col("qid"), col("embedding").as("qv"), col("nrm2").as("na"))
-    val pairs = emb.crossJoin(broadcast(qs))
+      .withColumn("q", explode(typedLit(denseQueries(spark, sfDir))))
+      .select(col("*"), col("q.*")).drop("q")
       .withColumn("sim",
         dot("qv", "embedding") / (sqrt(col("na")) * sqrt(col("nrm2"))))
     val pruned = Vector.topkLocal(pairs, "sim", 10, asc = false)
@@ -1000,12 +1027,28 @@ object Text {
         col("vec_id").as("doc_id"))
   }
 
+  /** A dense-leg query: its id, vector and squared norm. */
+  private[graft] case class DenseQuery(qid: String, qv: Seq[Float], na: Double)
+
+  /** The [[DenseQueryVecs]] resolved against the embeddings table
+    * through [[Vector.queryVecs]] — driver literals, read once per
+    * embeddings fingerprint. A query whose vec_id is absent has no
+    * vector and drops out of the dense legs. */
+  private def denseQueries(spark: SparkSession, sfDir: String): Seq[DenseQuery] = {
+    val byId = Vector.queryVecs(spark, sfDir).map(v => v.qid -> v).toMap
+    DenseQueryVecs.flatMap { case (q, id) =>
+      byId.get(id).map(v => DenseQuery(q, v.qv, v.na))
+    }
+  }
+
   def ragFusionRrf(spark: SparkSession, sfDir: String): DataFrame =
-    fuseLegs(bm25Topk(spark, sfDir), qlTopk(spark, sfDir),
+    fuseLegs(bm25Ranked(spark, sfDir), qlTopk(spark, sfDir),
       denseTopk(spark, sfDir))
 
-  /** RRF over N precomputed top-10 legs — shared by [[ragFusionRrf]]
-    * (legs built fresh) and [[ragEvalRecall]] (legs built ONCE as
+  /** RRF over N precomputed, unsorted top-10 legs (rank is the `rk`
+    * column; a leg's own sort would only add a range-sampling job) —
+    * shared by [[ragFusionRrf]] (legs built fresh) and
+    * [[ragEvalRecall]] (legs built ONCE as
     * lazy frames and referenced by both the per-leg hit counts and
     * the fusion — identical subtrees dedup via ReusedExchange, which
     * measures faster than driver-side localization). The N-ary form
@@ -1184,34 +1227,21 @@ object Text {
     * RagScaleProbe's scale evidence). */
   private[graft] def denseIvfCandidates(spark: SparkSession,
       sfDir: String): DataFrame = {
-    import spark.implicits._
     val dir = Vector.persistIndexDir(spark, sfDir)
-    val cents = Tables.parquet(spark, s"$dir/centroids.parquet")
-      .as[(Int, Seq[Double])].collect().sortBy(_._1)
-      .map { case (c, v) => (c, v.toArray) }
+    val cents = Vector.centroids(spark, dir)
     val nprobe = math.min(3, cents.length)
-    val qmap = broadcast(DenseQueryVecs.toDF("qid", "vec_id"))
     // coarse probe: nprobe nearest cells per query, ranked by the same
     // L2-to-centroid metric the assignment used ([[Vector.nearest]]),
-    // ties by cell id — |Q| × k work on the driver's collected copies
-    val qvecs = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id")
-        .isin(DenseQueryVecs.map(p => Long.box(p._2)): _*))
-      .join(qmap, "vec_id")
-      .select(col("qid"), col("embedding"))
-      .as[(String, Array[Float])].collect()
-    val probePairs = qvecs.toSeq.flatMap { case (qid, v) =>
-      cents.map { case (cid, c) =>
-        var d = 0.0; var i = 0
-        while (i < c.length) { val t = c(i) - v(i); d += t * t; i += 1 }
-        (qid, cid, d)
-      }.sortBy(p => (p._3, p._2)).take(nprobe).map(p => (qid, p._2))
+    // ties by cell id — |Q| × k work on the driver's snapshot copies
+    val probePairs = denseQueries(spark, sfDir).flatMap { q =>
+      Vector.nearestCells(cents, nprobe)(q.qv.toArray).map(c => (q.qid, c))
     }
     val probedCells = probePairs.map(_._2).distinct.sorted
-    val probe = probePairs.toDF("qid", "cell")
+    // cell → the queries probing it, exploded onto the cell's rows
+    val qidsOf = probePairs.groupBy(_._2).map { case (c, v) => c -> v.map(_._1) }
     Tables.parquet(spark, s"$dir/assign.parquet")
       .filter(col("cell").isin(probedCells.map(Int.box): _*))
-      .join(broadcast(probe), Seq("cell"))
+      .withColumn("qid", explodeLookup(qidsOf, col("cell")))
       .select(col("qid"), col("vec_id"),
         col("embedding").as("cv"), col("nrm2").as("cn"))
   }
@@ -1222,23 +1252,16 @@ object Text {
 
   private[graft] def denseIvfTopk(spark: SparkSession,
       sfDir: String): DataFrame = {
-    import spark.implicits._
     def dot(a: String, b: String) =
       graft.functions.VectorExpr.dot_f32(col(a), col(b))
-    val qmap = broadcast(DenseQueryVecs.toDF("qid", "vec_id"))
-    val emb = Tables.embeddings(spark, sfDir)
-      .withColumn("nrm2", dot("embedding", "embedding"))
-    val qs = emb.filter(col("vec_id")
-        .isin(DenseQueryVecs.map(p => Long.box(p._2)): _*))
-      .join(qmap, "vec_id")
-      .select(col("qid"), col("embedding").as("qv"), col("nrm2").as("na"))
+    val qs = denseQueries(spark, sfDir).map(q => q.qid -> q).toMap
     // candidates arrive WITH their vectors from the pruned artifact
-    // read — the corpus is never re-joined on the candidate side
-    val cand = denseIvfCandidates(spark, sfDir)
-    val pairs = cand
-      .join(broadcast(qs), Seq("qid"))
-      .withColumn("sim",
-        dot("qv", "cv") / (sqrt(col("na")) * sqrt(col("cn"))))
+    // read — the corpus is never re-joined on the candidate side; each
+    // candidate's query vector is a literal lookup by its qid
+    val pairs = denseIvfCandidates(spark, sfDir)
+      .withColumn("q", try_element_at(typedLit(qs), col("qid")))
+      .withColumn("sim", dot("q.qv", "cv") /
+        (sqrt(col("q.na")) * sqrt(col("cn"))))
     val pruned = Vector.topkLocal(pairs, "sim", 10, asc = false)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
@@ -1254,7 +1277,7 @@ object Text {
     * corpus). Shared by [[ragFusionIvf]]'s gate and
     * [[ragContextPackIvf]]'s pack. */
   private[graft] def fusedIvf(spark: SparkSession, sfDir: String): DataFrame =
-    fuseLegs(bm25Topk(spark, sfDir), qlTopk(spark, sfDir),
+    fuseLegs(bm25Ranked(spark, sfDir), qlTopk(spark, sfDir),
       denseIvfTopk(spark, sfDir))
 
   /** Fused-overlap floor for [[ragFusionIvf]]: the IVF fusion's
@@ -1279,7 +1302,7 @@ object Text {
     // fusions (the ragEvalRecall convention): identical subtrees
     // dedup via ReusedExchange, so the gate pays the BM25/QL
     // aggregates once, not twice
-    val bm25 = bm25Topk(spark, sfDir)
+    val bm25 = bm25Ranked(spark, sfDir)
     val ql = qlTopk(spark, sfDir)
     val ivf = fuseLegs(bm25, ql, denseIvfTopk(spark, sfDir))
       .select(col("query_id"), col("doc_id"))
@@ -1386,17 +1409,18 @@ object Text {
     * joins only. */
   def ragEvalRecall(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val qdf = broadcast(RetrievalQueries.toDF("query_id", "term"))
-    val qsz = qdf.groupBy(col("query_id")).agg(count(lit(1)).as("n_terms"))
+    val nTerms = RetrievalQueries.groupBy(_._1)
+      .map { case (q, ts) => q -> ts.size.toLong }
     // relevance = docs containing ALL the query's terms — only
-    // query-term postings can match, so the scan is term-pushed (r18)
-    val tf = queryTermFreqs(spark, sfDir)
+    // query-term postings can match, so the scan is term-pushed (r18),
+    // and the query set is the [[lexSnapshot]]'s literal map
     // tf rows are distinct (doc, term), so count(1) counts matched terms
-    val rel = tf.join(qdf, Seq("term"))
-      .groupBy(col("query_id"), col("doc_id"))
+    val rel = queryTermFreqs(spark, sfDir)
+      .select(col("doc_id"), explodeLookup(
+        lexSnapshot(spark, sfDir).queriesOf, col("term")).as("q"))
+      .groupBy(col("q.query_id").as("query_id"), col("doc_id"))
       .agg(count(lit(1)).as("n_hit"))
-      .join(broadcast(qsz), Seq("query_id"))
-      .filter(col("n_hit") === col("n_terms"))
+      .filter(col("n_hit") === try_element_at(typedLit(nTerms), col("query_id")))
       .select(col("query_id"), col("doc_id"))
     def hitsOf(top: DataFrame, name: String): DataFrame = top
       .select(col("query_id"), col("doc_id"))
@@ -1408,10 +1432,10 @@ object Text {
     // which measures FASTER than forcing the legs with driver-side
     // collects (separate jobs can reuse nothing — tried and reverted:
     // 0.5 s lazy vs 2.6 s localized at sf0.1)
-    val legA = bm25Topk(spark, sfDir)
+    val legA = bm25Ranked(spark, sfDir)
     val legB = qlTopk(spark, sfDir)
     val legC = denseTopk(spark, sfDir)
-    qsz.select(col("query_id"))
+    nTerms.keys.toSeq.sorted.toDF("query_id")
       .join(relN, Seq("query_id"), "left")
       .join(hitsOf(legA, "hits_bm25"), Seq("query_id"), "left")
       .join(hitsOf(legB, "hits_ql"), Seq("query_id"), "left")

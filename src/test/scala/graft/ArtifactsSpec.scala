@@ -146,6 +146,45 @@ class ArtifactsSpec extends SparkSuite {
     Util.deleteRecursively(root.toFile)
   }
 
+  private def lexDir(d: String): String =
+    Artifacts.path(spark, "graft_retrieval_tf", d, Seq(s"$d/documents.parquet"))
+
+  /** Replace `d`'s documents with the rows passing `keep`; their count. */
+  private def rewriteDocuments(d: String,
+      keep: org.apache.spark.sql.Column): Long = {
+    val docs = Paths.get(s"$d/documents.parquet")
+    val next = Paths.get(s"$d/documents_next.parquet")
+    spark.read.parquet(docs.toString).filter(keep).write.parquet(next.toString)
+    Util.deleteRecursively(docs.toFile)
+    Files.move(next, docs)
+    spark.read.parquet(docs.toString).count()
+  }
+
+  test("lexical snapshots: one per dataset and index generation; a " +
+      "rebuild at the same path evicts") {
+    import org.apache.spark.sql.functions.col
+    val root = scratch()
+    val (a, b) = (copyOf(root, "a"), copyOf(root, "b"))
+    val nB = rewriteDocuments(b, col("doc_id") % 2 === 0)
+    val (sa, sb) = (Text.lexSnapshot(spark, a), Text.lexSnapshot(spark, b))
+    assert(sa.nDocs == spark.read.parquet(s"$a/documents.parquet").count())
+    assert(sb.nDocs == nB && sa.nDocs != sb.nDocs,
+      s"A and B share a snapshot: ${sa.nDocs} vs ${sb.nDocs}")
+    assert(Text.lexSnapshot(spark, a) eq sa, "a repeat call re-read A")
+    // rewriting A's documents moves A, and only A, to a new snapshot
+    val nA = rewriteDocuments(a, col("doc_id") % 3 =!= 0)
+    val sa2 = Text.lexSnapshot(spark, a)
+    assert(sa2.nDocs == nA && nA != sa.nDocs)
+    assert(Text.lexSnapshot(spark, b) eq sb, "A's rewrite evicted B")
+    // an unmarked directory at the same path is rebuilt, and the
+    // rebuild drops the snapshot taken of the old build
+    assert(new java.io.File(lexDir(a), Artifacts.Marker).delete())
+    val sa3 = Text.lexSnapshot(spark, a)
+    assert(!(sa3 eq sa2), "the rebuild served the old build's snapshot")
+    assert(sa3 == sa2 && committed(lexDir(a)))
+    Util.deleteRecursively(root.toFile)
+  }
+
   test("no 32-bit hash in src/main/scala/graft/{ops,streaming}") {
     // artifact and checkpoint keys use the full-path md5
     // (Util.md5Hex / Artifacts.path): a 32-bit String.hashCode or

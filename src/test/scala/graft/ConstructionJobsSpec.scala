@@ -4,12 +4,15 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 
 /** DataFrame construction of the read-only queries launches no
   * Spark job: config lookups serve from the store snapshot, parquet
   * reads carry a memoised schema instead of a footer-inference job,
-  * and `acl_audit` scans the corpus once. */
+  * `acl_audit` scans the corpus once, and the retrieval queries take
+  * their fixed query sets and index statistics as literals. */
 class ConstructionJobsSpec extends SparkSuite {
 
   /** `body`'s result and the number of Spark jobs started while it ran. */
@@ -64,5 +67,50 @@ class ConstructionJobsSpec extends SparkSuite {
       s"exactly one corpus scan expected: $scans\n$plan")
     assert(!scans.exists(_.contains("graft_config")),
       s"policy comes from the store snapshot, not a scan: $scans")
+  }
+
+  private val retrieval = Seq("t_bm25_topk", "rag_fusion_rrf", "ann_ivf_topk")
+
+  test("retrieval queries read their snapshots once: a warm call " +
+      "constructs without a Spark job") {
+    // the IVF queries also probe from the centroid snapshot and the
+    // memoised query vectors, not per-call collects
+    val ivf = Seq("rag_fusion_ivf", "rag_context_pack_ivf", "ann_index_persist")
+    val jobs = (retrieval ++ ivf).map { q =>
+      SparkEntry.queries(q)(spark, sf).collect()
+      q -> jobsDuring(SparkEntry.queries(q)(spark, sf))._2
+    }
+    assert(jobs.forall(_._2 == 0),
+      "construction jobs per query: " + jobs.mkString(", "))
+  }
+
+  /** Broadcasts of a driver-side local relation and nested-loop joins
+    * in the plan, AQE off — each such broadcast is a job of its own. */
+  private def literalSides(plan: SparkPlan): Seq[String] =
+    plan.collect {
+      case b: BroadcastExchangeExec
+          if b.child.exists(_.isInstanceOf[LocalTableScanExec]) =>
+        "BroadcastExchange over a LocalTableScan"
+      case j: BroadcastNestedLoopJoinExec => s"BroadcastNestedLoopJoin ${j.joinType}"
+    }
+
+  test("retrieval plans broadcast no local relation and nest no loop join") {
+    Util.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+      retrieval.foreach { q =>
+        val plan = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
+        assert(plan.collect { case s: FileSourceScanExec => s }.nonEmpty,
+          s"$q: the walk must see the real plan, not an AQE leaf")
+        assert(literalSides(plan).isEmpty,
+          s"$q: ${literalSides(plan).mkString(", ")}\n$plan")
+      }
+      // the check sees the shape it bans
+      import spark.implicits._
+      val banned = Tables.documents(spark, sf)
+        .join(org.apache.spark.sql.functions.broadcast(
+          Seq((1L, "a")).toDF("doc_id", "tag")), "doc_id")
+        .crossJoin(org.apache.spark.sql.functions.broadcast(
+          Tables.documents(spark, sf).groupBy().count()))
+      assert(literalSides(banned.queryExecution.executedPlan).size == 2)
+    }
   }
 }

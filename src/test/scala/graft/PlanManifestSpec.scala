@@ -114,7 +114,6 @@ class PlanManifestSpec extends SparkSuite {
       "q4_priority_check" -> (flips + "pushed", s"$flip; $tsLit"),
       "q5_region_revenue" -> (Set("pushed"), tsLit),
       "q6_sql_revenue" -> (Set("pushed"), tsLit),
-      "rag_eval_recall" -> (flips, flip),
       "stream_dedup_index" -> (flips, flip),
       "stream_dedup_retract" -> (flips, flip),
       "t_decontam" -> (flips, flip),
