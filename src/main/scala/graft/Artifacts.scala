@@ -70,11 +70,13 @@ object Artifacts {
   }
 
   /** One-table form: `mk` written as the artifact, served through
-    * [[read]]. Prefer it over [[graft.ops.Flow.sharedScanOf]] when one
-    * action references the result several times: the parquet read-back
-    * is codegen-fused and survives `clearCache()`, while an
-    * InMemoryTableScan pays deserialized batches per subtree job
-    * (measured 4× slower on t_curriculum_resume). */
+    * [[read]]. Prefer it over a persisted frame from
+    * [[graft.ops.Flow.sharedScanOf]] (a [[Util.FingerprintMemo]] slot
+    * per session) when one action references the result several
+    * times: the parquet read-back is codegen-fused and survives
+    * `clearCache()`, while an InMemoryTableScan pays deserialized
+    * batches per subtree job (measured 4× slower on
+    * t_curriculum_resume). */
   def table(spark: SparkSession, kind: String, sfDir: String,
       inputs: Seq[String])(mk: => DataFrame): DataFrame =
     read(spark, dir(spark, kind, sfDir, inputs)(

@@ -47,7 +47,7 @@ object Tables {
     * scale: 4·|part| rows from ONE part-dim scan crossJoined with a
     * broadcast 4-row literal — never a shuffle; the two scalars
     * (|supplier|, its quarter-step) are dimension-table counts,
-    * bounded and memoized per (application, dataset) — one count()
+    * bounded and memoized per supplier fingerprint — one count()
     * job per session, not one per Q2/Q11 run (r17 verdict #7). The
     * suppkey stride (|S|/4 + 1) gives each part 4 DISTINCT suppliers
     * at every shipped supplier count; the distinctness is NOT

@@ -126,8 +126,8 @@ object Util {
     * size, mtime of every part file, recursively) — the cache-key
     * component every per-session artifact must carry so an in-place
     * dataset regeneration REBUILDS the artifact instead of serving a
-    * stale copy (the Tables.tsToMicrosSqlAt / Vector.dataKey pattern,
-    * shared here so new artifacts can't forget it). */
+    * stale copy (the key [[FingerprintMemo]] and [[graft.Artifacts]]
+    * build on, shared here so new artifacts can't forget it). */
   def fileFingerprint(path: String): String = {
     // Hadoop FS, not java.io.File (r17 advice): fingerprint-keyed
     // caches must invalidate where the data lives — on a cluster that
@@ -152,25 +152,48 @@ object Util {
     md5Hex(joined)
   }
 
-  /** Driver-side memo of a value derived from files: one entry per
-    * (application id, paths), valid while the paths' [[fileFingerprint]]
-    * is unchanged. A rewritten file (new length or mtime) rebuilds on
-    * the next call and replaces the stale entry, so the memo holds one
-    * value per path set and dies with the application. */
-  final class FingerprintMemo[V] {
-    private val m = scala.collection.concurrent.TrieMap
-      .empty[(String, Seq[String]), (String, V)]
-    def apply(spark: SparkSession, paths: Seq[String])(build: => V): V = {
-      val key = (spark.sparkContext.applicationId, paths)
+  /** Driver-side memo of a value derived from files: one slot per
+    * (application id, paths, discriminator), valid while the paths'
+    * [[fileFingerprint]] is unchanged. The discriminator carries what
+    * else the value depends on (k, an iteration count, policy values,
+    * a session). A rewritten file (new length or mtime) rebuilds on
+    * the next call and replaces the stale value, so the memo holds one
+    * value per slot and dies with the application — the one mechanism
+    * for file-derived driver values; [[graft.Artifacts]] covers values
+    * keyed by an artifact generation.
+    *
+    * Check, build and replace run under the slot's lock: a caller still
+    * building under a superseded fingerprint can never put its stale
+    * value back after a rotation. `release` runs on the value a rebuild
+    * replaces (before the rebuild), `onHit` on a value served again,
+    * both under that lock. */
+  final class FingerprintMemo[V](release: V => Unit = (_: V) => (),
+      onHit: V => Unit = (_: V) => ()) {
+    private final class Slot { var entry: Option[(String, V)] = None }
+    private val slots = scala.collection.concurrent.TrieMap
+      .empty[(String, Seq[String], Any), Slot]
+    def apply(spark: SparkSession, paths: Seq[String], disc: Any = ())(
+        build: => V): V = {
       val fp = paths.map(fileFingerprint).mkString("|")
-      m.get(key) match {
-        case Some((`fp`, v)) => v
-        case _ =>
-          val v = build
-          m.put(key, (fp, v))
-          v
+      val slot = slots.getOrElseUpdate(
+        (spark.sparkContext.applicationId, paths, disc), new Slot)
+      slot.synchronized {
+        slot.entry match {
+          case Some((`fp`, v)) => onHit(v); v
+          case prev =>
+            // release BEFORE build: a persisted frame's cache entry is
+            // matched by plan, and a re-read of the same path plans the
+            // same, so the rebuild would otherwise be served old blocks
+            slot.entry = None
+            prev.foreach { case (_, old) => release(old) }
+            val v = build
+            slot.entry = Some((fp, v))
+            v
+        }
       }
     }
+    /** Slots held — one per (application, paths, discriminator). */
+    private[graft] def size: Int = slots.size
   }
 
   /** One row per value of `table(key)`: a driver-side lookup table

@@ -224,27 +224,23 @@ object Acl {
     * built from the DIMENSION-sized distinct source set (bounded
     * collect, the FilteredLabels convention), not a join, because a
     * pushed filter must be a literal predicate. */
-  /** The compiled tenant source IN-list, memoized per (application,
-    * dataset content, policy values) like the quantizer artifacts: a
-    * policy compiler resolves tenant → source list ONCE per
-    * (dataset, policy) (it is dimension-sized policy metadata,
+  /** The compiled tenant source IN-list, one [[graft.Util.FingerprintMemo]]
+    * slot per (documents file, policy values) like the quantizer
+    * artifacts: a policy compiler resolves tenant → source list ONCE
+    * per (dataset, policy) (it is dimension-sized policy metadata,
     * |sources| values), and every ACL read after that pays only the
-    * pruned scan. The fingerprint key makes in-place dataset
-    * regeneration recompile instead of serving a stale list; the
-    * policy values in the key make a config edit recompile too. */
-  private val tenantSrcCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(String, String, Long, Long), Seq[String]]
+    * pruned scan. An in-place dataset regeneration recompiles and
+    * replaces the stale list; a config edit compiles into its own
+    * slot. */
+  private[graft] val tenantSrcMemo = new graft.Util.FingerprintMemo[Seq[String]]
 
   def aclRowFilter(spark: SparkSession, sfDir: String): DataFrame = {
     // policy compile: two store-snapshot lookups (the Variable.get
     // surface) — the values parameterize a pushed literal predicate
     val tmod = Config.getLong(spark, "ACL_TENANT_MOD", 3L)
     val tenant = Config.getLong(spark, "ACL_VIEW_TENANT", 1L)
-    val key = (spark.sparkContext.applicationId,
-      s"$sfDir#${graft.Util.fileFingerprint(s"$sfDir/documents.parquet")}",
-      tmod, tenant)
-    val tenantSources = tenantSrcCache.getOrElseUpdate(key,
+    val tenantSources = tenantSrcMemo(spark,
+        Seq(s"$sfDir/documents.parquet"), (tmod, tenant))(
       Tables.documents(spark, sfDir)
         .select(col("source")).distinct()
         .filter(tenantOfSource(lit(tmod)) === tenant)

@@ -38,8 +38,7 @@ object Dedup {
     *    seconds).
     */
   private[ops] def shingled(spark: SparkSession, sfDir: String): DataFrame =
-    Flow.sharedScanOf(spark, s"shingled:$sfDir",
-        graft.Util.fileFingerprint(s"$sfDir/documents.parquet")) {
+    Flow.sharedScanOf(spark, "shingled", Seq(s"$sfDir/documents.parquet")) {
       import spark.implicits._
       val parallelism = spark.sparkContext.defaultParallelism
       Tables.documents(spark, sfDir)
@@ -58,8 +57,8 @@ object Dedup {
     * signature computation is the index artifact; neither consumer
     * re-runs the shingle stage. */
   private[ops] def minhashBuckets(spark: SparkSession, sfDir: String): DataFrame =
-    Flow.sharedScanOf(spark, s"minhash_buckets:$sfDir",
-        graft.Util.fileFingerprint(s"$sfDir/documents.parquet")) {
+    Flow.sharedScanOf(spark, "minhash_buckets",
+        Seq(s"$sfDir/documents.parquet")) {
       import spark.implicits._
       shingled(spark, sfDir).select(col("doc_id"), col("hs"))
         .as[(Long, Array[Long])]
@@ -471,8 +470,7 @@ object Dedup {
     * session and read by both [[ngramJaccard]] and [[containment]]
     * (which differ only in the final similarity metric). */
   private def intersections(spark: SparkSession, sfDir: String): DataFrame =
-    Flow.sharedScanOf(spark, s"ngram_pairs:$sfDir",
-        graft.Util.fileFingerprint(s"$sfDir/documents.parquet")) {
+    Flow.sharedScanOf(spark, "ngram_pairs", Seq(s"$sfDir/documents.parquet")) {
       val kept = keptPostings(spark, sfDir)
       val cnt = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       kept.select(col("doc_id").as("da"), col("s"))
@@ -490,8 +488,7 @@ object Dedup {
     * [[ngramJaccard]] and [[containment]] (persist-once via the D3
     * registry; see the comment in ngramJaccard). */
   private def keptPostings(spark: SparkSession, sfDir: String): DataFrame =
-    Flow.sharedScanOf(spark, s"ngram_kept:$sfDir",
-        graft.Util.fileFingerprint(s"$sfDir/documents.parquet")) {
+    Flow.sharedScanOf(spark, "ngram_kept", Seq(s"$sfDir/documents.parquet")) {
       val sh = shingled(spark, sfDir)
         .select(col("doc_id"), explode(col("shingles")).as("s"))
       val wS = org.apache.spark.sql.expressions.Window.partitionBy(col("s"))

@@ -1,6 +1,5 @@
 package graft.ops
 
-import scala.collection.concurrent.TrieMap
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.Duration
 import scala.concurrent.ExecutionContext.Implicits.global
@@ -77,60 +76,37 @@ object Flow {
        CROSS JOIN (SELECT count(1) > 0 AS ok FROM events)
        WHERE ok ORDER BY event_type"""
 
-  /** D3 — persist-once registry: one shared upstream scan feeds many
-    * downstream branches without re-reading (dags/Backups.py:142-153).
-    * Catalyst does not cache across actions; this does. Slots are keyed
-    * per session so a cached frame from a stopped session is never
-    * handed to a new one. File-backed dataset artifacts go through
+  /** D3 — persist-once: one shared upstream scan feeds many downstream
+    * branches without re-reading (dags/Backups.py:142-153). Catalyst
+    * does not cache across actions; this does. `mk` derives the frame
+    * named `name` from `paths`; it is persisted once per (session,
+    * name, paths) in a [[graft.Util.FingerprintMemo]] slot — keyed on
+    * the session object, so another session (a `newSession()`, a new
+    * application) is never handed this one's frame. An in-place
+    * regeneration of `paths` rebuilds the frame and unpersists the
+    * superseded copy, so the cache neither serves stale data nor
+    * accumulates dead persisted copies. An in-flight query reading the
+    * superseded frame recomputes from the regenerated files — inherent
+    * to content rotation. File-backed dataset artifacts go through
     * [[graft.Artifacts]] instead. */
-  private val shared = TrieMap.empty[String, (String, DataFrame)]
-  private val sharedLocks = TrieMap.empty[String, Object]
-
-  /** Content-aware persist-once: `prefix` names the derived frame,
-    * `contentKey` fingerprints its input files
-    * ([[graft.Util.fileFingerprint]]). An in-place dataset
-    * regeneration rotates the key, which REBUILDS the frame and
-    * unpersists the superseded entry — the cache can neither serve
-    * stale data nor accumulate dead persisted copies across
-    * regenerations. The slot is (session, prefix) → (contentKey,
-    * frame), mutated under a per-slot lock, so evict + insert is one
-    * atomic replace: a concurrent caller still building under a
-    * superseded key can never resurrect its stale frame after the
-    * rotation's sweep (the r8-flagged check-then-act race). An
-    * in-flight query reading the superseded frame recomputes from the
-    * regenerated files — inherent to content rotation; correctness is
-    * preserved because the content key it returns data FOR is gone. */
-  def sharedScanOf(spark: SparkSession, prefix: String, contentKey: String)(
-      mk: => DataFrame): DataFrame = {
-    val slot = s"${System.identityHashCode(spark)}:$prefix"
-    val lock = sharedLocks.getOrElseUpdate(slot, new Object)
-    lock.synchronized {
-      shared.get(slot) match {
-        case Some((ck, df)) if ck == contentKey =>
-          // self-heal: an external spark.catalog.clearCache() (the
-          // bench's session-aging guard, a user tidying the session)
-          // evicts our blocks behind this registry's back — without a
-          // re-persist every later consumer would silently recompute
-          // the shared stage per action (r10: t_decontam read 3× its
-          // baseline exactly this way)
-          if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-            df.persist()
-          df
-        case prev =>
-          prev.foreach { case (_, df) =>
-            try df.unpersist() catch { case _: IllegalStateException => () }
-          }
-          val df = mk.persist()
-          shared.put(slot, (contentKey, df))
-          df
-      }
-    }
-  }
+  def sharedScanOf(spark: SparkSession, name: String, paths: Seq[String])(
+      mk: => DataFrame): DataFrame =
+    sharedScans(spark, paths, (spark, name))(mk.persist())
+  private[graft] val sharedScans = new FingerprintMemo[DataFrame](
+    release = df =>
+      try df.unpersist() catch { case _: IllegalStateException => () },
+    // self-heal: an external spark.catalog.clearCache() (the bench's
+    // session-aging guard, a user tidying the session) evicts the
+    // blocks behind the memo's back — without a re-persist every later
+    // consumer would silently recompute the shared stage per action
+    // (r10: t_decontam read 3× its baseline exactly this way)
+    onHit = df =>
+      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+        df.persist())
 
   // D3 — two branches over one persisted upstream.
   def d3SharedReuse(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = sharedScanOf(spark, s"events:$sfDir",
-      graft.Util.fileFingerprint(s"$sfDir/events.parquet"))(
+    val base = sharedScanOf(spark, "events", Seq(s"$sfDir/events.parquet"))(
       Tables.events(spark, sfDir)
         .select(col("user_id"), col("event_type"), col("ts")))
     val errs = base.filter(col("event_type") === "error")

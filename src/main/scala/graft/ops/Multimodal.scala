@@ -430,8 +430,7 @@ object Multimodal {
     }.reduce(_ + _)
 
   private def phashIndex(spark: SparkSession): DataFrame =
-    Flow.sharedScanOf(spark, s"mm_phash:${MultimodalFixtures.Dir}",
-      graft.Util.fileFingerprint(MultimodalFixtures.Dir))(
+    Flow.sharedScanOf(spark, "mm_phash", Seq(MultimodalFixtures.Dir))(
       decoded(spark).select(col("file"), col("phash")))
 
   def mmPhashNear(spark: SparkSession, sfDir: String): DataFrame = {
@@ -507,10 +506,7 @@ object Multimodal {
     * the shared (file, phash) projection is the same persisted scan
     * all phash consumers read. */
   def mmPairDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val ph = Flow.sharedScanOf(spark, s"mm_phash:${MultimodalFixtures.Dir}",
-      graft.Util.fileFingerprint(MultimodalFixtures.Dir))(
-      decoded(spark).select(col("file"), col("phash")))
-    val paired = ph.join(captions(spark), "file")
+    val paired = phashIndex(spark).join(captions(spark), "file")
       .select(col("file"), col("phash"), captionFp(col("caption")).as("fp"))
     val bands = paired.select(col("file"), col("phash"), col("fp"),
       phashBandCols(col("phash"))
@@ -1147,9 +1143,8 @@ object Multimodal {
     * fingerprints as a registry artifact, built once per (session,
     * fixture fingerprint): the audio sibling of [[phashIndex]]. */
   private def audioContourIndex(spark: SparkSession): DataFrame =
-    Flow.sharedScanOf(spark,
-        s"mm_audio_contour_index:${MultimodalFixtures.AudioContourDir}",
-        graft.Util.fileFingerprint(MultimodalFixtures.ensureAudioContour())) {
+    Flow.sharedScanOf(spark, "mm_audio_contour_index",
+        Seq(MultimodalFixtures.ensureAudioContour())) {
       import spark.implicits._
       contourRows(spark.read.format("binaryFile")
         .load(MultimodalFixtures.AudioContourDir)
@@ -1284,9 +1279,8 @@ object Multimodal {
     * (vid* + scn* animated assets) as a registry artifact — the video
     * sibling of [[phashIndex]] / [[audioContourIndex]]. */
   private def videoSigIndex(spark: SparkSession): DataFrame =
-    Flow.sharedScanOf(spark,
-        s"mm_video_sig_index:${MultimodalFixtures.Dir}",
-        graft.Util.fileFingerprint(MultimodalFixtures.ensure())) {
+    Flow.sharedScanOf(spark, "mm_video_sig_index",
+        Seq(MultimodalFixtures.ensure())) {
       import spark.implicits._
       spark.read.format("binaryFile").load(MultimodalFixtures.Dir)
         .select(regexp_extract(col("path"), "[^/]+$", 0).as("file"),
@@ -1473,9 +1467,8 @@ object Multimodal {
     * built on the SAME phash registry artifact and the caption
     * table. */
   private def pairIndex(spark: SparkSession): DataFrame =
-    Flow.sharedScanOf(spark,
-        s"mm_pair_index:${MultimodalFixtures.Dir}",
-        graft.Util.fileFingerprint(MultimodalFixtures.ensure())) {
+    Flow.sharedScanOf(spark, "mm_pair_index",
+        Seq(MultimodalFixtures.ensure())) {
       phashIndex(spark).filter(isMmBase)
         .join(captions(spark), "file")
         .select(col("file").as("base_file"),

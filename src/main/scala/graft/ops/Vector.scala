@@ -52,7 +52,7 @@ object Vector {
     * neither re-reads nor broadcasts them. */
   private[graft] def queryVecs(spark: SparkSession,
       sfDir: String): Seq[QueryVec] =
-    queryVecMemo(spark, Seq(s"$sfDir/embeddings.parquet")) {
+    queryVecMemo(spark, embeddingsFile(sfDir)) {
       import spark.implicits._
       val ids = (QueryIds.map(_.toLong) ++
         graft.ops.Text.DenseQueryVecs.map(_._2)).distinct
@@ -243,36 +243,30 @@ object Vector {
   private[graft] def quantizerK(n: Long): Int =
     math.max(8L, (n + QuantizerCellTarget - 1) / QuantizerCellTarget).toInt
 
-  /** [[quantizerK]] for the embeddings corpus at `sfDir`; the count is
-    * memoized per (application, dataset) so the k lookup costs one
-    * count() job per session, not one per query. */
-  private val corpusNCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
-  /** Corpus row count, memoized per (application, dataset content) —
-    * one count() job per session, shared by the k derivation and every
+  /** The memo path of every embeddings-derived driver value below
+    * (corpus size, trained centroids and codebooks, exact-search ground
+    * truths): each is a [[FingerprintMemo]] slot on this file, so an
+    * in-place regeneration of the corpus retrains or recounts — and
+    * replaces the stale value — instead of validating against stale
+    * ground truth. */
+  private def embeddingsFile(sfDir: String): Seq[String] =
+    Seq(s"$sfDir/embeddings.parquet")
+
+  /** Corpus row count, one count() job per (application, embeddings
+    * fingerprint), shared by the [[quantizerK]] derivation and every
     * gate needing the corpus size. */
+  private[graft] val corpusNMemo = new FingerprintMemo[Long]
   private[graft] def corpusN(spark: SparkSession, sfDir: String): Long =
-    corpusNCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dataKey(sfDir)),
+    corpusNMemo(spark, embeddingsFile(sfDir))(
       Tables.embeddings(spark, sfDir).count())
   private[graft] def corpusK(spark: SparkSession, sfDir: String): Int =
     quantizerK(corpusN(spark, sfDir))
 
-  /** Trained coarse-quantizer centroids, memoized per (application,
-    * sfDir, k, iters) like the PQ codebooks — the persisted half of the
-    * index. Keys are the applicationId string, not the SparkSession, so
-    * stopped sessions are not retained by the cache. */
-  private val centCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int, Int), Array[(Int, Array[Double])]]
-
-  /** Cache-key component for the per-session index artifacts (trained
-    * codebooks, centroids, exact-search ground truths): sfDir plus a
-    * cheap fingerprint of the embeddings table's files (name, size,
-    * mtime). If data at sfDir is regenerated within the same
-    * application, the fingerprint changes and the artifact retrains
-    * instead of silently validating against stale ground truth. */
-  private[graft] def dataKey(sfDir: String): String =
-    s"$sfDir#${graft.Util.fileFingerprint(s"$sfDir/embeddings.parquet")}"
+  /** Trained coarse-quantizer centroids per (tag, k, iters) — the
+    * persisted half of the index. The slot key holds the applicationId
+    * string, not the SparkSession, so stopped sessions are not
+    * retained. */
+  private[graft] val centMemo = new FingerprintMemo[Array[(Int, Array[Double])]]
 
   def kmeansCentroids(spark: SparkSession, sfDir: String, k: Int,
       iters: Int): Array[(Int, Array[Double])] =
@@ -289,8 +283,7 @@ object Vector {
       k: Int, iters: Int,
       pred: Option[org.apache.spark.sql.Column], tag: String = "")
       : Array[(Int, Array[Double])] =
-    centCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dataKey(sfDir) + tag, k, iters), {
+    centMemo(spark, embeddingsFile(sfDir), (tag, k, iters)) {
     import spark.implicits._
     val base = Tables.embeddings(spark, sfDir)
     val vecs = pred.fold(base)(base.filter)
@@ -352,7 +345,7 @@ object Vector {
         .map { case (c, (acc, n)) => (c, acc.map(_ / n)) }.sortBy(_._1)
     }
     centroids
-  })
+  }
 
   /** ANN through the trained quantizer: query probes only its own cell.
     * Implementation-specific float iteration makes this rows-only (no
@@ -888,7 +881,6 @@ object Vector {
     * (every corpus vector assigned exactly once across base + delta). */
   private def appendGates(spark: SparkSession, sfDir: String,
       assigned: DataFrame): DataFrame = {
-    import spark.implicits._
     val nCorpus = corpusN(spark, sfDir) // memoized — no per-call scan
     val completeness = assigned
       .agg(count(lit(1)).as("n_total"),
@@ -898,11 +890,7 @@ object Vector {
           .as("assign_complete"))
     val probe = probeCells(spark, sfDir, assigned)
       .select(col("qid"), col("vec_id"))
-    val brute = cosineBruteCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dataKey(sfDir)),
-      annBruteTopk(spark, sfDir).select(col("qid"), col("vec_id"))
-        .as[(Long, Long)].collect().toSeq)
-      .toDF("qid", "vec_id")
+    val brute = cosineBruteTopk(spark, sfDir)
     probe.join(brute, Seq("qid", "vec_id"))
       .groupBy(col("qid"))
       .agg(count(lit(1)).as("hits"))
@@ -1260,8 +1248,8 @@ object Vector {
   }
 
   /** Exact brute-force cosine top-10 over the serve query set — the
-    * recall ground truth. Memoized per (application, dataset) like
-    * [[l2BruteTopk]] and the IVF gate's [[cosineBruteCache]]: the
+    * recall ground truth. Memoized per embeddings fingerprint like
+    * [[l2BruteTopk]] and [[cosineBruteTopk]]: the
     * collected result is 10 rows per serve query (feed-bounded, never
     * corpus-bounded), and BOTH serving legs' gates consult it — one
     * corpus sweep per session instead of one per gate invocation
@@ -1269,24 +1257,22 @@ object Vector {
     * have). Return contract: `(qid, vec_id)` only — the memo keeps
     * membership, not scores, so a caller needing `sim_e4` must
     * re-score those pairs itself. */
-  private val serveBruteCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Seq[(Long, Long)]]
+  private[graft] val serveBruteMemo = new FingerprintMemo[Seq[(Long, Long)]]
   private[graft] def serveBruteTopk(spark: SparkSession,
       sfDir: String): DataFrame = {
     import spark.implicits._
-    serveBruteCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dataKey(sfDir)), {
-        val emb = withNorm2(spark, sfDir)
-        val qs = broadcast(emb.filter(isServeQuery)
-          .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-            col("nrm2").as("na")))
-        val pairs = emb.crossJoin(qs)
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("sim",
-            dot("qv", "embedding") / (sqrt(col("na")) * sqrt(col("nrm2"))))
-        topk(pairs, 10).select(col("qid"), col("vec_id"))
-          .as[(Long, Long)].collect().toSeq
-      }).toDF("qid", "vec_id")
+    serveBruteMemo(spark, embeddingsFile(sfDir)) {
+      val emb = withNorm2(spark, sfDir)
+      val qs = broadcast(emb.filter(isServeQuery)
+        .select(col("vec_id").as("qid"), col("embedding").as("qv"),
+          col("nrm2").as("na")))
+      val pairs = emb.crossJoin(qs)
+        .filter(col("vec_id") =!= col("qid"))
+        .withColumn("sim",
+          dot("qv", "embedding") / (sqrt(col("na")) * sqrt(col("nrm2"))))
+      topk(pairs, 10).select(col("qid"), col("vec_id"))
+        .as[(Long, Long)].collect().toSeq
+    }.toDF("qid", "vec_id")
   }
 
   // -- PQ-coded serving leg (r17 verdict next-round #4) ----------------------
@@ -1576,7 +1562,7 @@ object Vector {
     * the persist gate and the RAG dense leg all assume it immutable),
     * while the retract twins' whole point is scrubbing cell
     * directories in place — they get their own copy to mutate. The
-    * kmeans train itself is memoized per (application, dataset), so
+    * kmeans train itself is memoized per embeddings fingerprint, so
     * the only duplicated work is the assignment map + one partitioned
     * write (metadata-only — this copy stays vector-free because the
     * retract gates audit membership, never similarity payloads). */
@@ -2434,17 +2420,17 @@ object Vector {
     * are bit-identical at any partition count. Returns books(m)(k) =
     * centroid. Driver traffic per iteration is M*K centroids (~8 KB) —
     * independent of corpus size. */
-  /** Trained-codebook cache (the "persist the index" step of a real
+  /** Trained-codebook memo (the "persist the index" step of a real
     * deployment): training is deterministic, so memoizing per
-    * (session, sfDir, iters) is observationally identical — it spares
-    * the gate + topk queries a redundant retrain. */
-  private val bookCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), Array[Array[Array[Double]]]]
+    * (application, embeddings fingerprint, iters) is observationally
+    * identical — it spares the gate + topk queries a redundant
+    * retrain. */
+  private[graft] val bookMemo =
+    new FingerprintMemo[Array[Array[Array[Double]]]]
 
   def pqTrain(spark: SparkSession, sfDir: String, iters: Int)
       : Array[Array[Array[Double]]] =
-    bookCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dataKey(sfDir), iters),
+    bookMemo(spark, embeddingsFile(sfDir), iters)(
       pqTrainUncached(spark, sfDir, iters))
 
   private[graft] def pqTrainUncached(spark: SparkSession, sfDir: String, iters: Int)
@@ -2589,17 +2575,14 @@ object Vector {
   /** Exact L2 top-k per query (ground truth for the PQ/IVF-PQ recall
     * gates). The collected result is k rows per query id — an index-
     * build artifact like the codebooks — so it is memoized per
-    * (session, sfDir, k) and the gates that share it (`ann_pq_` and
-    * `ann_ivfpq_recall_gate`) pay for one corpus sweep, not one each. */
-  private val bruteCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), Seq[(Long, Long)]]
-  private val cosineBruteCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Seq[(Long, Long)]]
+    * (application, embeddings fingerprint, k) and the gates that share
+    * it (`ann_pq_` and `ann_ivfpq_recall_gate`) pay for one corpus
+    * sweep, not one each. */
+  private[graft] val l2BruteMemo = new FingerprintMemo[Seq[(Long, Long)]]
   private def l2BruteTopk(spark: SparkSession, sfDir: String, k: Int)
       : DataFrame = {
     import spark.implicits._
-    val rows = bruteCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dataKey(sfDir), k), {
+    val rows = l2BruteMemo(spark, embeddingsFile(sfDir), k) {
       val emb = Tables.embeddings(spark, sfDir)
       val qs = emb.filter(col("vec_id").isin(QueryIds.map(Int.box): _*))
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -2615,8 +2598,22 @@ object Vector {
         .filter(col("rank") <= k)
         .select(col("qid"), col("vec_id"))
         .as[(Long, Long)].collect().toSeq
-    })
+    }
     rows.toDF("qid", "vec_id")
+  }
+
+  /** Exact cosine top-10 of [[annBruteTopk]] as `(qid, vec_id)`, the
+    * ground truth of both IVF recall gates, memoized like
+    * [[l2BruteTopk]] (3 queries × 10 rows); the registered
+    * ann_brute_topk query itself stays uncached so its bench row keeps
+    * measuring the real sweep. */
+  private[graft] val cosineBruteMemo = new FingerprintMemo[Seq[(Long, Long)]]
+  private def cosineBruteTopk(spark: SparkSession, sfDir: String)
+      : DataFrame = {
+    import spark.implicits._
+    cosineBruteMemo(spark, embeddingsFile(sfDir))(
+      annBruteTopk(spark, sfDir).select(col("qid"), col("vec_id"))
+        .as[(Long, Long)].collect().toSeq).toDF("qid", "vec_id")
   }
 
   /** Oracle gate for PQ (same pattern as approx_distinct_check): the
@@ -2666,16 +2663,8 @@ object Vector {
     * recall/cost knob, so the floor is intentionally lower than the
     * multi-probe gates). */
   def annIvfKmeansRecallGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     val ivf = annIvfKmeans(spark, sfDir).select(col("qid"), col("vec_id"))
-    // ground truth memoized like l2BruteTopk's (3 queries × 10 rows);
-    // the registered ann_brute_topk query itself stays uncached so its
-    // bench row keeps measuring the real sweep.
-    val brute = cosineBruteCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dataKey(sfDir)),
-      annBruteTopk(spark, sfDir).select(col("qid"), col("vec_id"))
-        .as[(Long, Long)].collect().toSeq)
-      .toDF("qid", "vec_id")
+    val brute = cosineBruteTopk(spark, sfDir)
     ivf.join(brute, Seq("qid", "vec_id"))
       .groupBy(col("qid"))
       .agg(count(lit(1)).as("hits"))

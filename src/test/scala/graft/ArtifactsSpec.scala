@@ -133,7 +133,10 @@ class ArtifactsSpec extends SparkSuite {
     val aa = copyOf(root, "Aa", keepTimes = true)
     val bb = copyOf(root, "BB", keepTimes = true)
     assert(aa.hashCode == bb.hashCode, "guard: the paths must collide")
-    assert(Vector.dataKey(aa).hashCode == Vector.dataKey(bb).hashCode,
+    // the old in-memory memo key, `<sfDir>#<embeddings fingerprint>`
+    def oldKey(d: String): String =
+      s"$d#${Util.fileFingerprint(s"$d/embeddings.parquet")}"
+    assert(oldKey(aa).hashCode == oldKey(bb).hashCode,
       "guard: equal fingerprints keep the old 32-bit keys colliding")
     val feeds = Seq(aa, bb).map(Vector.serveFeedDir(spark, _))
     val sinks = Seq(aa, bb).map { d =>
@@ -187,10 +190,11 @@ class ArtifactsSpec extends SparkSuite {
 
   test("no 32-bit hash in src/main/scala/graft/{ops,streaming}") {
     // artifact and checkpoint keys use the full-path md5
-    // (Util.md5Hex / Artifacts.path): a 32-bit String.hashCode or
-    // MurmurHash3 tag lets two datasets share — or vacuum — each
-    // other's directories
-    val banned = """\.hashCode|MurmurHash3""".r
+    // (Util.md5Hex / Artifacts.path) and in-memory slots the object
+    // itself: a 32-bit String.hashCode, MurmurHash3 or
+    // System.identityHashCode tag lets two datasets (or two sessions)
+    // share — or vacuum — each other's entries
+    val banned = """\.hashCode|MurmurHash3|identityHashCode""".r
     val files = Seq("ops", "streaming").flatMap { sub =>
       Files.walk(Paths.get(s"src/main/scala/graft/$sub")).iterator().asScala
         .filter(_.toString.endsWith(".scala")).toSeq

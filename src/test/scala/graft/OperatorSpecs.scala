@@ -2106,15 +2106,23 @@ class FlowSpec extends SparkSuite {
 
   test("sharedScanOf serves the cache on a stable key, rebuilds and evicts on rotation") {
     import spark.implicits._
-    val v1 = Flow.sharedScanOf(spark, "t_rot", "k1")(Seq(1).toDF("v"))
+    val path = s"${TestFixtureRoot.T}/rot/t.parquet"
+    def stage(v: Int): Unit =
+      Seq(v).toDF("v").coalesce(1).write.mode("overwrite").parquet(path)
+    // the generation literal keeps the two frames' plans apart: the
+    // cache matches by plan, and both read the same path
+    def read(gen: Int) = spark.read.parquet(path).withColumn("gen", lit(gen))
+    stage(1)
+    val v1 = Flow.sharedScanOf(spark, "t_rot", Seq(path))(read(1))
     assert(v1.storageLevel.useMemory)
-    // stable content key: the maker is NOT re-invoked (cached copy served)
-    val again = Flow.sharedScanOf(spark, "t_rot", "k1")(Seq(2).toDF("v"))
+    // stable file content: the maker is NOT re-invoked (cached copy served)
+    val again = Flow.sharedScanOf(spark, "t_rot", Seq(path))(Seq(2).toDF("v"))
     assert(again.collect().map(_.getInt(0)).toSeq == Seq(1))
-    // rotated content key (an in-place regeneration): rebuilt fresh,
-    // and the superseded persisted copy is released
-    val v2 = Flow.sharedScanOf(spark, "t_rot", "k2")(Seq(3).toDF("v"))
-    assert(v2.collect().map(_.getInt(0)).toSeq == Seq(3))
+    // the file rewritten in place rotates its fingerprint: rebuilt
+    // fresh, and the superseded persisted copy is released
+    stage(3)
+    val v2 = Flow.sharedScanOf(spark, "t_rot", Seq(path))(read(2))
+    assert(v2.collect().map(r => (r.getInt(0), r.getInt(1))).toSeq == Seq((3, 2)))
     assert(v1.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "superseded entry must be unpersisted")
   }
