@@ -26,6 +26,8 @@ object OptProbe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // queries are built directly, not through SparkEntry.queries
+      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def t(label: String)(body: => Long): Unit = {

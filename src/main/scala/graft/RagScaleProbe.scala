@@ -28,6 +28,8 @@ object RagScaleProbe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // queries are built directly, not through SparkEntry.queries
+      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def time[T](body: => T): (Double, T) = {
@@ -81,6 +83,8 @@ object DecontamScaleProbe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // queries are built directly, not through SparkEntry.queries
+      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.functions.{col, pmod, lit}

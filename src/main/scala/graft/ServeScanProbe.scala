@@ -54,6 +54,8 @@ object ServeScanProbe {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // queries are built directly, not through SparkEntry.queries
+      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -17,8 +17,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.Validate.v1Freshness(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, QFn] =
+  /** One entry per implemented operator from SURVEY.md §2. Each
+    * query is built after [[plans.Plans.install]] — the one install
+    * point of the custom optimizer rules and planner strategies for a
+    * session built without `spark.sql.extensions`. */
+  def queries: Map[String, QFn] = registered.map { case (name, fn) =>
+    name -> ((spark: SparkSession, sfDir: String) => {
+      plans.Plans.install(spark)
+      fn(spark, sfDir)
+    })
+  }
+
+  private def registered: Map[String, QFn] =
     ops.Validate.queries ++
     ops.Relational.queries ++
     ops.Semi.queries ++

@@ -381,7 +381,6 @@ object Flow {
     * bounded by the plan horizon (minutes in the window), never by
     * data volume. */
   def d4BackfillPlan(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.Plans.install(spark)
     val cron = Cron.parse("0 */6 * * *")
     val (start, end) = ("2024-01-01 00:00:00", "2024-02-01 00:00:00")
     val ticks = spark.range(1).select(explode(expr(

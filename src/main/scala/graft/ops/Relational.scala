@@ -166,7 +166,6 @@ object Relational {
   // per (partition, customer) instead of every order, and no map-side
   // sort runs (PlansSpec pins the rewrite and its equality).
   def windowRank(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.Plans.install(spark)
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     Tables.orders(spark, sfDir)

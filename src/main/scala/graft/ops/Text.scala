@@ -746,13 +746,6 @@ object Text {
   private[graft] def docStats(spark: SparkSession, sfDir: String): DataFrame =
     graft.Artifacts.read(spark, s"${lexIndexDir(spark, sfDir)}/doc_stats")
 
-  /** Collection totals of the lexical index — ONE row
-    * (n_docs, dl_total): doc count and total token occurrences
-    * (query-likelihood's c_total ≡ dl_total — both are `sum(tf)` over
-    * the whole tf table). Broadcast-sized by construction. */
-  private[graft] def lexTotals(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.read(spark, s"${lexIndexDir(spark, sfDir)}/totals")
-
   /** Build-once root of the lexical index artifact: `tf/` plus the
     * statistics tables every production inverted index persists next
     * to its postings (df/cf per term, dl per doc, collection totals —
@@ -1639,7 +1632,7 @@ object Text {
   // PMI bigram collocations: corpus-level association mining (the
   // phrase-vocabulary step of a tokenizer/corpus build). Three bounded
   // shuffles — bigram counts, unigram counts, and the final top-k — and
-  // the corpus totals join in as broadcast scalars, so the plan is the
+  // the corpus totals enter as literals, so the plan is the
   // same shape at 100 TB. PMI is computed with one identically-ordered
   // double expression in both engines (single ln, products only), so
   // the e4 fixed-point ranking is bit-equal.
@@ -1660,15 +1653,17 @@ object Text {
         .as("bg"))
       .select(col("bg.w1"), col("bg.w2"))
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n12"))
-    // explicit broadcast on the 1-row aggregate (the v7Ratio /
-    // histPercentiles convention): never rely on AQE to keep a
-    // cross join of singletons out of a full nested loop
-    val totals = lexTotals(spark, sfDir).select(col("dl_total").as("t"))
-      .crossJoin(broadcast(bi.agg(sum(col("n12")).as("b"))))
+    // the corpus totals are literals from the index snapshot: t is
+    // dl_total, and b = dl_total − n_docs, because a doc of dl tokens
+    // holds dl − 1 bigrams and n_docs counts exactly the docs with a
+    // token (doc_stats derives from tf; doc_id is the documents key).
+    // No one-row side is joined.
+    val snap = lexSnapshot(spark, sfDir)
     val scored = bi
       .join(uni.select(col("w").as("w1"), col("n").as("n1")), "w1")
       .join(uni.select(col("w").as("w2"), col("n").as("n2")), "w2")
-      .crossJoin(broadcast(totals))
+      .withColumn("t", typedLit(snap.dlTotal))
+      .withColumn("b", typedLit(snap.dlTotal.map(_ - snap.nDocs)))
       .filter(col("n12") >= 3)
       .withColumn("pmi_e4", e4(log(
         (col("n12").cast("double") * col("t") * col("t")) /
@@ -2059,8 +2054,8 @@ object Text {
   // surprisal -ln(n_w / T) is floored to e4 fixed point PER TOKEN, so
   // the per-doc sum is an exact integer — deterministic under any
   // partitioning (a raw double sum would be order-dependent). Two
-  // bounded shuffles (vocab count, per-doc sum); the corpus total joins
-  // as a broadcast scalar.
+  // bounded shuffles (vocab count, per-doc sum); the corpus total is a
+  // literal from the index snapshot.
   private def docSurprisal(spark: SparkSession, sfDir: String): DataFrame = {
     // r18 OPT: the LM's vocabulary counts and token total ARE the
     // lexical index's cf / dl_total (identical tokenization, see
@@ -2072,8 +2067,8 @@ object Text {
     val tf = termFreqs(spark, sfDir).withColumnRenamed("term", "w")
     val vocab = termStats(spark, sfDir)
       .select(col("term").as("w"), col("cf").as("n"))
-    val total = lexTotals(spark, sfDir).select(col("dl_total").as("t"))
-    tf.join(vocab, "w").crossJoin(broadcast(total))
+    tf.join(vocab, "w")
+      .withColumn("t", typedLit(lexSnapshot(spark, sfDir).dlTotal))
       .withColumn("surprisal_e4",
         floor(-log(lit(1.0) * col("n") / col("t")) * lit(10000.0)))
       .groupBy(col("doc_id"))

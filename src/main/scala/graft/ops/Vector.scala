@@ -99,11 +99,12 @@ object Vector {
     * makes the final cut. Ties break on vec_id exactly like that
     * window — output is bit-identical to the unpruned formulation.
     * `asc` = smaller score is better (distances); descending =
-    * similarities. */
+    * similarities. The session plans GroupTopK through the strategy
+    * [[graft.plans.Plans.install]] adds (SparkEntry.queries installs
+    * it before building each query). */
   private[graft] def topkLocal(df: DataFrame, scoreCol: String, k: Int,
       asc: Boolean, carry: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
-    graft.plans.Plans.install(df.sparkSession)
     val proj = df.select(
       (Seq("qid", "vec_id", scoreCol) ++ carry).map(col): _*)
     val lp = proj.queryExecution.analyzed
@@ -350,21 +351,40 @@ object Vector {
   /** ANN through the trained quantizer: query probes only its own cell.
     * Implementation-specific float iteration makes this rows-only (no
     * SQL oracle); recall vs. brute force is asserted in VectorSpec. */
-  def annIvfKmeans(spark: SparkSession, sfDir: String): DataFrame =
-    probeCells(spark, sfDir, kmeansAssign(spark, sfDir, k = corpusK(spark, sfDir), iters = 3))
+  def annIvfKmeans(spark: SparkSession, sfDir: String): DataFrame = {
+    val k = corpusK(spark, sfDir)
+    // the assignment is `nearest` of the memoised centroids, so each
+    // fixed query's cell is the same call on its own vector
+    val cs = kmeansCentroids(spark, sfDir, k, iters = 3)
+    val qcells = annQueryVecs(spark, sfDir)
+      .map(q => q.qid -> nearest(cs)(q.qv.toArray)).toMap
+    probeCells(spark, sfDir, kmeansAssign(spark, sfDir, k, iters = 3), qcells)
+  }
 
-  /** The IVF probe given a (vec_id, cell) assignment — shared by the
-    * in-memory path ([[annIvfKmeans]]) and the persisted-artifact path
-    * ([[annIndexPersist]]) so the two can never drift apart (the
-    * agreement gate compares THEM, not two copies of the same code). */
+  /** The cell each fixed query holds in a data-derived `(vec_id, cell)`
+    * assignment — one pushed `vec_id IN` read of |[[QueryIds]]| rows.
+    * A query the assignment lacks (retracted) probes nothing. */
+  private def queryCells(cells: DataFrame): Map[Long, Int] = {
+    import cells.sparkSession.implicits._
+    cells.filter(col("vec_id").isin(QueryIds.map(Int.box): _*))
+      .select(col("vec_id"), col("cell")).as[(Long, Int)].collect().toMap
+  }
+
+  /** The IVF probe given a (vec_id, cell) assignment and each fixed
+    * query's cell in it — shared by the in-memory path
+    * ([[annIvfKmeans]]) and the index-lifecycle gates so the two can
+    * never drift apart (the agreement gate compares THEM, not two
+    * copies of the same code). The query vectors enter as literals,
+    * each exploded onto the rows of its own cell. */
   private def probeCells(spark: SparkSession, sfDir: String,
-      cells: DataFrame): DataFrame = {
-    val emb = withNorm2(spark, sfDir).join(cells, "vec_id")
-    val qs = emb.filter(col("vec_id").isin(QueryIds.map(Int.box): _*))
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-        col("cell").as("qcell"), col("nrm2").as("na"))
-    val pairs = emb.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("qid") && col("cell") === col("qcell"))
+      cells: DataFrame, qcells: Map[Long, Int]): DataFrame = {
+    val byCell = annQueryVecs(spark, sfDir)
+      .flatMap(q => qcells.get(q.qid).map(_ -> q)).groupBy(_._1)
+      .map { case (c, qs) => c -> qs.map(_._2) }
+    val pairs = withNorm2(spark, sfDir).join(cells, "vec_id")
+      .withColumn("q", explodeLookup(byCell, col("cell")))
+      .select(col("*"), col("q.*")).drop("q")
+      .filter(col("vec_id") =!= col("qid"))
       .withColumn("dot", dot("qv", "embedding"))
       .withColumn("sim", col("dot") / (sqrt(col("na")) * sqrt(col("nrm2"))))
     topk(pairs, 10)
@@ -888,7 +908,7 @@ object Vector {
       .select(least(col("n_total"), lit(nCorpus)).as("n_assigned_capped"),
         (col("n_total") === nCorpus && col("n_distinct") === nCorpus)
           .as("assign_complete"))
-    val probe = probeCells(spark, sfDir, assigned)
+    val probe = probeCells(spark, sfDir, assigned, queryCells(assigned))
       .select(col("qid"), col("vec_id"))
     val brute = cosineBruteTopk(spark, sfDir)
     probe.join(brute, Seq("qid", "vec_id"))
@@ -1636,7 +1656,7 @@ object Vector {
   private def indexProbeGatesOver(spark: SparkSession, sfDir: String,
       live: DataFrame, audit: DataFrame,
       corpusFilter: org.apache.spark.sql.Column): DataFrame = {
-    val probe = probeCells(spark, sfDir, live)
+    val probe = probeCells(spark, sfDir, live, queryCells(live))
       .select(col("qid"), col("vec_id"))
     val brute = topk(scored(spark, sfDir, sameLabelOnly = false,
       corpusFilter = Some(corpusFilter)), 10)
@@ -2513,10 +2533,8 @@ object Vector {
       k: Int = 10): DataFrame = {
     import spark.implicits._
     val books = pqTrain(spark, sfDir, iters = 3)
-    val qs = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id").isin(QueryIds.map(Int.box): _*))
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
+    val qs = annQueryVecs(spark, sfDir).map(q => (q.qid, q.qv.toArray))
+      .toArray
     // luts(q)(m*PqK + code) = ||q_m - c_{m,code}||^2
     val luts: Array[(Long, Array[Double])] = qs.map { case (qid, qv) =>
       val lut = new Array[Double](PqM * PqK)
@@ -2546,12 +2564,7 @@ object Vector {
       .filter(col("crank") <= candC)
       .select(col("qid"), col("vec_id"))
     // Exact re-rank of the bounded candidate set.
-    val emb = Tables.embeddings(spark, sfDir)
-    val qv = emb.filter(col("vec_id").isin(QueryIds.map(Int.box): _*))
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = cand
-      .join(broadcast(qv), "qid")
-      .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
+    val exact = exactCandidates(spark, sfDir, cand)
       .as[(Long, Long, Array[Float], Array[Float])]
       .map { case (id, qid, q, v) => (qid, id, l2(q, v)) }
       .toDF("qid", "vec_id", "dist")
@@ -2562,6 +2575,18 @@ object Vector {
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("vec_id"))
       .orderBy(col("qid"), col("rank"))
+  }
+
+  /** `(vec_id, qid, qv, embedding)` of each `(qid, vec_id)` candidate
+    * — the exact re-rank's input. The query vector is a plan literal
+    * looked up by qid; the candidate's vector is joined from the
+    * corpus. */
+  private def exactCandidates(spark: SparkSession, sfDir: String,
+      cand: DataFrame): DataFrame = {
+    val qvOf = annQueryVecs(spark, sfDir).map(q => q.qid -> Seq(q.qv)).toMap
+    cand.withColumn("qv", explodeLookup(qvOf, col("qid")))
+      .join(Tables.embeddings(spark, sfDir)
+        .select(col("vec_id"), col("embedding")), "vec_id")
   }
 
   private def l2(a: Array[Float], b: Array[Float]): Double = {
@@ -2583,10 +2608,9 @@ object Vector {
       : DataFrame = {
     import spark.implicits._
     val rows = l2BruteMemo(spark, embeddingsFile(sfDir), k) {
-      val emb = Tables.embeddings(spark, sfDir)
-      val qs = emb.filter(col("vec_id").isin(QueryIds.map(Int.box): _*))
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val pairs = emb.crossJoin(broadcast(qs))
+      val pairs = Tables.embeddings(spark, sfDir)
+        .withColumn("q", explode(typedLit(annQueryVecs(spark, sfDir))))
+        .select(col("*"), col("q.*")).drop("q")
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id"), col("qv"), col("embedding"))
         .as[(Long, Long, Array[Float], Array[Float])]
@@ -2789,10 +2813,8 @@ object Vector {
           Array.tabulate(PqM)(m => pqNearest(books(m), v, m * PqSub)))
       }
       .toDF("vec_id", "cell", "codes")
-    val qs = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id").isin(QueryIds.map(Int.box): _*))
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
+    val qs = annQueryVecs(spark, sfDir).map(q => (q.qid, q.qv.toArray))
+      .toArray
     // per query: ADC LUT + the nProbe coarse cells it probes
     val plans: Array[(Long, Set[Int], Array[Double])] = qs.map { case (qid, qv) =>
       val probed = cents.map { case (cid, c) =>
@@ -2825,12 +2847,7 @@ object Vector {
       .withColumn("crank", row_number().over(wC))
       .filter(col("crank") <= candC)
       .select(col("qid"), col("vec_id"))
-    val emb = Tables.embeddings(spark, sfDir)
-    val qv = emb.filter(col("vec_id").isin(QueryIds.map(Int.box): _*))
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = cand
-      .join(broadcast(qv), "qid")
-      .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
+    val exact = exactCandidates(spark, sfDir, cand)
       .as[(Long, Long, Array[Float], Array[Float])]
       .map { case (id, qid, q, v) => (qid, id, l2(q, v)) }
       .toDF("qid", "vec_id", "dist")

@@ -20,6 +20,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => RangeJoinBinning)
     ext.injectOptimizerRule(_ => RankFilterToGroupTopK)
     ext.injectPlannerStrategy(_ => GroupTopKStrategy)
+    ext.injectPlannerStrategy(_ => SmallSortStrategy)
     ext.injectFunction((
       FunctionIdentifier("dot_f32"),
       new ExpressionInfo(classOf[DotF32].getName, "dot_f32"),

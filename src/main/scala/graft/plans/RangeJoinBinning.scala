@@ -139,8 +139,10 @@ object RangeJoinBinning extends Rule[LogicalPlan] with PredicateHelper {
 }
 
 /** Session-level install without `spark.sql.extensions` (the driver
-  * owns SparkSession construction in Verify/Bench, so queries install
-  * into the live session). Idempotent. */
+  * owns SparkSession construction in Verify/Bench/perfbench):
+  * [[graft.SparkEntry.queries]] calls [[Plans.install]] before
+  * building each query, so a query plans with the same rules whichever
+  * queries the session ran before it. Idempotent. */
 object Plans {
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
@@ -152,8 +154,8 @@ object Plans {
     spark.experimental.extraOptimizations =
       cur ++ want.filterNot(cur.contains)
     val strats = spark.experimental.extraStrategies
-    if (!strats.contains(GroupTopKStrategy))
-      spark.experimental.extraStrategies = strats :+ GroupTopKStrategy
+    spark.experimental.extraStrategies = strats ++
+      Seq(GroupTopKStrategy, SmallSortStrategy).filterNot(strats.contains)
   }
 
   /** Events joined to 6-hour daily maintenance windows on a pure range
@@ -161,7 +163,6 @@ object Plans {
     * rule installed it plans as an equi-join on 1-hour bins + residual
     * filter (see PlansSpec plan assertions). */
   def rangeJoinBinned(spark: SparkSession, sfDir: String): DataFrame = {
-    install(spark)
     val e = Tables.events(spark, sfDir)
     val iv = e.select(date_trunc("day", col("ts")).as("lo")).distinct()
       .withColumn("hi", col("lo") + expr("INTERVAL 6 HOURS"))
@@ -192,7 +193,6 @@ object Plans {
     * beyond its first query. Hours with zero active sessions drop out
     * (inner join), mirrored in the oracle. */
   def sessionConcurrency(spark: SparkSession, sfDir: String): DataFrame = {
-    install(spark)
     val sess = Tables.events(spark, sfDir)
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
@@ -240,7 +240,6 @@ object Plans {
     * is a window over the ≤ 25 survivor rows, not the input. */
   def topkGroupedExec(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
-    install(spark)
     val base = Tables.orders(spark, sfDir)
       .select(col("o_orderpriority"),
         Util.cents(col("o_totalprice")).cast("long").as("price_cents"),

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
@@ -14,23 +10,6 @@ import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
   * `acl_audit` scans the corpus once, and the retrieval queries take
   * their fixed query sets and index statistics as literals. */
 class ConstructionJobsSpec extends SparkSuite {
-
-  /** `body`'s result and the number of Spark jobs started while it ran. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    ListenerDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerDrain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("read-only queries construct their DataFrame without a Spark job") {
     val queries = Seq("acl_audit", "acl_row_filter", "config_dynamic_key",
@@ -111,6 +90,29 @@ class ConstructionJobsSpec extends SparkSuite {
         .crossJoin(org.apache.spark.sql.functions.broadcast(
           Tables.documents(spark, sf).groupBy().count()))
       assert(literalSides(banned.queryExecution.executedPlan).size == 2)
+    }
+  }
+
+  test("the IVF and PQ probes take the fixed query vectors as literals") {
+    // before: a scan of the query rows broadcast onto the corpus — a
+    // Cross join for the IVF probe, an inner join for the re-ranks
+    Util.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+      Seq("ann_index_persist", "ann_pq_recall_gate",
+          "ann_ivfpq_recall_gate").foreach { q =>
+        val plan = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
+        val queryScans = plan.collect {
+          case b: BroadcastExchangeExec => b.collect {
+            case s: FileSourceScanExec if s.metadata.get("PushedFilters")
+                .exists(_.contains("In(vec_id")) => s
+          }
+        }.flatten
+        val cross = plan.collect {
+          case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+              if j.joinType == org.apache.spark.sql.catalyst.plans.Cross => j
+        }
+        assert(queryScans.isEmpty && cross.isEmpty,
+          s"$q broadcasts a query-vector scan:\n$plan")
+      }
     }
   }
 }

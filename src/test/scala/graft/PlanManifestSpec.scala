@@ -90,6 +90,15 @@ class PlanManifestSpec extends SparkSuite {
     val pointRead = "point-read IN-list size: the pushed shortlist id " +
       "count grows with the serve feed (shape identical)"
     val flips = Set("broadcasts", "exchanges", "joins")
+    // size-driven presentation sort: the final ORDER BY's input is
+    // estimated within spark.sql.adaptive.advisoryPartitionSizeInBytes
+    // (64 MB) at sf0.001 and sorts in one partition (SmallSortStrategy),
+    // while at 10x the estimate crosses it and the sort keeps its
+    // range exchange (+1 exchange, same operators otherwise)
+    val rangeSort = "presentation sort: the ORDER BY input estimate " +
+      "crosses the 64 MB advisory partition size at 10x, so the " +
+      "one-partition sort becomes a range exchange"
+    val sorted = Set("exchanges")
     Map(
       // corpus_drop_lineage un-enrolled r18: its near-dup and contam
       // inputs are now file-backed registry artifacts, so the join
@@ -107,8 +116,8 @@ class PlanManifestSpec extends SparkSuite {
       "q12_priority" -> (flips + "pushed", s"$flip; $tsLit"),
       "q15_top_supplier" -> (Set("pushed"), tsLit),
       "q18_big_orders" -> (flips, flip + " (the documented flagship)"),
-      "q1_agg" -> (Set("pushed"), tsLit),
-      "q20_surplus" -> (Set("pushed"), tsLit),
+      "q1_agg" -> (sorted + "pushed", s"$tsLit; $rangeSort"),
+      "q20_surplus" -> (sorted + "pushed", s"$tsLit; $rangeSort"),
       "q22_windfall" -> (Set("pushed"), tsLit),
       "q3_top_orders" -> (Set("pushed"), tsLit),
       "q4_priority_check" -> (flips + "pushed", s"$flip; $tsLit"),
@@ -116,10 +125,29 @@ class PlanManifestSpec extends SparkSuite {
       "q6_sql_revenue" -> (Set("pushed"), tsLit),
       "stream_dedup_index" -> (flips, flip),
       "stream_dedup_retract" -> (flips, flip),
-      "t_decontam" -> (flips, flip),
-      "t_decontam_bloom" -> (flips, flip),
+      "t_decontam" -> (flips, s"$flip; $rangeSort"),
+      "t_decontam_bloom" -> (flips, s"$flip; $rangeSort"),
       "t_doc_overlap_pairs" -> (flips, flip),
-      "t_ngram_novelty" -> (flips, flip))
+      "t_ngram_novelty" -> (flips, flip),
+      "agg_cube" -> (sorted, rangeSort),
+      "agg_grouping_sets" -> (sorted, rangeSort),
+      "agg_rollup" -> (sorted, rangeSort),
+      "config_driven_freshness" -> (sorted, rangeSort),
+      "d2_sequential_gate" -> (sorted, rangeSort),
+      "distinct_count" -> (sorted, rangeSort),
+      "er_fuzzy_block" -> (sorted, rangeSort),
+      "heavy_hitters" -> (sorted, rangeSort),
+      "join_outer_agg" -> (sorted, rangeSort),
+      "k4_retention_run" -> (sorted, rangeSort),
+      "layout_zorder" -> (sorted, rangeSort),
+      "nullsafe_join" -> (sorted, rangeSort),
+      "q13_cust_dist" -> (sorted, rangeSort),
+      "rolling_distinct_users" -> (sorted, rangeSort),
+      "session_concurrency" -> (sorted, rangeSort),
+      "skew_salted_join" -> (sorted, rangeSort),
+      "unpivot_measures" -> (sorted, rangeSort),
+      "v12_psi_drift" -> (sorted, rangeSort),
+      "v7_ratio" -> (sorted, rangeSort))
   }
 
   test("PLANS_10X.json: scale-conditional plan drift is enrolled and " +
@@ -167,11 +195,21 @@ class PlanManifestSpec extends SparkSuite {
       "PLANS.json missing — run: sbt \"runMain graft.PlanDump\"")
     val committed = PlanManifest.parseJson(
       java.nio.file.Files.readString(path))
+    // A private copy of the dataset: every artifact the queries derive
+    // from it is built inside this call, with AQE off as PlanDump builds
+    // them, never reused from an earlier spec. Artifact file sizes feed
+    // size-conditional shapes (SmallSortStrategy's gate reads a join's
+    // size product over them), so reusing an artifact another spec
+    // built with AQE coalescing would make the manifest depend on
+    // which specs ran first.
+    val copy = java.nio.file.Files.createTempDirectory("planmanifest")
+    java.nio.file.Files.list(java.nio.file.Paths.get(sf))
+      .forEach(f => java.nio.file.Files.copy(f, copy.resolve(f.getFileName)))
     // AQE off for stable, inspectable shapes (PlanDump uses the same)
-    val current = graft.Util.withConf(spark,
+    val current = try graft.Util.withConf(spark,
         "spark.sql.adaptive.enabled", "false") {
-      PlanManifest.manifest(spark, "/root/testdata/sf0.001").toMap
-    }
+      PlanManifest.manifest(spark, copy.toString).toMap
+    } finally Util.deleteRecursively(copy.toFile)
     val allNames = (committed.keySet ++ current.keySet).toSeq.sorted
     val diffs = allNames.flatMap { name =>
       (committed.get(name), current.get(name)) match {

@@ -275,19 +275,28 @@ class PlansSpec extends SparkSuite {
     import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
       RangePartitioning}
     graft.Util.withConf(spark, "spark.sql.adaptive.enabled", "false") {
-      val plan = ops.Text.corpusShuffle(spark, sf)
+      def exchanges = ops.Text.corpusShuffle(spark, sf)
         .queryExecution.executedPlan
-      val ex = plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
-      assert(ex.nonEmpty, "exchanges must be visible (AQE off)")
-      val hashes = ex.collect { case h: HashPartitioning => h }
-      val ranges = ex.collect { case r: RangePartitioning => r }
+        .collect { case e: ShuffleExchangeExec => e.outputPartitioning }
       // the WORK exchange hashes on (epoch, shard); per-shard order is a
-      // LOCAL sort under the window. The single range exchange is the
-      // presentation ORDER BY — at scale the shard writer replaces it.
-      assert(hashes.size == 1 && ranges.size == 1 && ex.size == 2,
+      // LOCAL sort under the window. The presentation ORDER BY of this
+      // small result sorts in one partition (SmallSortStrategy).
+      val ex = exchanges
+      assert(ex.size == 1 && ex.head.isInstanceOf[HashPartitioning],
         s"exchanges: $ex")
-      assert(hashes.head.expressions.map(_.sql.toLowerCase).exists(_.contains("epoch")),
-        s"work exchange must key on epoch/shard: ${hashes.head}")
+      assert(ex.head.asInstanceOf[HashPartitioning].expressions
+          .map(_.sql.toLowerCase).exists(_.contains("epoch")),
+        s"work exchange must key on epoch/shard: ${ex.head}")
+      // past the advisory size the presentation sort is a range
+      // exchange again — at scale the shard writer replaces it
+      val big = graft.Util.withConf(spark,
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes", "1") {
+        exchanges
+      }
+      val hashes = big.collect { case h: HashPartitioning => h }
+      val ranges = big.collect { case r: RangePartitioning => r }
+      assert(hashes.size == 1 && ranges.size == 1 && big.size == 2,
+        s"exchanges: $big")
     }
   }
 
@@ -321,7 +330,7 @@ class PlansSpec extends SparkSuite {
   test("rank-filter rewrite: window_rank plans through GroupTopK, result exact") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     graft.Util.withConf(spark, "spark.sql.adaptive.enabled", "false") {
-      val df = ops.Relational.windowRank(spark, sf) // calls Plans.install
+      val df = ops.Relational.windowRank(spark, sf)
       val plan = df.queryExecution.executedPlan
       val nodes = plan.collect { case t: graft.plans.TopKPerGroupExec => t }
       // prune-only form: ONE flush-capped partial heap below the
@@ -465,12 +474,9 @@ class PlansSpec extends SparkSuite {
     // codebase convention (v7Ratio, histPercentiles, sourceKl): a
     // cross join against a singleton aggregate carries an explicit
     // broadcast() hint so the plan can never degrade to a full
-    // nested-loop when AQE is disabled. Pins the r10-audited sites.
+    // nested-loop when AQE is disabled. Pins the r10-audited site.
     graft.Util.withConf(spark, "spark.sql.adaptive.enabled", "false") {
-      Seq(
-        ops.Text.pmiBigrams(spark, sf),
-        ops.Flow.d2SequentialGate(spark, sf)
-      ).foreach { df =>
+      def joins(df: org.apache.spark.sql.DataFrame) = {
         val plan = df.queryExecution.executedPlan
         val bnl = plan.collect {
           case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j
@@ -478,9 +484,16 @@ class PlansSpec extends SparkSuite {
         val cart = plan.collect {
           case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c
         }
-        assert(bnl.nonEmpty, s"expected a broadcast cross join:\n${plan.toString.take(1500)}")
         assert(cart.isEmpty, "cartesian product must never appear at these sites")
+        (bnl, plan)
       }
+      val (bnl, plan) = joins(ops.Flow.d2SequentialGate(spark, sf))
+      assert(bnl.nonEmpty, s"expected a broadcast cross join:\n${plan.toString.take(1500)}")
+      // t_pmi_bigrams' corpus totals are literals from the lexical
+      // index snapshot: no one-row side is joined at all
+      val (pmiBnl, pmiPlan) = joins(ops.Text.pmiBigrams(spark, sf))
+      assert(pmiBnl.isEmpty,
+        s"t_pmi_bigrams joins a one-row side:\n${pmiPlan.toString.take(1500)}")
     }
   }
 
