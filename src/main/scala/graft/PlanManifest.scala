@@ -98,13 +98,11 @@ object PlanManifest {
   /** Fingerprint every registry query at `sfDir`. Queries whose
     * construction throws are recorded as `error:<class>` so the
     * manifest stays total. The session must have AQE disabled for
-    * stable shapes. The custom rules are installed first: several
-    * builders install them into the session as a side effect, so
-    * without this a rank-filter plan (agg_mode) would fingerprint
-    * differently depending on which queries the session ran before. */
+    * stable shapes. [[SparkEntry.queries]] installs the custom rules
+    * before each builder, so a query fingerprints the same whichever
+    * queries the session ran before it. */
   def manifest(spark: SparkSession, sfDir: String)
       : Seq[(String, Map[String, String])] = {
-    graft.plans.Plans.install(spark)
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (n, _) => Excluded(n) }
       .map { case (name, fn) =>

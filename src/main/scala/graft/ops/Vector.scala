@@ -357,29 +357,32 @@ object Vector {
     // fixed query's cell is the same call on its own vector
     val cs = kmeansCentroids(spark, sfDir, k, iters = 3)
     val qcells = annQueryVecs(spark, sfDir)
-      .map(q => q.qid -> nearest(cs)(q.qv.toArray)).toMap
+      .map(q => q.qid -> Seq(nearest(cs)(q.qv.toArray))).toMap
     probeCells(spark, sfDir, kmeansAssign(spark, sfDir, k, iters = 3), qcells)
   }
 
-  /** The cell each fixed query holds in a data-derived `(vec_id, cell)`
+  /** The cells each fixed query holds in a data-derived `(vec_id, cell)`
     * assignment — one pushed `vec_id IN` read of |[[QueryIds]]| rows.
-    * A query the assignment lacks (retracted) probes nothing. */
-  private def queryCells(cells: DataFrame): Map[Long, Int] = {
+    * A query the assignment lacks (retracted) probes nothing; one it
+    * holds twice (a faulty assignment, which the completeness gate
+    * reports) probes every cell it holds. */
+  private def queryCells(cells: DataFrame): Map[Long, Seq[Int]] = {
     import cells.sparkSession.implicits._
     cells.filter(col("vec_id").isin(QueryIds.map(Int.box): _*))
-      .select(col("vec_id"), col("cell")).as[(Long, Int)].collect().toMap
+      .select(col("vec_id"), col("cell")).as[(Long, Int)].collect()
+      .groupBy(_._1).map { case (q, cs) => q -> cs.map(_._2).toSeq }
   }
 
   /** The IVF probe given a (vec_id, cell) assignment and each fixed
-    * query's cell in it — shared by the in-memory path
+    * query's cells in it — shared by the in-memory path
     * ([[annIvfKmeans]]) and the index-lifecycle gates so the two can
     * never drift apart (the agreement gate compares THEM, not two
     * copies of the same code). The query vectors enter as literals,
     * each exploded onto the rows of its own cell. */
   private def probeCells(spark: SparkSession, sfDir: String,
-      cells: DataFrame, qcells: Map[Long, Int]): DataFrame = {
+      cells: DataFrame, qcells: Map[Long, Seq[Int]]): DataFrame = {
     val byCell = annQueryVecs(spark, sfDir)
-      .flatMap(q => qcells.get(q.qid).map(_ -> q)).groupBy(_._1)
+      .flatMap(q => qcells.getOrElse(q.qid, Nil).map(_ -> q)).groupBy(_._1)
       .map { case (c, qs) => c -> qs.map(_._2) }
     val pairs = withNorm2(spark, sfDir).join(cells, "vec_id")
       .withColumn("q", explodeLookup(byCell, col("cell")))

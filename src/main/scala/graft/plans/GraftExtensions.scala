@@ -8,7 +8,8 @@ import graft.functions.DotF32
 
 /** Cluster-wide engine install point:
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`
-  * wires the optimizer rule and the native SQL functions into every
+  * wires the optimizer rules and planner strategies ([[Plans.rules]],
+  * [[Plans.strategies]]) and the native SQL functions into every
   * session built from that config (the idiomatic Spark deployment of a
   * library-level engine — no code changes at call sites).
   *
@@ -17,10 +18,8 @@ import graft.functions.DotF32
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => RangeJoinBinning)
-    ext.injectOptimizerRule(_ => RankFilterToGroupTopK)
-    ext.injectPlannerStrategy(_ => GroupTopKStrategy)
-    ext.injectPlannerStrategy(_ => SmallSortStrategy)
+    Plans.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    Plans.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
     ext.injectFunction((
       FunctionIdentifier("dot_f32"),
       new ExpressionInfo(classOf[DotF32].getName, "dot_f32"),

@@ -148,14 +148,19 @@ object Plans {
   import org.apache.spark.sql.functions._
   import graft.{Tables, Util}
 
+  /** The custom optimizer rules and planner strategies — the one list
+    * both [[install]] and [[GraftExtensions]] add. */
+  val rules: Seq[Rule[LogicalPlan]] = Seq(RangeJoinBinning, RankFilterToGroupTopK)
+  val strategies: Seq[org.apache.spark.sql.execution.SparkStrategy] =
+    Seq(GroupTopKStrategy, SmallSortStrategy)
+
   def install(spark: SparkSession): Unit = synchronized {
     val cur = spark.experimental.extraOptimizations
-    val want = Seq(RangeJoinBinning, RankFilterToGroupTopK)
     spark.experimental.extraOptimizations =
-      cur ++ want.filterNot(cur.contains)
+      cur ++ rules.filterNot(cur.contains)
     val strats = spark.experimental.extraStrategies
-    spark.experimental.extraStrategies = strats ++
-      Seq(GroupTopKStrategy, SmallSortStrategy).filterNot(strats.contains)
+    spark.experimental.extraStrategies =
+      strats ++ strategies.filterNot(strats.contains)
   }
 
   /** Events joined to 6-hour daily maintenance windows on a pure range

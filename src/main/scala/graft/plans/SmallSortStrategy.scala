@@ -18,21 +18,34 @@ import org.apache.spark.sql.internal.SQLConf
   * the child's last stage.
   *
   * Gate: the sort is not streaming, and Spark estimates its input at
-  * `child.stats.sizeInBytes ≤ spark.sql.adaptive.advisoryPartitionSizeInBytes`
-  * — exactly the size up to which AQE would have coalesced the range
-  * exchange into one partition. Under AQE, replanning after each
-  * stage re-applies the gate on runtime stage statistics; a larger
-  * input keeps the range sort. No knob of its own: the threshold is
-  * Spark's existing advisory size (a test pins the range path by
-  * lowering it).
-  *
-  * Installed with the other planner extensions by [[Plans.install]]
-  * and [[GraftExtensions]]. */
+  * most [[oneTaskBytes]] — the largest shuffle AQE's partition
+  * coalescing always merges into one partition. Under AQE, replanning
+  * after each stage re-applies the gate on runtime stage statistics;
+  * a larger input keeps the range sort. No knob of its own: the
+  * threshold is read from Spark's coalescing settings (a test pins the
+  * range path by lowering `coalescePartitions.minPartitionSize`). */
 object SmallSortStrategy extends SparkStrategy {
+
+  /** AQE coalesces a shuffle of `S` bytes to a target size of
+    * `max(min(S / minPartitionNum, advisoryPartitionSizeInBytes),
+    * coalescePartitions.minPartitionSize)`. With Spark's default
+    * `coalescePartitions.parallelismFirst=true`, `minPartitionNum` is
+    * the default parallelism and one partition is guaranteed only up
+    * to `minPartitionSize` (1 MB); when AQE may coalesce down to one
+    * partition (`parallelismFirst=false`, or `minPartitionNum` 1) it is
+    * the larger of that and the advisory size (64 MB). */
+  def oneTaskBytes(conf: SQLConf): Long = {
+    val minSize = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    val keepsParallelism =
+      conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM)
+        .fold(conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))(_ > 1)
+    if (keepsParallelism) minSize
+    else minSize max conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+  }
+
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Sort(order, true, child, _) if !child.isStreaming &&
-        child.stats.sizeInBytes <=
-          SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) =>
+        child.stats.sizeInBytes <= oneTaskBytes(SQLConf.get) =>
       SortExec(order, global = true, CoalesceExec(1, planLater(child))) :: Nil
     case _ => Nil
   }

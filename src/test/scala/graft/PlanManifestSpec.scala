@@ -91,15 +91,57 @@ class PlanManifestSpec extends SparkSuite {
       "count grows with the serve feed (shape identical)"
     val flips = Set("broadcasts", "exchanges", "joins")
     // size-driven presentation sort: the final ORDER BY's input is
-    // estimated within spark.sql.adaptive.advisoryPartitionSizeInBytes
-    // (64 MB) at sf0.001 and sorts in one partition (SmallSortStrategy),
-    // while at 10x the estimate crosses it and the sort keeps its
-    // range exchange (+1 exchange, same operators otherwise)
+    // estimated within SmallSortStrategy.oneTaskBytes (1 MB, the size
+    // AQE always coalesces to one partition) at sf0.001 and sorts in
+    // one partition, while at 10x the estimate crosses it and the sort
+    // keeps its range exchange (+1 exchange, same operators otherwise)
     val rangeSort = "presentation sort: the ORDER BY input estimate " +
-      "crosses the 64 MB advisory partition size at 10x, so the " +
+      "crosses the 1 MB one-partition size at 10x, so the " +
       "one-partition sort becomes a range exchange"
     val sorted = Set("exchanges")
-    Map(
+    val rangeSorted = Seq(
+      "acl_masked_view", "acl_row_filter", "agg_by_hour", "agg_corr",
+      "agg_cube", "agg_decimal_exact", "agg_grouping_sets",
+      "agg_median", "agg_mode", "agg_rollup", "ann_brute_topk",
+      "ann_filtered_topk", "ann_ivf_topk", "ann_read_asof",
+      "approx_distinct_check", "approx_percentile_check",
+      "asof_attribution", "bitmap_semi_join", "cdc_merge",
+      "cohort_retention", "config_driven_freshness",
+      "corpus_build_pipeline", "corpus_shard_balance", "corpus_shuffle",
+      "d2_sequential_gate", "d3_shared_reuse", "dedup_exact",
+      "dedup_exact_hash", "dedup_keep_best", "dedup_substring_spans",
+      "dedup_url", "distinct_count", "emb_centroids", "emb_dim_stats",
+      "emb_norm_stats", "emb_quantize_int8", "exists_subquery",
+      "f11_json_filter", "fit_linreg_groups", "funnel_window_seq",
+      "k10_xml_roundtrip", "k11_schema_evolution", "k4_retention_plan",
+      "k4_retention_run", "k7_partitioned_write", "k7_pruned_read",
+      "k8_dsv2_roundtrip", "k9_orc_roundtrip", "layout_skipping_gain",
+      "layout_zorder", "mv_incremental_merge", "pivot_counts",
+      "resample_ffill", "resample_ohlc", "rolling_distinct_users",
+      "sample_hash", "sample_quota", "sample_stratified",
+      "sample_weighted", "scd2_intervals", "seq_transition_matrix",
+      "sessionize", "sessionize_native", "setop_except_all",
+      "setop_intersect_all", "sketch_union_rollup", "stream_dedup",
+      "stream_heavy_hitters", "stream_left_join",
+      "stream_session_window", "stream_sessionize", "t_bigram_logprob",
+      "t_bpe_fertility_gain", "t_char_entropy", "t_chunk",
+      "t_chunk_dedup", "t_curriculum_order", "t_dataloader_resume",
+      "t_dataset_card", "t_fingerprint", "t_html_extract",
+      "t_inverted_index", "t_kgram_sample", "t_lang_id",
+      "t_langid_eval", "t_mixture_plan", "t_normalize", "t_pack_bpe",
+      "t_pack_lossmask", "t_pack_sequences", "t_perplexity_buckets",
+      "t_pii_redact", "t_quality_score", "t_repetition", "t_source_kl",
+      "t_split_assign", "t_token_bpe", "t_token_count", "t_token_stats",
+      "t_tokenizer_fertility", "t_trigram_logprob", "t_winnowing_fps",
+      "topk_grouped_exec", "topk_grouped_heap", "tumbling_window_agg",
+      "udaf_geomean", "unpivot_measures", "v11_zscore_outliers",
+      "v12_psi_drift", "v13_seasonal_baseline", "v1_freshness",
+      "v2_folder_freshness", "v3_threshold", "v6_retention", "v7_ratio",
+      "variant_extract", "window_ffill", "window_lag_lead",
+      "window_ntile", "window_range_frame", "window_rank",
+      "window_running", "window_sliding", "window_zscore_trailing",
+      "winsorize_values")
+    rangeSorted.map(_ -> (sorted, rangeSort)).toMap ++ Map(
       // corpus_drop_lineage un-enrolled r18: its near-dup and contam
       // inputs are now file-backed registry artifacts, so the join
       // sides that used to flip broadcast<->SMJ at 10x read
@@ -117,37 +159,18 @@ class PlanManifestSpec extends SparkSuite {
       "q15_top_supplier" -> (Set("pushed"), tsLit),
       "q18_big_orders" -> (flips, flip + " (the documented flagship)"),
       "q1_agg" -> (sorted + "pushed", s"$tsLit; $rangeSort"),
-      "q20_surplus" -> (sorted + "pushed", s"$tsLit; $rangeSort"),
-      "q22_windfall" -> (Set("pushed"), tsLit),
+      "q20_surplus" -> (Set("pushed"), tsLit),
+      "q22_windfall" -> (sorted + "pushed", s"$tsLit; $rangeSort"),
       "q3_top_orders" -> (Set("pushed"), tsLit),
       "q4_priority_check" -> (flips + "pushed", s"$flip; $tsLit"),
       "q5_region_revenue" -> (Set("pushed"), tsLit),
       "q6_sql_revenue" -> (Set("pushed"), tsLit),
       "stream_dedup_index" -> (flips, flip),
       "stream_dedup_retract" -> (flips, flip),
-      "t_decontam" -> (flips, s"$flip; $rangeSort"),
-      "t_decontam_bloom" -> (flips, s"$flip; $rangeSort"),
+      "t_decontam" -> (flips, flip),
+      "t_decontam_bloom" -> (flips, flip),
       "t_doc_overlap_pairs" -> (flips, flip),
-      "t_ngram_novelty" -> (flips, flip),
-      "agg_cube" -> (sorted, rangeSort),
-      "agg_grouping_sets" -> (sorted, rangeSort),
-      "agg_rollup" -> (sorted, rangeSort),
-      "config_driven_freshness" -> (sorted, rangeSort),
-      "d2_sequential_gate" -> (sorted, rangeSort),
-      "distinct_count" -> (sorted, rangeSort),
-      "er_fuzzy_block" -> (sorted, rangeSort),
-      "heavy_hitters" -> (sorted, rangeSort),
-      "join_outer_agg" -> (sorted, rangeSort),
-      "k4_retention_run" -> (sorted, rangeSort),
-      "layout_zorder" -> (sorted, rangeSort),
-      "nullsafe_join" -> (sorted, rangeSort),
-      "q13_cust_dist" -> (sorted, rangeSort),
-      "rolling_distinct_users" -> (sorted, rangeSort),
-      "session_concurrency" -> (sorted, rangeSort),
-      "skew_salted_join" -> (sorted, rangeSort),
-      "unpivot_measures" -> (sorted, rangeSort),
-      "v12_psi_drift" -> (sorted, rangeSort),
-      "v7_ratio" -> (sorted, rangeSort))
+      "t_ngram_novelty" -> (flips, flip))
   }
 
   test("PLANS_10X.json: scale-conditional plan drift is enrolled and " +

@@ -287,10 +287,10 @@ class PlansSpec extends SparkSuite {
       assert(ex.head.asInstanceOf[HashPartitioning].expressions
           .map(_.sql.toLowerCase).exists(_.contains("epoch")),
         s"work exchange must key on epoch/shard: ${ex.head}")
-      // past the advisory size the presentation sort is a range
+      // past the one-partition size the presentation sort is a range
       // exchange again — at scale the shard writer replaces it
       val big = graft.Util.withConf(spark,
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes", "1") {
+          "spark.sql.adaptive.coalescePartitions.minPartitionSize", "1") {
         exchanges
       }
       val hashes = big.collect { case h: HashPartitioning => h }

@@ -11,13 +11,16 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import graft.plans.SmallSortStrategy
 
 /** [[SmallSortStrategy]]: a global sort whose input Spark estimates
-  * within the advisory partition size runs in one partition — no
-  * range-sampling job, no extra shuffle — and a larger one keeps the
-  * range exchange. Also the one install point: the registry installs
-  * the planner extensions before every builder. */
+  * within the size AQE always coalesces to one partition runs in one
+  * partition — no range-sampling job, no extra shuffle — and a larger
+  * one keeps the range exchange. Also the one install point: the
+  * registry installs the planner extensions before every builder. */
 class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private val Advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+  private val MinSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+  private val ParallelismFirst =
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst"
 
   /** Partitionings of every shuffle exchange in an executed plan,
     * query stages included (the AQE final plan after an action). */
@@ -44,17 +47,17 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     // the aggregate's map stage and the result stage; the range sort
     // added a sampling job and a map stage of its own
     assert(jobs == 2, s"$jobs jobs:\n$plan")
-    val (_, rangeJobs) = Util.withConf(spark, Advisory, "1") {
+    val (_, rangeJobs) = Util.withConf(spark, MinSize, "1") {
       jobsDuring(q(spark, sf).collect())
     }
     assert(rangeJobs == 4, s"$rangeJobs jobs with the range sort")
   }
 
-  test("an input over the advisory size keeps the range exchange, in " +
-      "the same row order") {
+  test("an input over the one-partition size keeps the range exchange, " +
+      "in the same row order") {
     val q = SparkEntry.queries("v1_freshness")
     val (small, smallPlan) = run(q(spark, sf))
-    val (big, bigPlan) = Util.withConf(spark, Advisory, "1") {
+    val (big, bigPlan) = Util.withConf(spark, MinSize, "1") {
       run(q(spark, sf))
     }
     assert(ranges(smallPlan).isEmpty, s"$smallPlan")
@@ -66,11 +69,36 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       val coalesced = q(spark, sf).queryExecution.executedPlan
       assert(coalesced.collect { case c: CoalesceExec => c }.nonEmpty &&
         ranges(coalesced).isEmpty, s"$coalesced")
-      val ranged = Util.withConf(spark, Advisory, "1") {
+      val ranged = Util.withConf(spark, MinSize, "1") {
         q(spark, sf).queryExecution.executedPlan
       }
       assert(ranges(ranged).size == 1, s"$ranged")
     }
+  }
+
+  test("the gate is the size AQE always coalesces to one partition") {
+    def gate(kv: (String, String)*): Long = {
+      val conf = new org.apache.spark.sql.internal.SQLConf
+      kv.foreach { case (k, v) => conf.setConfString(k, v) }
+      SmallSortStrategy.oneTaskBytes(conf)
+    }
+    // Spark's defaults: 1 MB
+    assert(gate() == (1L << 20))
+    // parallelismFirst (Spark's default) keeps the default parallelism
+    // above minPartitionSize: only a shuffle within it becomes one
+    // partition, however large the advisory size
+    assert(gate(ParallelismFirst -> "true", MinSize -> "1000",
+      Advisory -> "64m") == 1000L)
+    // without it AQE fills partitions up to the advisory size
+    assert(gate(ParallelismFirst -> "false", MinSize -> "1000",
+      Advisory -> "64m") == (64L << 20))
+    assert(gate(ParallelismFirst -> "false", MinSize -> "1000",
+      Advisory -> "10") == 1000L)
+    // an explicit minimum partition count overrides parallelismFirst
+    assert(gate(ParallelismFirst -> "true", MinSize -> "1000",
+      Advisory -> "64m",
+      "spark.sql.adaptive.coalescePartitions.minPartitionNum" -> "1") ==
+      (64L << 20))
   }
 
   test("an empty input sorts to 0 rows through CoalesceExec(1)") {
