@@ -693,14 +693,14 @@ object Text {
 
   /** BM25 retrieval: top-10 docs per query for a fixed query set — the
     * classic lexical-retrieval baseline TF-IDF lacks (term-frequency
-    * saturation via k1, doc-length normalization via b). One term
-    * explode feeds tf / df / dl in bounded-key aggregates; the query
-    * set prunes the tf table to query terms BEFORE the scoring joins,
-    * so the scored row count is O(query-term matches), not O(corpus
-    * postings). The query set with each term's df, and the corpus
-    * scalars (N, Σdl), enter the plan as literals from the index's
-    * [[lexSnapshot]]. Per-(doc,term) contributions floor to e4 and SUM AS
-    * INTEGERS per doc — partition-order-independent, and the oracle
+    * saturation via k1, doc-length normalization via b). The leg reads
+    * one table, the index's postings, each carrying its doc's dl; the
+    * query set prunes them to query terms BEFORE scoring, so the scored
+    * row count is O(query-term matches), not O(corpus postings). The
+    * query set with each term's df, and the corpus scalars (N, Σdl),
+    * enter the plan as literals from the index's [[lexSnapshot]].
+    * Per-(doc,term) contributions floor to e4 and SUM AS INTEGERS per
+    * doc — partition-order-independent, and the oracle
     * replays the identically-parenthesized arithmetic (the t_tfidf
     * ln-parity precedent). k1 = 1.2, b = 0.75. */
   /** The fixed retrieval query set — shared by [[bm25Topk]] and both
@@ -712,14 +712,12 @@ object Text {
     ("q3", "stream"), ("q3", "batch"),
     ("q4", "sort"), ("q4", "merge"), ("q4", "join"))
 
-  /** The corpus term-frequency table (doc_id, term, tf) — the lexical
+  /** The corpus postings table (doc_id, term, tf, dl) — the lexical
     * retrieval index artifact (D3 registry: ONE corpus explode per
-    * dataset). BM25's df/dl and query-likelihood's cf/collection
-    * totals all derive from it with bounded aggregates — tf rows are
-    * distinct (doc, term), so `count(1)` per term IS document
-    * frequency and `sum(tf)` per doc IS document length, exactly the
-    * quantities the un-factored formulation computed by re-exploding
-    * the corpus once per statistic per leg. */
+    * dataset). tf rows are distinct (doc, term), so `count(1)` per
+    * term IS document frequency, and every posting carries its doc's
+    * length `dl` (`sum(tf)` per doc — Lucene's norm, stored with the
+    * posting), so neither leg joins a per-doc table. */
   private[graft] def termFreqs(spark: SparkSession, sfDir: String): DataFrame =
     // FILE-backed, not a sharedScanOf persist (the docSurprisal
     // finding, measured here too): one action of the fusion/eval/
@@ -732,59 +730,65 @@ object Text {
 
   /** Per-TERM statistics of the lexical index — (term, df, cf):
     * document frequency (`count(1)` over the distinct (doc, term) tf
-    * rows) and collection frequency (`sum(tf)`). A retrieval query
-    * reads this with its query terms PUSHED into the parquet scan
-    * (`PushedFilters: In(term, ...)`) — at 100 TB the pre-r18
-    * alternative re-aggregated the full billion-term vocabulary per
+    * rows) and collection frequency (`sum(tf)`). The [[lexSnapshot]]
+    * reads the query terms' rows once per index generation, with the
+    * terms pushed into the scan (`PushedFilters: In(term, ...)`) — the
+    * pre-r18 alternative re-aggregated the full vocabulary per
     * invocation to use |query-terms| of the values. */
   private[graft] def termStats(spark: SparkSession, sfDir: String): DataFrame =
     graft.Artifacts.read(spark, s"${lexIndexDir(spark, sfDir)}/term_stats")
 
-  /** Per-DOC statistics of the lexical index — (doc_id, dl): document
-    * length in token occurrences (`sum(tf)` per doc — Lucene's norms
-    * file). Corpus-sized, so consumers JOIN it (never broadcast). */
-  private[graft] def docStats(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Artifacts.read(spark, s"${lexIndexDir(spark, sfDir)}/doc_stats")
-
-  /** Build-once root of the lexical index artifact: `tf/` plus the
-    * statistics tables every production inverted index persists next
-    * to its postings (df/cf per term, dl per doc, collection totals —
-    * Lucene's term/collection statistics and norms). The stats derive
-    * from the tf READ-BACK (not a re-explode), so they are exactly the
-    * aggregates the legs previously recomputed per invocation — same
-    * rows, same integers, one build (r18 optimization: the
-    * full-vocabulary df/cf aggregation and the full-corpus dl/totals
-    * passes leave the per-query path; a leg now scans its query
-    * terms' postings instead of the vocabulary). Committed as one
-    * [[graft.Artifacts]] directory, so a build torn between its writes
-    * rebuilds instead of serving a partial artifact, and a session
-    * indexing several corpora (the multi-corpus BpeSpec) keeps each
-    * one's index live. */
+  /** Build-once root of the lexical index artifact: `tf/` (postings
+    * with their doc's length) plus the statistics tables every
+    * production inverted index persists next to its postings (df/cf
+    * per term, collection totals — Lucene's term and collection
+    * statistics). The stats derive from the tf READ-BACK (not a
+    * re-explode), so they are exactly the aggregates the legs
+    * previously recomputed per invocation — same rows, same integers,
+    * one build. Committed as one [[graft.Artifacts]] directory, so a
+    * build torn between its writes rebuilds instead of serving a
+    * partial artifact, and a session indexing several corpora (the
+    * multi-corpus BpeSpec) keeps each one's index live.
+    *
+    * `tf` is written sorted by (doc_id, term) within partitions, each
+    * doc's postings in one file: doc_id and dl then run-length encode.
+    * A term-clustered layout would let a term-pushed scan skip row
+    * groups at corpus scale, but it is not used: sorted by
+    * (term, doc_id), the sf0.1 postings measured 381 KB against
+    * 154 KB, and at that size the table is one row group, so the
+    * pushed `In(term, ...)` filter prunes nothing either way. */
   private def lexIndexDir(spark: SparkSession, sfDir: String): String =
     graft.Artifacts.dir(spark, "graft_retrieval_tf", sfDir,
         Seq(s"$sfDir/documents.parquet")) { dir =>
+      // the full frame keeps the window's (doc_id, term) sort, which
+      // is the write order: one sort, no second one for the layout
+      val w = org.apache.spark.sql.expressions.Window
+      val perDoc = w.partitionBy(col("doc_id")).orderBy(col("term"))
+        .rowsBetween(w.unboundedPreceding, w.unboundedFollowing)
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), explode(tokens).as("term"))
         .filter(col("term") =!= "")
         .groupBy(col("doc_id"), col("term"))
         .agg(count(lit(1)).as("tf"))
+        .withColumn("dl", sum(col("tf")).over(perDoc))
+        .sortWithinPartitions(col("doc_id"), col("term"))
         .write.mode("overwrite").parquet(s"$dir/tf")
       val tf = Tables.parquet(spark, s"$dir/tf")
       tf.groupBy(col("term"))
         .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
         .write.mode("overwrite").parquet(s"$dir/term_stats")
-      tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-        .write.mode("overwrite").parquet(s"$dir/doc_stats")
       // raw whitespace-token length per doc (INCLUDING empty tokens —
       // the context-pack budget unit, len(string_split(...)) in the
       // oracle), from the documents scan: a doc of only separators has
       // no tf rows but a nonzero raw length, so this cannot derive
-      // from doc_stats
+      // from tf
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), size(tokens).cast("long").as("n_tokens"))
         .write.mode("overwrite").parquet(s"$dir/doc_len")
-      Tables.parquet(spark, s"$dir/doc_stats")
-        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_total"))
+      // n_docs counts the docs holding a token: a separator-only doc
+      // has no posting
+      tf.agg(countDistinct(col("doc_id")).as("n_docs"),
+          sum(col("tf")).as("dl_total"))
         .write.mode("overwrite").parquet(s"$dir/totals")
     }
 
@@ -795,8 +799,12 @@ object Text {
   private[graft] def docLen(spark: SparkSession, sfDir: String): DataFrame =
     graft.Artifacts.read(spark, s"${lexIndexDir(spark, sfDir)}/doc_len")
 
-  /** The tf postings of just the retrieval query terms — the pushed
-    * `In(term, ...)` scan every leg starts from. */
+  /** The tf postings of the retrieval query terms — the scan every leg
+    * starts from, with the terms pushed into it as
+    * `PushedFilters: In(term, ...)`. The pushed filter can only skip
+    * whole row groups: at sf0.1 the table is one row group, so the
+    * scan reads all of its 118,954 rows and the filter drops the
+    * others row by row. */
   private def queryTermFreqs(spark: SparkSession, sfDir: String): DataFrame =
     termFreqs(spark, sfDir)
       .filter(col("term").isin(RetrievalQueries.map(_._2).distinct: _*))
@@ -807,19 +815,18 @@ object Text {
     * holds. */
   private[graft] case class LexSnapshot(nDocs: Long, dlTotal: Option[Long],
       termStats: Map[String, (Long, Long)]) {
-    /** term → the queries holding it, with its df. */
-    def queriesOf: Map[String, Seq[QueryDf]] =
+    /** term → the queries holding it, with its df and cf. */
+    def queriesOf: Map[String, Seq[QueryTerm]] =
       RetrievalQueries.flatMap { case (q, t) =>
-        termStats.get(t).map { case (df, _) => t -> QueryDf(q, df) }
+        termStats.get(t).map { case (df, cf) => t -> QueryTerm(q, df, cf) }
       }.groupBy(_._1).map { case (t, v) => t -> v.map(_._2) }
-    /** query → its terms the index holds, with their cf. */
-    def termsOf: Map[String, Seq[TermCf]] =
+    /** query → the cf of each of its terms the index holds. */
+    def cfsOf: Map[String, Seq[Long]] =
       RetrievalQueries.flatMap { case (q, t) =>
-        termStats.get(t).map { case (_, cf) => q -> TermCf(t, cf) }
+        termStats.get(t).map { case (_, cf) => q -> cf }
       }.groupBy(_._1).map { case (q, v) => q -> v.map(_._2) }
   }
-  private[graft] case class QueryDf(query_id: String, df: Long)
-  private[graft] case class TermCf(term: String, cf: Long)
+  private[graft] case class QueryTerm(query_id: String, df: Long, cf: Long)
 
   /** [[LexSnapshot]] of the committed lexical index, read once per
     * index generation (two small scans: the one-row totals and the
@@ -846,17 +853,17 @@ object Text {
 
   /** [[bm25Topk]] without its final sort — the leg the fusions take. */
   private def bm25Ranked(spark: SparkSession, sfDir: String): DataFrame = {
-    // r18: df/dl/totals come from the index's persisted statistics
-    // tables instead of per-invocation full-vocabulary / full-corpus
-    // re-aggregation; the tf scan carries the query terms as
-    // PushedFilters (plans/r18/rag_*_{before,after}.txt). The query
+    // r18: df/totals come from the index's persisted statistics
+    // instead of per-invocation full-vocabulary / full-corpus
+    // re-aggregation (plans/r18/rag_*_{before,after}.txt). The query
     // set with each term's df is a literal map exploded onto the
-    // postings, and N / Σdl are literals (plans/pr6).
+    // postings, and N / Σdl are literals (plans/pr6); dl is on the
+    // posting, so the leg is one scan and no join.
     val snap = lexSnapshot(spark, sfDir)
     val contrib = queryTermFreqs(spark, sfDir)
       .withColumn("q", explodeLookup(snap.queriesOf, col("term")))
-      .select(col("doc_id"), col("tf"), col("q.query_id"), col("q.df"))
-      .join(docStats(spark, sfDir), Seq("doc_id"))
+      .select(col("doc_id"), col("tf"), col("dl"), col("q.query_id"),
+        col("q.df"))
       .withColumn("score_e4",
         floor(lit(10000.0) *
           log(lit(1.0) + (lit(snap.nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
@@ -942,35 +949,41 @@ object Text {
     * collection frequency drop out (P(t|C) = 0 has no finite ln). */
   /** The Dirichlet query-likelihood leg: per-query top-10
     * (query_id, rk, doc_id). Shared by [[ragFusionRrf]] and
-    * [[ragEvalRecall]]. */
+    * [[ragEvalRecall]].
+    *
+    * A candidate's score sums f_t(tf_{t,d}) over ALL its query's terms,
+    * with f_t(tf) = floor(1e4·ln((tf + μ·cf_t/Σdl) / (dl_d + μ))). It is
+    * computed as Σ_{t∈q, tf>0} [f_t(tf) − f_t(0)] + Σ_{t∈q} f_t(0): the
+    * first sum needs only the doc's matched postings, the second only
+    * dl and the query's cf literals. Both are exact integer sums of the
+    * same floored terms, so the score is the per-term formulation's to
+    * the unit, computed by one (query, doc) aggregate over the
+    * term-pushed postings with no join. */
   private[graft] def qlTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    // r18: dl/cf/c_total come from the index's persisted statistics
-    // (same integers as the former per-invocation aggregates); the
-    // left join resolving each (candidate, query-term) tf can see
-    // only query-term postings by construction, so it joins the
-    // term-pushed tf scan, not the full table. The query set and c_total
-    // are literals from the [[lexSnapshot]].
     val snap = lexSnapshot(spark, sfDir)
-    val tf = queryTermFreqs(spark, sfDir)
-    val cand = tf
-      .select(col("doc_id"),
+    def qlTermE4(tf: Column, cf: Column): Column =
+      floor(lit(10000.0) * log(
+        (tf + lit(2000.0) * cf / typedLit(snap.dlTotal)) /
+        (col("dl") + lit(2000.0)))).cast("long")
+    val gains = queryTermFreqs(spark, sfDir)
+      .select(col("doc_id"), col("tf"), col("dl"),
         explodeLookup(snap.queriesOf, col("term")).as("q"))
-      .select(col("q.query_id"), col("doc_id")).distinct()
-    // each candidate against every query term with its collection
-    // frequency (zero-cf terms drop: term_stats only holds terms with
-    // cf ≥ 1, so they are absent from the snapshot)
-    val contrib = cand
-      .withColumn("t", explodeLookup(snap.termsOf, col("query_id")))
-      .select(col("query_id"), col("doc_id"), col("t.term"), col("t.cf"))
-      .join(tf, Seq("doc_id", "term"), "left")
-      .join(docStats(spark, sfDir), Seq("doc_id"))
-      .withColumn("ql_term_e4",
-        floor(lit(10000.0) * log(
-          (coalesce(col("tf"), lit(0L)) +
-            lit(2000.0) * col("cf") / typedLit(snap.dlTotal)) /
-          (col("dl") + lit(2000.0)))).cast("long"))
-    val qlScored = contrib.groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("ql_term_e4")).as("ql_e4"))
+      .select(col("q.query_id"), col("doc_id"), col("dl"),
+        (qlTermE4(col("tf"), col("q.cf")) - qlTermE4(lit(0L), col("q.cf")))
+          .as("gain_e4"))
+    // every query term at tf = 0, per query (zero-cf terms drop:
+    // term_stats only holds terms with cf ≥ 1, so they are absent from
+    // the snapshot and from P(t|C) = 0's infinite ln)
+    val floorE4 = snap.cfsOf.toSeq.sortBy(_._1)
+      .foldLeft(lit(null).cast("long")) { case (other, (q, cfs)) =>
+        when(col("query_id") === q,
+          cfs.map(cf => qlTermE4(lit(0L), lit(cf))).reduce(_ + _))
+          .otherwise(other)
+      }
+    // dl is one value per doc, so grouping by it keeps the (query, doc)
+    // groups
+    val qlScored = gains.groupBy(col("query_id"), col("doc_id"), col("dl"))
+      .agg((sum(col("gain_e4")) + floorE4).as("ql_e4"))
     val wQl = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("ql_e4").desc, col("doc_id"))
@@ -1656,7 +1669,7 @@ object Text {
     // the corpus totals are literals from the index snapshot: t is
     // dl_total, and b = dl_total − n_docs, because a doc of dl tokens
     // holds dl − 1 bigrams and n_docs counts exactly the docs with a
-    // token (doc_stats derives from tf; doc_id is the documents key).
+    // token (the docs holding a posting; doc_id is the documents key).
     // No one-row side is joined.
     val snap = lexSnapshot(spark, sfDir)
     val scored = bi

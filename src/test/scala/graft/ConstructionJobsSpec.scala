@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, SparkPlan}
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 
 /** DataFrame construction of the read-only queries launches no
@@ -90,6 +90,58 @@ class ConstructionJobsSpec extends SparkSuite {
         .crossJoin(org.apache.spark.sql.functions.broadcast(
           Tables.documents(spark, sf).groupBy().count()))
       assert(literalSides(banned.queryExecution.executedPlan).size == 2)
+    }
+  }
+
+  test("a warm lexical retrieval call runs in at most 3 (t_bm25_topk) " +
+      "and 6 (rag_fusion_rrf) jobs with AQE on") {
+    // each leg reads the postings once: BM25 is its aggregate, its
+    // window and the result stage; the fusion adds QL's two and the
+    // dense leg's
+    val jobs = Util.withConf(spark, "spark.sql.adaptive.enabled", "true") {
+      Seq("t_bm25_topk" -> 3, "rag_fusion_rrf" -> 6).map { case (q, max) =>
+        SparkEntry.queries(q)(spark, sf).collect()
+        (q, jobsDuring(SparkEntry.queries(q)(spark, sf).collect())._2, max)
+      }
+    }
+    assert(jobs.forall { case (_, n, max) => n <= max },
+      "(query, jobs, limit) per warm call: " + jobs.mkString(", "))
+  }
+
+  /** Scans of the lexical postings (`tf`) that a broadcast reads in
+    * its own stage — a broadcast of an aggregate computed behind a
+    * shuffle reads the postings in that shuffle's stage instead. */
+  private def broadcastPostings(plan: SparkPlan): Seq[SparkPlan] = {
+    def ownStage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: ShuffleExchangeExec => Nil
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == "tf") => Seq(s)
+      case other => other.children.flatMap(ownStage)
+    }
+    plan.collect { case b: BroadcastExchangeExec => ownStage(b.child) }.flatten
+  }
+
+  test("the lexical legs broadcast no postings scan and read no doc_stats") {
+    val legs = Seq("t_bm25_topk", "rag_fusion_rrf", "rag_fusion_ivf",
+      "rag_context_pack", "rag_context_pack_ivf", "rag_eval_recall")
+    Util.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+      legs.foreach { q =>
+        val plan = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
+        val scans = plan.collect { case s: FileSourceScanExec =>
+          s.relation.location.rootPaths.map(_.getName)
+        }.flatten
+        assert(scans.contains("tf"),
+          s"$q: the walk must see the real plan, not an AQE leaf")
+        assert(!scans.contains("doc_stats"), s"$q scans doc_stats:\n$plan")
+        assert(broadcastPostings(plan).isEmpty,
+          s"$q broadcasts a postings scan:\n$plan")
+      }
+      // the check sees the shape it bans: the former QL leg's LEFT join
+      // of the candidates back onto the postings
+      val tf = graft.ops.Text.termFreqs(spark, sf)
+      val banned = tf.select(org.apache.spark.sql.functions.col("doc_id"))
+        .join(org.apache.spark.sql.functions.broadcast(tf), Seq("doc_id"), "left")
+      assert(broadcastPostings(banned.queryExecution.executedPlan).size == 1)
     }
   }
 

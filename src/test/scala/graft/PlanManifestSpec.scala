@@ -117,6 +117,7 @@ class PlanManifestSpec extends SparkSuite {
       "k4_retention_run", "k7_partitioned_write", "k7_pruned_read",
       "k8_dsv2_roundtrip", "k9_orc_roundtrip", "layout_skipping_gain",
       "layout_zorder", "mv_incremental_merge", "pivot_counts",
+      "rag_eval_recall", "rag_fusion_rrf",
       "resample_ffill", "resample_ohlc", "rolling_distinct_users",
       "sample_hash", "sample_quota", "sample_stratified",
       "sample_weighted", "scd2_intervals", "seq_transition_matrix",
@@ -124,7 +125,7 @@ class PlanManifestSpec extends SparkSuite {
       "setop_intersect_all", "sketch_union_rollup", "stream_dedup",
       "stream_heavy_hitters", "stream_left_join",
       "stream_session_window", "stream_sessionize", "t_bigram_logprob",
-      "t_bpe_fertility_gain", "t_char_entropy", "t_chunk",
+      "t_bm25_topk", "t_bpe_fertility_gain", "t_char_entropy", "t_chunk",
       "t_chunk_dedup", "t_curriculum_order", "t_dataloader_resume",
       "t_dataset_card", "t_fingerprint", "t_html_extract",
       "t_inverted_index", "t_kgram_sample", "t_lang_id",
