@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic synthetic-data generator for the above-sf0.1 scale
   * rehearsal (judge r12 item #4): reproduces the driver testdata's
@@ -184,7 +183,7 @@ object GenData {
 
   def events(spark: SparkSession, n: Long, users: Long): DataFrame = {
     import spark.implicits._
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
     val spanMs = 30L * 86400 * 1000
     val skew = zipfS
     spark.range(n).map { i =>
@@ -201,7 +200,7 @@ object GenData {
       supps: Long): DataFrame = {
     import spark.implicits._
     val day = 86400L * 1000
-    val d0 = java.sql.Timestamp.valueOf("1995-01-01 00:00:00").getTime
+    val d0 = java.time.Instant.parse("1995-01-01T00:00:00Z").toEpochMilli
     val skew = zipfS
     spark.range(orders).flatMap { o =>
       val u = us(6L, o)
@@ -234,7 +233,7 @@ object GenData {
     * reproduced verbatim-shaped. */
   def orders(spark: SparkSession, n: Long, customers: Long): DataFrame = {
     import spark.implicits._
-    val d0 = java.sql.Timestamp.valueOf("1995-01-01 00:00:00").getTime
+    val d0 = java.time.Instant.parse("1995-01-01T00:00:00Z").toEpochMilli
     val day = 86400L * 1000
     val prios = Array("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED",
       "5-LOW")
@@ -311,12 +310,7 @@ object GenData {
     val tables = if (args.length > 2) args(2).split(",").map(_.trim).toSet
       else Set("documents", "embeddings", "events", "lineitem",
         "orders", "part", "supplier", "customer", "nation", "region")
-    val spark = SparkSession.builder()
-      .appName("graft-gendata")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(conf = Map("spark.sql.shuffle.partitions" -> "32"))
     try {
       if (tables("documents"))
         documents(spark, 5000L * mult)

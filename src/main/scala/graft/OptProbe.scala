@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Component-timing probe behind OPTIMIZATION_r18.md: decomposes the
   * bench's heaviest query families into their stage artifacts and
   * times each stage separately (cold = first materialization of the
@@ -19,17 +17,7 @@ object OptProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val fams = if (args.length > 1) args.tail.toSet
       else Set("rag", "graph", "ann", "corpus")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // queries are built directly, not through SparkEntry.queries
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     def t(label: String)(body: => Long): Unit = {
       val t0 = System.nanoTime()
       val rows = body

@@ -201,14 +201,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.drop(1).headOption.getOrElse("PLANS.json")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(8, Map("spark.sql.adaptive.enabled" -> "false"))
     val m = PlanManifest.manifest(spark, sfDir)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
       PlanManifest.toJson(m))

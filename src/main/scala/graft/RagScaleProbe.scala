@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dense-retrieval-leg scaling probe (r15 verdict #1's rehearsal
   * half): times the brute-force dense leg ([[ops.Text.denseTopk]],
   * corpus×queries cosine) against the IVF-indexed leg
@@ -21,17 +19,7 @@ import org.apache.spark.sql.SparkSession
   */
 object RagScaleProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // queries are built directly, not through SparkEntry.queries
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     def time[T](body: => T): (Double, T) = {
       val t0 = System.nanoTime()
       val r = body
@@ -76,17 +64,7 @@ object RagScaleProbe {
   */
 object DecontamScaleProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // queries are built directly, not through SparkEntry.queries
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     import org.apache.spark.sql.functions.{col, pmod, lit}
     def time[T](body: => T): (Double, T) = {
       val t0 = System.nanoTime()

@@ -45,38 +45,30 @@ object SkewProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_zipf_10x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .appName("graft-skewprobe")
-      .master(s"local[$cpus]")
+    val spark = Session.local(conf = Map(
       // At 32 reducers a 5.7%-share hot key rides on a 3.1%-of-corpus
       // baseline partition — 2.8x the median, under AQE's 5x
       // skewedPartitionFactor, so nothing ever splits. The at-scale
       // shape (thousands of reducers, median partition << hot key)
       // is rehearsed by raising the reducer count.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SKEW_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled",
-        (!sys.env.contains("SPARK_GRAFT_SKEW_OFF")).toString)
-      .config("spark.sql.adaptive.forceOptimizeSkewedJoin",
-        (!sys.env.contains("SPARK_GRAFT_SKEW_OFF")).toString)
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SKEW_THRESHOLD", "8m"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SKEW_ADVISORY", "4m"))
+      "spark.sql.shuffle.partitions" ->
+        sys.env.getOrElse("SPARK_GRAFT_SKEW_PARTITIONS", "32"),
+      "spark.sql.adaptive.skewJoin.enabled" ->
+        (!sys.env.contains("SPARK_GRAFT_SKEW_OFF")).toString,
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" ->
+        (!sys.env.contains("SPARK_GRAFT_SKEW_OFF")).toString,
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
+        sys.env.getOrElse("SPARK_GRAFT_SKEW_THRESHOLD", "8m"),
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+        sys.env.getOrElse("SPARK_GRAFT_SKEW_ADVISORY", "4m"),
       // SPARK_GRAFT_SKEW_NOBROADCAST=1 disables broadcast joins so
       // the probe exercises the 100 TB fact-fact shape: at rehearsal
       // scale every dimension broadcasts and no sort-merge join ever
       // forms, so AQE's skew splitter (which only rewrites SMJ/SHJ
       // sides) has nothing to split regardless of threshold
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        if (sys.env.contains("SPARK_GRAFT_SKEW_NOBROADCAST")) "-1"
-        else "10MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.autoBroadcastJoinThreshold" ->
+        (if (sys.env.contains("SPARK_GRAFT_SKEW_NOBROADCAST")) "-1"
+        else "10MB")))
 
     // the minimal fact-dim shape under forced SMJ: lineitem joined
     // 1:1 on its zipf-skewed l_partkey — the registry queries wrap

@@ -18,9 +18,10 @@ object SparkEntry {
     ops.Validate.v1Freshness(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. Each
-    * query is built after [[plans.Plans.install]] — the one install
-    * point of the custom optimizer rules and planner strategies for a
-    * session built without `spark.sql.extensions`. */
+    * query is built after [[plans.Plans.install]], so a session built
+    * outside [[Session.local]] and without `spark.sql.extensions`
+    * (such as a benchmark client's) plans it with the custom optimizer
+    * rules and planner strategies too. */
   def queries: Map[String, QFn] = registered.map { case (name, fn) =>
     name -> ((spark: SparkSession, sfDir: String) => {
       plans.Plans.install(spark)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Stream-family scale rehearsal (judge r17 next-round #6): runs each
   * stream query TWICE against a GenData dir — the first run processes
   * every staged arrival through the stateful plan, the re-trigger
@@ -37,16 +35,7 @@ object StreamRehearse {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/gendata100")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .appName("graft-streamrehearse")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     // the 6 stateful event streams + the CoW corpus twin + the doc
     // ingest twin — the r17 verdict #6 set

@@ -84,10 +84,9 @@ object Util {
     * write whose every input row was filtered out commits _SUCCESS
     * with ZERO parts — schema inference on read-back would throw, so
     * every read of a maybe-empty layout probes this first (the
-    * corpus-build run, the retract/compact overlays and logs). */
-  def anyParquetPart(f: java.io.File): Boolean = anyParquetPart(f.getPath)
-
-  /** Hadoop-FS form of the part probe (r17 advice): the paths these
+    * corpus-build run, the retract/compact overlays and logs).
+    *
+    * It lists through the Hadoop FS: the paths these
     * probes see are local here but object-store URIs on a cluster,
     * where `java.io.File` answers false for everything — which would
     * silently misread a populated generation as empty (the same blind

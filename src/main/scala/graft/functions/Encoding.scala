@@ -28,7 +28,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object EncodingRepair {
   private val Cp1252 = java.nio.charset.Charset.forName("windows-1252")
-  private val Latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
   private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
 
   /** Strict single un-mojibake step: Some(decoded) iff the string's

@@ -1010,8 +1010,8 @@ object Text {
     * as the ANN operators (dot_f32's left-assoc double accumulation,
     * replayed term-for-term by the oracle's [[Vector.dotDuck]]).
     * The query vectors are literals ([[denseQueries]]) exploded onto
-    * each corpus row; the corpus side streams map-side
-    * through the [[graft.plans.GroupTopK]] partial-heap prune, so
+    * each corpus row; the rank filter's map-side GroupTopK heap
+    * ([[graft.plans.RankFilterToGroupTopK]]) prunes the corpus side, so
     * the final ranking window sorts ≤ partitions × |Q| × 10
     * survivors — the brute-force baseline shape; at 100 TB the IVF
     * leg (`ann_ivf_topk`) swaps in without changing the fusion. */
@@ -1024,10 +1024,9 @@ object Text {
       .select(col("*"), col("q.*")).drop("q")
       .withColumn("sim",
         dot("qv", "embedding") / (sqrt(col("na")) * sqrt(col("nrm2"))))
-    val pruned = Vector.topkLocal(pairs, "sim", 10, asc = false)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    pruned.withColumn("rk", row_number().over(w).cast("int"))
+    pairs.withColumn("rk", row_number().over(w).cast("int"))
       .filter(col("rk") <= 10)
       .select(col("qid").as("query_id"), col("rk"),
         col("vec_id").as("doc_id"))
@@ -1268,10 +1267,9 @@ object Text {
       .withColumn("q", try_element_at(typedLit(qs), col("qid")))
       .withColumn("sim", dot("q.qv", "cv") /
         (sqrt(col("q.na")) * sqrt(col("cn"))))
-    val pruned = Vector.topkLocal(pairs, "sim", 10, asc = false)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    pruned.withColumn("rk", row_number().over(w).cast("int"))
+    pairs.withColumn("rk", row_number().over(w).cast("int"))
       .filter(col("rk") <= 10)
       .select(col("qid").as("query_id"), col("rk"),
         col("vec_id").as("doc_id"))
@@ -4208,11 +4206,6 @@ object Text {
         .write.partitionBy("split", "shard").mode("overwrite").parquet(out)
     }
 
-  /** Does a committed parquet layout actually contain part files?
-    * (One shared implementation — [[graft.Util.anyParquetPart]].) */
-  private[ops] def anyParquetPart(f: java.io.File): Boolean =
-    graft.Util.anyParquetPart(f)
-
   def corpusBuildRun(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.BpeVocab.ensureFixture()
     val base = docbaseOf(spark, sfDir)
@@ -4221,7 +4214,7 @@ object Text {
     // synthetic vocabs at scale) commits a layout with NO part files;
     // schema inference would throw. Nothing written ⇒ nothing to
     // reconcile: return the (empty) manifest with the verdict columns.
-    if (!anyParquetPart(new java.io.File(out)))
+    if (!anyParquetPart(out))
       return corpusBuildPipeline(spark, sfDir)
         .withColumn("text_intact", lit(true))
         .withColumn("tokens_ok", lit(true))
@@ -4408,7 +4401,7 @@ object Text {
           .withColumn("leftover", lit(0L))
       } else {
         val rb =
-          if (!anyParquetPart(new java.io.File(over)))
+          if (!anyParquetPart(over))
             plan.limit(0).select(col("split"), col("shard"), col("bin"),
               col("n_before").as("n_rb"), col("tok_before").as("tok_rb"),
               col("n_before").as("left_rb"))
@@ -4710,14 +4703,14 @@ object Text {
     // log at all (the last batch's roll folded everything): the mask
     // is then empty and the live view IS the newest generation.
     val touchedNow =
-      if (!anyParquetPart(new java.io.File(spec.logDir)))
+      if (!anyParquetPart(spec.logDir))
         layout(base).select(col("split"), col("shard")).limit(0)
       else retractManifestOf(spark, sfDir)
         .join(Tables.parquet(spark, spec.logDir).select(col("doc_id")),
           Seq("doc_id"))
         .select(col("split"), col("shard")).distinct()
     val overDf =
-      (if (!anyParquetPart(new java.io.File(over))) layout(base).limit(0)
+      (if (!anyParquetPart(over)) layout(base).limit(0)
        else layout(over))
         .join(touchedNow, Seq("split", "shard"), "left_semi")
     val live = layout(base)
@@ -4819,7 +4812,7 @@ object Text {
     val plan = retractPlanOf(spark, sfDir)
     val v2 = spec.compactDir
     val v2r =
-      if (!anyParquetPart(new java.io.File(v2)))
+      if (!anyParquetPart(v2))
         man.limit(0).select(col("doc_id"), col("split"), col("shard"),
           col("bin"), col("n_tokens"))
       else Tables.parquet(spark, v2)

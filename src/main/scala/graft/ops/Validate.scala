@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -77,7 +76,6 @@ object Validate {
   // (dags/Speedtest.py:52-57,91-96). The limit table is a tiny config
   // dim → broadcast join (never a shuffle at scale).
   def v3Threshold(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     val limits = spark.range(0, 200)
       .select(col("id").as("user_id"),
         ((col("id") % 5) * lit(25)).cast("double").as("min_limit"))

@@ -88,42 +88,10 @@ object Vector {
       .withColumn("sim", col("dot") / (sqrt(col("na")) * sqrt(col("nrm2"))))
   }
 
-  /** Per-query top-k prune through the [[graft.plans.GroupTopK]]
-    * PHYSICAL operator in pruneOnly form (r9 verdict #5: one
-    * mechanism, not two): the strategy plans a flush-capped partial
-    * k-heap pass per input partition — the hand-written typed
-    * mapPartitions heap this replaces — retaining a SUPERSET of each
-    * query's true top-k (each true top-k row wins its own segment's
-    * heap), so the per-query ranking window every caller applies
-    * afterwards sorts ≤ partitions × queries × k survivor rows and
-    * makes the final cut. Ties break on vec_id exactly like that
-    * window — output is bit-identical to the unpruned formulation.
-    * `asc` = smaller score is better (distances); descending =
-    * similarities. The session plans GroupTopK through the strategy
-    * [[graft.plans.Plans.install]] adds (SparkEntry.queries installs
-    * it before building each query). */
-  private[graft] def topkLocal(df: DataFrame, scoreCol: String, k: Int,
-      asc: Boolean, carry: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
-    val proj = df.select(
-      (Seq("qid", "vec_id", scoreCol) ++ carry).map(col): _*)
-    val lp = proj.queryExecution.analyzed
-    // carried columns (e.g. the shortlist's source cell) ride the
-    // copied rows through the heap untouched — TopKPerGroupExec's
-    // output is child.output
-    val Seq(qid, vid, score) = lp.output.take(3)
-    val dir = if (asc) Ascending else Descending
-    org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(df.sparkSession,
-      graft.plans.GroupTopK(Seq(qid),
-        Seq(SortOrder(score, dir), SortOrder(vid, Ascending)), k, lp,
-        pruneOnly = true))
-  }
-
   private def topk(df: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("vec_id"))
-    topkLocal(df, "sim", k, asc = false)
-      .withColumn("rank", row_number().over(w))
+    df.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("vec_id"),
         e4(col("sim")).as("sim_e4"))
@@ -1072,8 +1040,8 @@ object Vector {
     *     volume |batch| × nprobe × cell-target, the
     *     denseIvfCandidates bound;
     *  4. exact cosine re-rank map-side (dot_f32 bitwise contract) and
-    *     a bounded-heap per-query top-k ([[topkLocal]], the GroupTopK
-    *     physical operator) before the exact integer rank — each
+    *     a per-query rank filter (pruned map-side by the GroupTopK
+    *     heap [[graft.plans.RankFilterToGroupTopK]] plans) — each
     *     request is answered within its own batch, so the serve loop
     *     keeps NO cross-batch state: exactly-once delivery rides the
     *     checkpoint's batch-id tracking, not a state store.
@@ -1149,8 +1117,7 @@ object Vector {
       .select(col("qid"), col("vec_id"), col("sim_e4"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("sim_e4").desc, col("vec_id"))
-    topkLocal(cand, "sim_e4", 10, asc = false)
-      .withColumn("rank", row_number().over(w))
+    cand.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 10)
       .select(col("qid"), col("rank"), col("vec_id"), col("sim_e4"))
   }
@@ -1417,8 +1384,7 @@ object Vector {
       }.toDF("cell", "qid", "vec_id", "adc")
     val wC = Window.partitionBy(col("qid"))
       .orderBy(col("adc"), col("vec_id"))
-    topkLocal(adc, "adc", PqServeCandC, asc = true, carry = Seq("cell"))
-      .withColumn("crank", row_number().over(wC))
+    adc.withColumn("crank", row_number().over(wC))
       .filter(col("crank") <= PqServeCandC)
       .select(col("cell"), col("qid"), col("vec_id"))
   }
@@ -1482,8 +1448,7 @@ object Vector {
       .select(col("qid"), col("vec_id"), col("sim_e4"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("sim_e4").desc, col("vec_id"))
-    topkLocal(exact, "sim_e4", 10, asc = false)
-      .withColumn("rank", row_number().over(w))
+    exact.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 10)
       .select(col("qid"), col("rank"), col("vec_id"), col("sim_e4"))
   }
@@ -1615,7 +1580,7 @@ object Vector {
       assignDir: String, overDir: String): DataFrame = {
     val base = Tables.parquet(spark, assignDir)
     val over =
-      if (!Text.anyParquetPart(new java.io.File(overDir)))
+      if (!anyParquetPart(overDir))
         base.limit(0)
       else Tables.parquet(spark, overDir).select(col("vec_id"), col("cell"))
     // live = untouched base cells ∪ overlay. Touched cells come from
@@ -1744,7 +1709,7 @@ object Vector {
       assignDir: String, overDir: String): DataFrame = {
     val base = Tables.parquet(spark, assignDir)
     val over =
-      if (!Text.anyParquetPart(new java.io.File(overDir))) base.limit(0)
+      if (!anyParquetPart(overDir)) base.limit(0)
       else Tables.parquet(spark, overDir).select(col("vec_id"), col("cell"))
     val touchedCells = base.filter(isVecCleared)
       .select(col("cell")).distinct()
@@ -1865,7 +1830,7 @@ object Vector {
     // double-count (the corpus twin's rule)
     val touched = base.filter(isVecRetracted).select(col("cell")).distinct()
     val overDf =
-      (if (!Text.anyParquetPart(new java.io.File(over))) base.limit(0)
+      (if (!anyParquetPart(over)) base.limit(0)
        else Tables.parquet(spark, over).select(base.columns.map(col): _*))
         .join(touched, Seq("cell"), "left_semi")
     val live = base.join(touched, Seq("cell"), "left_anti")
@@ -1939,7 +1904,7 @@ object Vector {
     // _SUCCESS commit must not strand the superseded dirs
     graft.streaming.StreamCow.vacuum(spec)
     val v2read =
-      if (!Text.anyParquetPart(new java.io.File(spec.compactDir)))
+      if (!anyParquetPart(spec.compactDir))
         locator.limit(0)
       else Tables.parquet(spark, spec.compactDir)
         .select(col("vec_id"), col("cell").cast("int").as("cell"))
@@ -2562,8 +2527,7 @@ object Vector {
       .toDF("qid", "vec_id", "adc")
     val wC = Window.partitionBy(col("qid"))
       .orderBy(col("adc"), col("vec_id"))
-    val cand = topkLocal(approx, "adc", candC, asc = true)
-      .withColumn("crank", row_number().over(wC))
+    val cand = approx.withColumn("crank", row_number().over(wC))
       .filter(col("crank") <= candC)
       .select(col("qid"), col("vec_id"))
     // Exact re-rank of the bounded candidate set.
@@ -2573,8 +2537,7 @@ object Vector {
       .toDF("qid", "vec_id", "dist")
     val wK = Window.partitionBy(col("qid"))
       .orderBy(col("dist"), col("vec_id"))
-    topkLocal(exact, "dist", k, asc = true)
-      .withColumn("rank", row_number().over(wK))
+    exact.withColumn("rank", row_number().over(wK))
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("vec_id"))
       .orderBy(col("qid"), col("rank"))
@@ -2620,8 +2583,7 @@ object Vector {
         .map { case (qid, id, q, v) => (qid, id, l2(q, v)) }
         .toDF("qid", "vec_id", "dist")
       val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-      topkLocal(pairs, "dist", k, asc = true)
-        .withColumn("rank", row_number().over(w))
+      pairs.withColumn("rank", row_number().over(w))
         .filter(col("rank") <= k)
         .select(col("qid"), col("vec_id"))
         .as[(Long, Long)].collect().toSeq
@@ -2846,8 +2808,7 @@ object Vector {
       }
       .toDF("qid", "vec_id", "adc")
     val wC = Window.partitionBy(col("qid")).orderBy(col("adc"), col("vec_id"))
-    val cand = topkLocal(approx, "adc", candC, asc = true)
-      .withColumn("crank", row_number().over(wC))
+    val cand = approx.withColumn("crank", row_number().over(wC))
       .filter(col("crank") <= candC)
       .select(col("qid"), col("vec_id"))
     val exact = exactCandidates(spark, sfDir, cand)
@@ -2855,8 +2816,7 @@ object Vector {
       .map { case (id, qid, q, v) => (qid, id, l2(q, v)) }
       .toDF("qid", "vec_id", "dist")
     val wK = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-    topkLocal(exact, "dist", k, asc = true)
-      .withColumn("rank", row_number().over(wK))
+    exact.withColumn("rank", row_number().over(wK))
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("vec_id"))
       .orderBy(col("qid"), col("rank"))

@@ -80,7 +80,7 @@ object HttpFetch {
       java.nio.file.Files.writeString(dest, body)
       true
     } catch {
-      case e: Exception if permissive => false // S4 soft-fail: no staged file
+      case _: Exception if permissive => false // S4 soft-fail: no staged file
     }
   }
 

@@ -1,7 +1,6 @@
 package graft.sources.v2
 
 import java.net.{URI, URLEncoder}
-import java.nio.charset.StandardCharsets
 import java.util
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}

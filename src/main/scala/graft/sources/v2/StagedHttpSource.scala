@@ -2,7 +2,6 @@ package graft.sources.v2
 
 import java.util
 
-import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.catalyst.InternalRow

@@ -185,7 +185,7 @@ object StreamCow {
         // has data files; a generation exists only after folding a
         // non-empty one). r16 advice.
         def baseFrame(path: String): DataFrame =
-          if (graft.Util.anyParquetPart(new java.io.File(path)))
+          if (graft.Util.anyParquetPart(path))
             Tables.parquet(ss, path)
           else Tables.parquet(ss, spec.baseDir).filter(lit(false))
         if (cells.nonEmpty) {
@@ -259,7 +259,7 @@ object StreamCow {
         // readers masking the overlay with the log's touched cells.
         spec.autoCompactLogRows.foreach { thr =>
           if (spec.staticRetract.isEmpty &&
-              graft.Util.anyParquetPart(new java.io.File(logDir)) &&
+              graft.Util.anyParquetPart(logDir) &&
               Tables.parquet(ss, logDir).count() > thr) {
             val g = genOf(curBase, spec) + 1
             val to = new java.io.File(spec.genDir(g))
@@ -376,8 +376,8 @@ object StreamCow {
     // corpus) leaves no log partitions — compaction is then a pure
     // re-link of every base cell
     val touched =
-      if (!graft.Util.anyParquetPart(new java.io.File(spec.logDir)) ||
-          !graft.Util.anyParquetPart(new java.io.File(fromBase)))
+      if (!graft.Util.anyParquetPart(spec.logDir) ||
+          !graft.Util.anyParquetPart(fromBase))
         Set.empty[Seq[Any]]
       else {
         val cum = Tables.parquet(spark, spec.logDir).select(col(spec.keyCol))

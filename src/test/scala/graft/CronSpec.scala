@@ -2,14 +2,12 @@ package graft
 
 import java.time.Instant
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.ops.{Cron, Flow}
 
 /** Cron schedule semantics (D4) — known timetables in UTC, including
   * the reference's exact expressions (dags/DNS_Requests.py:23,
   * dags/Cloudflare_Apps.py:54, dags/Airflow_Cleanup.py:29). */
-class CronSpec extends AnyFunSuite {
+class CronSpec extends SparkSuite {
 
   private def t(s: String): Instant = Instant.parse(s)
   private def fires(expr: String, after: String, n: Int): Seq[String] =
@@ -135,9 +133,6 @@ class CronSpec extends AnyFunSuite {
     // The relational compile must be semantics-identical to the
     // imperative matcher — including the Vixie either-match dom/dow
     // rule and the 0=Sunday normalization, where the dialects differ.
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
     import java.time.Instant
     val exprs = Seq("0 */6 * * *", "*/5 * * * *", "0 * * * *", "@daily",
       "30 8 * * 1-5", "0 0 1,15 * 3", "15 12 */2 * *")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Row
 
 import graft.ops._
 import graft.sources.{Auth, Sources}
@@ -344,7 +343,6 @@ class RelationalOpsSpec extends SparkSuite {
   }
 
   test("ffill carries the last purchase forward; mode picks max with lex ties") {
-    import org.apache.spark.sql.expressions.Window
     val ev = Tables.events(spark, sf)
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
         col("value")).collect()
@@ -489,7 +487,6 @@ class TextOpsSpec extends SparkSuite {
   }
 
   test("t_quality_classifier: confusion matrix partitions the held-out half") {
-    import spark.implicits._
     val cm = ops.Text.qualityClassifier(spark, sf).collect()
     val cells = cm.map(r => ((r.getString(0), r.getString(1)), r.getLong(2)))
     assert(cells.forall { case ((l, p), n) =>
@@ -1809,7 +1806,7 @@ class MultimodalSpec extends SparkSuite {
           r.getAs[Boolean]("is_dup")))).toMap
     assert(rows.size == MultimodalFixtures.audioContourSpecs.size)
     val twinned = Set(1, 4, 7)
-    MultimodalFixtures.audioContourSpecs.foreach { case (name, id, sc) =>
+    MultimodalFixtures.audioContourSpecs.foreach { case (name, id, _) =>
       val (gs, peer, dup) = rows(name)
       if (twinned(id)) {
         assert(gs == 2L && dup, s"$name must pair with its gain twin")
@@ -2186,7 +2183,6 @@ class FlowSpec extends SparkSuite {
   }
 
   test("operators tolerate empty input tables") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

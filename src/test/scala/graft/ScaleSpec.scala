@@ -164,22 +164,34 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("top-k heap pruning equals the unpruned window result") {
-    import spark.implicits._
     // Adversarial scores: heavy ties (s % 7) so tie-breaking on vec_id
     // is actually exercised, spread over many partitions.
-    val scored = spark.range(0, 5000)
-      .select((col("id") % 3).as("qid"), col("id").as("vec_id"),
-        (col("id") % 7).cast("double").as("sim"))
-      .repartition(16)
-    val pruned = graft.ops.Vector.topkLocal(scored.toDF(), "sim", 10, asc = false)
-    assert(pruned.count() <= 16L * 3 * 10, "per-partition heaps bound survivors")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    def top(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("rk", row_number().over(w)).filter(col("rk") <= 10)
-        .select("qid", "rk", "vec_id", "sim")
-        .orderBy("qid", "rk").collect().toSeq
-    assert(top(pruned) == top(scored.toDF()), "pruned top-k must be exact")
+    def top(s: org.apache.spark.sql.SparkSession) = {
+      val scored = s.range(0, 5000)
+        .select((col("id") % 3).as("qid"), col("id").as("vec_id"),
+          (col("id") % 7).cast("double").as("sim"))
+        .repartition(16)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
+      scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 10)
+        .select("qid", "rk", "vec_id", "sim").orderBy("qid", "rk")
+    }
+    // the shared session carries RankFilterToGroupTopK; a new session
+    // plans the same window without it
+    val clean = top(spark.newSession())
+    assert(clean.queryExecution.optimizedPlan
+      .collect { case g: graft.plans.GroupTopK => g }.isEmpty)
+    graft.Util.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+      val pruned = top(spark)
+      val heaps = pruned.queryExecution.executedPlan
+        .collect { case t: graft.plans.TopKPerGroupExec => t }
+      assert(heaps.size == 1 && heaps.head.partial,
+        s"the rule must plan one prune-only heap:\n${pruned.queryExecution.executedPlan}")
+      assert(heaps.head.execute().count() <= 16L * 3 * 10,
+        "per-partition heaps bound survivors")
+      assert(pruned.collect().toSeq == clean.collect().toSeq,
+        "pruned top-k must be exact")
+    }
   }
 
   test("concurrent queries on one session return correct independent results") {
@@ -489,7 +501,6 @@ class ScaleSpec extends SparkSuite {
     // batch's state is one slice's worth, not the whole history. This
     // is the difference between bounded memory and OOM on an unbounded
     // stream.
-    import spark.implicits._
     val usersPerBatch = 30000L
     val dir = java.nio.file.Files.createTempDirectory("graft_ij_scale").toString
     val stage = java.nio.file.Files.createTempDirectory("graft_ij_stage")

@@ -4,23 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session — Spark
-  * getOrCreate dedupes across suites). It carries the custom rules and
-  * strategies from the start, as every serving session does through
-  * `SparkEntry.queries`, so a spec that builds a query directly plans
-  * it the way the registry does whatever spec ran first. A spec that
-  * needs a rule-free plan takes `spark.newSession()`. */
+  * getOrCreate dedupes across suites), built by [[graft.Session.local]]
+  * like every main's. It carries the custom rules and strategies from
+  * the start, as every serving session does, so a spec that builds a
+  * query directly plans it the way the registry does whatever spec ran
+  * first. A spec that needs a rule-free plan takes
+  * `spark.newSession()`. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.Plans.install(s)
-    s
-  }
+  lazy val spark: SparkSession =
+    Session.local(4, Map("spark.sql.warehouse.dir" -> "/tmp/graft_warehouse"))
 
   val sf: String = "/root/testdata/sf0.001"
 

@@ -877,7 +877,7 @@ class StreamingSpec extends SparkSuite {
     StreamCow.run(spark, spec, locator)
     // live view stays empty: nothing to rewrite from an empty base
     val overlayHasRows =
-      graft.Util.anyParquetPart(new java.io.File(spec.overlayDir)) &&
+      graft.Util.anyParquetPart(spec.overlayDir) &&
         spark.read.parquet(spec.overlayDir).count() > 0
     assert(!overlayHasRows,
       "no overlay rows may materialize from an empty generation")
@@ -972,7 +972,7 @@ class StreamingSpec extends SparkSuite {
       "v1 base files must survive the roll untouched")
     val nRetract = retractKeys.count()
     def logRows: Long =
-      if (!graft.Util.anyParquetPart(new java.io.File(spec.logDir))) 0L
+      if (!graft.Util.anyParquetPart(spec.logDir)) 0L
       else spark.read.parquet(spec.logDir).count()
     assert(logRows < nRetract,
       s"post-roll log must hold only post-roll batches ($logRows/$nRetract)")
@@ -987,7 +987,7 @@ class StreamingSpec extends SparkSuite {
     def liveView(): Set[(Long, Int, String)] = {
       val cb = StreamCow.currentBase(spec)
       val covered =
-        if (!graft.Util.anyParquetPart(new java.io.File(spec.logDir)))
+        if (!graft.Util.anyParquetPart(spec.logDir))
           Set.empty[String]
         else locator
           .join(spark.read.parquet(spec.logDir).select(col("key")),
@@ -995,7 +995,7 @@ class StreamingSpec extends SparkSuite {
           .select(col("cell")).distinct()
           .collect().map(_.get(0).toString).toSet
       val overRows =
-        if (!graft.Util.anyParquetPart(new java.io.File(over)))
+        if (!graft.Util.anyParquetPart(over))
           Set.empty[(Long, Int, String)]
         else rows(spark.read.parquet(over)
           .filter(col("cell").cast("string")
