@@ -1027,7 +1027,7 @@ object Multimodal {
     graft.Util.withConf(spark,
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      graft.Util.withConf(spark, "spark.sql.shuffle.partitions", "8") {
+      graft.streaming.EventsStream.withStreamingParts(spark) {
         streamMmIngestInner(spark)
       }
     }
@@ -1173,7 +1173,7 @@ object Multimodal {
     * the same contour + match over the committed specs, the
     * mm_audio_contour_dedup convention. */
   def streamAudioIngest(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Util.withConf(spark, "spark.sql.shuffle.partitions", "8") {
+    graft.streaming.EventsStream.withStreamingParts(spark) {
       streamAudioIngestInner(spark)
     }
 
@@ -1381,7 +1381,7 @@ object Multimodal {
     * the ≤256-gray palette losslessly — the mm_scene_cuts
     * invariant). */
   def streamVideoIngest(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Util.withConf(spark, "spark.sql.shuffle.partitions", "8") {
+    graft.streaming.EventsStream.withStreamingParts(spark) {
       streamVideoIngestInner(spark)
     }
 
@@ -1503,7 +1503,7 @@ object Multimodal {
     graft.Util.withConf(spark,
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      graft.Util.withConf(spark, "spark.sql.shuffle.partitions", "8") {
+      graft.streaming.EventsStream.withStreamingParts(spark) {
         streamPairIngestInner(spark)
       }
     }

@@ -403,15 +403,7 @@ object Relational {
        FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""
 
   // HLL++ approximate distinct — the 100 TB-scale path for distinct
-  // counts. Sketch internals differ engine-to-engine, so no SQL oracle
-  // (driver records the weaker rows-only check).
-  def approxDistinct(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.lineitem(spark, sfDir)
-      .groupBy(col("l_returnflag"))
-      .agg(approx_count_distinct(col("l_partkey"), 0.01).as("approx_parts"))
-      .orderBy(col("l_returnflag"))
-
-  // Accuracy gate for the sketch: |approx − exact| must stay within 5%
+  // counts. Its accuracy gate: |approx − exact| must stay within 5%
   // (HLL++ at rsd 0.01 — generous margin). The sketch value itself is
   // engine-specific, but the tolerance verdict is oracle-checkable.
   def approxDistinctCheck(spark: SparkSession, sfDir: String): DataFrame =

@@ -1228,8 +1228,8 @@ object Text {
     * PartitionFilters — ScaleSpec-pinned) and DELIVERS the candidate
     * vectors and norms from the artifact itself (r17 verdict #1), so
     * the re-rank never joins back to the embeddings table. Volume is
-    * bounded by |Q| × nprobe × mean-cell at ANY corpus size (the
-    * RagScaleProbe's scale evidence). */
+    * bounded by |Q| × nprobe × mean-cell at ANY corpus size
+    * (ScaleSpec pins the pruned, vector-delivering read). */
   private[graft] def denseIvfCandidates(spark: SparkSession,
       sfDir: String): DataFrame = {
     val dir = Vector.persistIndexDir(spark, sfDir)
@@ -1250,10 +1250,6 @@ object Text {
       .select(col("qid"), col("vec_id"),
         col("embedding").as("cv"), col("nrm2").as("cn"))
   }
-
-  /** Candidate volume of the IVF leg (RagScaleProbe evidence). */
-  private[graft] def denseIvfCandidateRows(spark: SparkSession,
-      sfDir: String): Long = denseIvfCandidates(spark, sfDir).count()
 
   private[graft] def denseIvfTopk(spark: SparkSession,
       sfDir: String): DataFrame = {
@@ -5532,7 +5528,7 @@ object Text {
     graft.Util.withConf(spark,
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      graft.Util.withConf(spark, "spark.sql.shuffle.partitions", "8") {
+      graft.streaming.EventsStream.withStreamingParts(spark) {
         streamCorpusAppendInner(spark, sfDir)
       }
     }

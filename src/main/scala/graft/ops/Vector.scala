@@ -940,7 +940,7 @@ object Vector {
     graft.Util.withConf(spark,
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      graft.Util.withConf(spark, "spark.sql.shuffle.partitions", "8") {
+      graft.streaming.EventsStream.withStreamingParts(spark) {
         streamAnnAppendInner(spark, sfDir)
       }
     }
@@ -1065,7 +1065,7 @@ object Vector {
     * Re-triggering with no new arrivals is a checkpoint read
     * (StreamingSpec pins no-op re-trigger + mid-stream restart). */
   def streamAnnQuery(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Util.withConf(spark, "spark.sql.shuffle.partitions", "8") {
+    graft.streaming.EventsStream.withStreamingParts(spark) {
       streamAnnQueryInner(spark, sfDir)
     }
 
@@ -1467,7 +1467,7 @@ object Vector {
     * that PQ coding costs no measured recall vs full-vector serving
     * on this corpus — StreamingSpec pins the aggregate. */
   def streamAnnQueryPq(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Util.withConf(spark, "spark.sql.shuffle.partitions", "8") {
+    graft.streaming.EventsStream.withStreamingParts(spark) {
       streamAnnQueryPqInner(spark, sfDir)
     }
 
@@ -2629,7 +2629,6 @@ object Vector {
     s"""SELECT vec_id AS qid, CAST($floor AS BIGINT) AS hits_capped,
        true AS recall_ok FROM embeddings
        WHERE vec_id IN (${QueryIds.mkString(", ")}) ORDER BY qid"""
-  val annPqRecallGateSql: String = annRecallGateSql(6)
 
   /** Oracle gate for IVF-PQ: probing 3/8 trained cells plus exact
     * re-rank must recover ≥ 6 of the true L2 top-10 per query

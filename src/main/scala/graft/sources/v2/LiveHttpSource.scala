@@ -3,7 +3,7 @@ package graft.sources.v2
 import java.net.{URI, URLEncoder}
 import java.util
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -11,7 +11,6 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{EqualTo, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** LIVE-fetch DataSource V2 connector: the production path of
   * SURVEY.md §2.1 S1–S5, where the fetch itself IS the scan.
@@ -111,31 +110,7 @@ class LiveHttpTable(schema: StructType, options: java.util.Map[String, String])
 }
 
 class LiveHttpScanBuilder(schema: StructType,
-    options: java.util.Map[String, String])
-    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var pushedLimit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  /** Equality on a string field → a server-side query param. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (push, residual) = filters.partition {
-      case EqualTo(attr, _: String) =>
-        schema.fields.exists(f => f.name == attr && f.dataType == StringType)
-      case _ => false
-    }
-    pushed = push
-    residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  /** LIMIT n → the fetch's `limit=` param, per endpoint (the strongest
-    * guarantee a partitioned source can give; Spark still applies the
-    * global limit). */
-  override def pushLimit(limit: Int): Boolean = {
-    pushedLimit = limit
-    true
-  }
-
+    options: java.util.Map[String, String]) extends HttpScanBuilder(schema) {
   override def build(): Scan =
     new LiveHttpScan(schema, options, pushed, pushedLimit)
 }
@@ -336,11 +311,7 @@ class LiveHttpReaderFactory(schema: StructType, filters: Array[Filter],
 class LiveHttpReader(schema: StructType, filters: Array[Filter], limit: Int,
     headers: Map[String, String], transportName: String, timeoutMs: Long,
     permissive: Boolean, pages: PageWalk, url: String)
-    extends PartitionReader[InternalRow] {
-  private val mapper = new ObjectMapper()
-  private val eqFilters: Map[String, String] =
-    filters.collect { case EqualTo(a, v: String) => a -> v }.toMap
-
+    extends JsonLinesReader(schema, filters, limit) {
   private def fetchStrict(u: String): Seq[String] =
     LiveTransports(transportName).fetch(u, headers, timeoutMs)
       .linesIterator.filter(_.trim.nonEmpty).toSeq
@@ -458,17 +429,15 @@ class LiveHttpReader(schema: StructType, filters: Array[Filter], limit: Int,
     }
   }
 
-  private lazy val lines: Iterator[String] =
+  override protected lazy val lines: Iterator[String] =
     if (!pages.enabled)
       try fetchStrict(url).iterator
       catch { case _: Exception if permissive => Iterator.empty }
     else if (permissive) spooledWalk()
     else pageIter()
-  private var emitted = 0
-  private var current: InternalRow = _
 
-  /** Temporal parses are the only THROWING coercion in [[toRow]] (the
-    * Jackson asLong/asText paths never throw) — in S4 permissive mode
+  /** Temporal parses are the only THROWING coercion in a row's decode
+    * (the Jackson asLong/asText paths never throw) — in S4 permissive mode
     * a malformed event time nulls the FIELD instead of failing the
     * task, preserving "this endpoint contributes nothing; others
     * proceed" at field granularity. Strict mode surfaces the parse
@@ -481,49 +450,20 @@ class LiveHttpReader(schema: StructType, filters: Array[Filter], limit: Int,
           s"unparseable temporal value '$raw'", e)
     }
 
-  private def matches(node: JsonNode): Boolean =
-    eqFilters.forall { case (k, v) =>
-      node.has(k) && node.get(k).asText() == v
+  /** TIMESTAMP and DATE fields, on top of the shared scalar cases. */
+  override protected def decodeOther(dt: DataType, n: JsonNode): Any =
+    dt match {
+      case TimestampType => temporal(n.asText()) {
+        // ISO-8601 with offset — both the reference's
+        // "+00:00"-suffixed payloads and plain "Z" instants
+        val i = java.time.OffsetDateTime.parse(n.asText()).toInstant
+        i.getEpochSecond * 1000000L + i.getNano / 1000L
+      }
+      case DateType => temporal(n.asText())(
+        java.time.LocalDate.parse(n.asText()).toEpochDay.toInt)
+      case _ => super.decodeOther(dt, n)
     }
 
-  private def toRow(node: JsonNode): InternalRow =
-    InternalRow.fromSeq(schema.fields.toSeq.map { f =>
-      val n = node.get(f.name)
-      if (n == null || n.isNull) null
-      else f.dataType match {
-        case StringType => UTF8String.fromString(n.asText())
-        case LongType => n.asLong()
-        case IntegerType => n.asInt()
-        case BooleanType => n.asBoolean()
-        case DoubleType => n.asDouble()
-        case TimestampType => temporal(n.asText()) {
-          // ISO-8601 with offset — both the reference's
-          // "+00:00"-suffixed payloads and plain "Z" instants
-          val i = java.time.OffsetDateTime.parse(n.asText()).toInstant
-          i.getEpochSecond * 1000000L + i.getNano / 1000L
-        }
-        case DateType => temporal(n.asText())(
-          java.time.LocalDate.parse(n.asText()).toEpochDay.toInt)
-        case dt => throw new UnsupportedOperationException(dt.simpleString)
-      }
-    })
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    while (lines.hasNext) {
-      val line = lines.next().trim
-      if (line.nonEmpty) {
-        val node = mapper.readTree(line)
-        if (matches(node)) {
-          current = toRow(node)
-          emitted += 1
-          return true
-        }
-      }
-    }
-    false
-  }
-  override def get(): InternalRow = current
   override def close(): Unit = ()
 }
 

@@ -2,16 +2,13 @@ package graft.sources.v2
 
 import java.util
 
-
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector for staged HTTP JSON payloads (the scale
   * path for SURVEY.md §2.1 S1–S5).
@@ -53,30 +50,7 @@ class StagedHttpTable(schema: StructType, path: String)
 }
 
 class StagedHttpScanBuilder(schema: StructType, path: String)
-    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var pushedLimit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  /** Equality on a string field maps to a server-side search param —
-    * push it; everything else stays a Spark-side residual. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (push, residual) = filters.partition {
-      case EqualTo(attr, _: String) =>
-        schema.fields.exists(f => f.name == attr && f.dataType == StringType)
-      case _ => false
-    }
-    pushed = push
-    residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  /** LIMIT n maps to the fetch's `limit=` param — per partition, which
-    * is the strongest guarantee a partitioned source can give. */
-  override def pushLimit(limit: Int): Boolean = {
-    pushedLimit = limit
-    true // partial: Spark still applies the global limit
-  }
-
+    extends HttpScanBuilder(schema) {
   override def build(): Scan =
     new StagedHttpScan(schema, path, pushed, pushedLimit)
 }
@@ -112,49 +86,8 @@ class StagedHttpReaderFactory(schema: StructType, filters: Array[Filter],
 }
 
 class StagedHttpReader(schema: StructType, filters: Array[Filter],
-    limit: Int, file: String) extends PartitionReader[InternalRow] {
-  private val mapper = new ObjectMapper()
-  private val eqFilters: Map[String, String] =
-    filters.collect { case EqualTo(a, v: String) => a -> v }.toMap
+    limit: Int, file: String) extends JsonLinesReader(schema, filters, limit) {
   private val source = scala.io.Source.fromFile(file, "UTF-8")
-  private val lines = source.getLines()
-  private var emitted = 0
-  private var current: InternalRow = _
-
-  private def matches(node: JsonNode): Boolean =
-    eqFilters.forall { case (k, v) =>
-      node.has(k) && node.get(k).asText() == v
-    }
-
-  private def toRow(node: JsonNode): InternalRow =
-    InternalRow.fromSeq(schema.fields.toSeq.map { f =>
-      val n = node.get(f.name)
-      if (n == null || n.isNull) null
-      else f.dataType match {
-        case StringType => UTF8String.fromString(n.asText())
-        case LongType => n.asLong()
-        case IntegerType => n.asInt()
-        case BooleanType => n.asBoolean()
-        case DoubleType => n.asDouble()
-        case dt => throw new UnsupportedOperationException(dt.simpleString)
-      }
-    })
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    while (lines.hasNext) {
-      val line = lines.next().trim
-      if (line.nonEmpty) {
-        val node = mapper.readTree(line)
-        if (matches(node)) {
-          current = toRow(node)
-          emitted += 1
-          return true
-        }
-      }
-    }
-    false
-  }
-  override def get(): InternalRow = current
+  override protected val lines: Iterator[String] = source.getLines()
   override def close(): Unit = source.close()
 }

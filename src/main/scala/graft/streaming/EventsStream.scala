@@ -168,9 +168,10 @@ object EventsStream {
     * not per row — 8 partitions quarter the store open/commit overhead
     * vs the session's 32. Scoped and restored; production sizes this
     * to keep per-partition state in memory, exactly like batch shuffle
-    * partitions. */
-  private def withStreamingParts[T](spark: SparkSession, n: Int)(body: => T): T =
-    graft.Util.withConf(spark, "spark.sql.shuffle.partitions", n.toString)(body)
+    * partitions. The one place a stream query's state-partition
+    * count is set, in every module. */
+  private[graft] def withStreamingParts[T](spark: SparkSession)(body: => T): T =
+    graft.Util.withConf(spark, "spark.sql.shuffle.partitions", "8")(body)
 
   /** `stream_windowed_counts`: the full streaming path — readStream →
     * watermark → windowed agg → AvailableNow → memory sink — over the
@@ -179,7 +180,7 @@ object EventsStream {
     * so it oracle-checks against plain SQL; at scale the same code
     * runs incrementally per micro-batch with watermarked state.  */
   def streamWindowedCounts(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamingParts(spark, 8) {
+    withStreamingParts(spark) {
       // Source path = the table path itself: its own glob for the
       // single-file testdata layout, a listed directory for GenData's
       // directory-of-parts layout (the filename-glob form matched
@@ -212,7 +213,7 @@ object EventsStream {
     * per-(session,dataset) checkpoint → a re-trigger with no new files
     * plans zero micro-batches. */
   def streamHistRollup(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamingParts(spark, 8) {
+    withStreamingParts(spark) {
       val binW = 50L // 50-cent bins over the bounded event value
       val src = graft.streaming.EventsStream.tableStream(
       spark, rawSchema, sfDir, "events")
@@ -255,7 +256,7 @@ object EventsStream {
     * minus the session index); in production the same operator emits
     * closed sessions incrementally per batch. */
   def streamSessionize(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamingParts(spark, 8) {
+    withStreamingParts(spark) {
       import spark.implicits._
       val src = graft.streaming.EventsStream.tableStream(
       spark, rawSchema, sfDir, "events")
@@ -313,7 +314,7 @@ object EventsStream {
     * the lexicographic max the latest event, associatively — replay
     * and cross-batch merge are both just max again). */
   def streamLatestState(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamingParts(spark, 8) {
+    withStreamingParts(spark) {
       val src = graft.streaming.EventsStream.tableStream(
       spark, rawSchema, sfDir, "events")
         .withColumn("ts", expr(s"timestamp_micros(${graft.Tables.tsToMicrosSql(sfDir)})"))
@@ -350,7 +351,7 @@ object EventsStream {
     * oracle-check; in production the same plan runs incrementally with
     * bounded state. */
   def streamIntervalJoin(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamingParts(spark, 8) { streamIntervalJoinInner(spark, sfDir) }
+    withStreamingParts(spark) { streamIntervalJoinInner(spark, sfDir) }
 
   private def streamIntervalJoinInner(spark: SparkSession,
       sfDir: String): DataFrame = {
@@ -407,7 +408,7 @@ object EventsStream {
     * The horizon is computed as a broadcast scalar, not a driver-side
     * collect. */
   def streamLeftJoin(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamingParts(spark, 8) {
+    withStreamingParts(spark) {
       def side(t: String, pfx: String) =
         graft.streaming.EventsStream.tableStream(
       spark, rawSchema, sfDir, "events")
@@ -465,7 +466,7 @@ object EventsStream {
     * horizon costs one state row, never corpus-lifetime retention —
     * the at-least-once ingestion front door of a streaming pipeline. */
   def streamDedup(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamingParts(spark, 8) {
+    withStreamingParts(spark) {
       def src = graft.streaming.EventsStream.tableStream(
       spark, rawSchema, sfDir, "events")
         .withColumn("ts", expr(s"timestamp_micros(${graft.Tables.tsToMicrosSql(sfDir)})"))
@@ -492,7 +493,7 @@ object EventsStream {
     * oracle-checks; at scale only the windowed agg holds state and the
     * dim stays O(|nation|) per executor. */
   def streamStaticEnrich(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamingParts(spark, 8) {
+    withStreamingParts(spark) {
       val src = graft.streaming.EventsStream.tableStream(
       spark, rawSchema, sfDir, "events")
         .withColumn("ts", expr(s"timestamp_micros(${graft.Tables.tsToMicrosSql(sfDir)})"))
@@ -534,7 +535,7 @@ object EventsStream {
     * session evicts/emits once the watermark passes its end); Complete
     * is the gate's replay mode, not the production mode. */
   def streamSessionWindow(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamingParts(spark, 8) {
+    withStreamingParts(spark) {
       val src = graft.streaming.EventsStream.tableStream(
       spark, rawSchema, sfDir, "events")
         .withColumn("ts", expr(s"timestamp_micros(${graft.Tables.tsToMicrosSql(sfDir)})"))
@@ -618,7 +619,7 @@ object EventsStream {
   def runningCounts(spark: SparkSession, srcPath: String): DataFrame =
     graft.Util.withConf(spark, "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      withStreamingParts(spark, 8) { runningCountsInner(spark, srcPath) }
+      withStreamingParts(spark) { runningCountsInner(spark, srcPath) }
     }
 
   private def runningCountsInner(spark: SparkSession,
@@ -702,7 +703,7 @@ object EventsStream {
   def streamHeavyHitters(spark: SparkSession, sfDir: String): DataFrame =
     graft.Util.withConf(spark, "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      withStreamingParts(spark, 8) { streamHeavyHittersInner(spark, sfDir) }
+      withStreamingParts(spark) { streamHeavyHittersInner(spark, sfDir) }
     }
 
   private def streamHeavyHittersInner(spark: SparkSession,
@@ -818,7 +819,7 @@ object EventsStream {
   def streamDedupIndex(spark: SparkSession, sfDir: String): DataFrame =
     graft.Util.withConf(spark, "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      withStreamingParts(spark, 8) { streamDedupIndexInner(spark, sfDir) }
+      withStreamingParts(spark) { streamDedupIndexInner(spark, sfDir) }
     }
 
   private def streamDedupIndexInner(spark: SparkSession,
@@ -932,7 +933,7 @@ object EventsStream {
   def streamDedupRetract(spark: SparkSession, sfDir: String): DataFrame =
     graft.Util.withConf(spark, "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      withStreamingParts(spark, 8) { streamDedupRetractInner(spark, sfDir) }
+      withStreamingParts(spark) { streamDedupRetractInner(spark, sfDir) }
     }
 
   private def streamDedupRetractInner(spark: SparkSession,
@@ -1130,7 +1131,7 @@ object EventsStream {
   def streamZscoreAnomaly(spark: SparkSession, sfDir: String): DataFrame =
     graft.Util.withConf(spark, "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      withStreamingParts(spark, 8) { streamZscoreAnomalyInner(spark, sfDir) }
+      withStreamingParts(spark) { streamZscoreAnomalyInner(spark, sfDir) }
     }
 
   private def streamZscoreAnomalyInner(spark: SparkSession,

@@ -146,7 +146,7 @@ object StreamCow {
     * Returns the overlay dir. Re-running with an existing checkpoint
     * plans zero micro-batches and leaves all state untouched. */
   def run(spark: SparkSession, spec: Spec, locator: DataFrame): String =
-    graft.Util.withConf(spark, "spark.sql.shuffle.partitions", "8") {
+    EventsStream.withStreamingParts(spark) {
       runInner(spark, spec, locator)
     }
 

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source scans for the two single mechanisms: every main builds its
   * session through [[graft.Session.local]], and the installed
   * `RankFilterToGroupTopK` rule is the one place a per-group top-k
-  * prune enters a query plan. */
+  * prune enters a query plan. A third scan fixes the set of mains. */
 class SessionSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala/graft")
 
@@ -44,5 +44,25 @@ class SessionSpec extends AnyFunSuite {
     assert(plans.nonEmpty, "guard: the scan no longer sees graft/plans")
     assert(others.isEmpty, "write the rank filter and let the rule prune:\n" +
       others.mkString("\n"))
+  }
+
+  test("src/main has exactly the driver, plan and data-generator mains") {
+    // a main is an object with `def main` or `extends App`, named after
+    // the last object declared above it in its file; measurement
+    // belongs in perfbench's tracer and the specs, not in a new main
+    val objectDecl =
+      """^\s*(?:(?:private|protected)(?:\[\w+\])?\s+|case\s+)*object\s+(\w+)""".r
+    val entry = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+    val mains = files.flatMap { p =>
+      var owner = ""
+      Files.readAllLines(p).asScala.flatMap { l =>
+        objectDecl.findFirstMatchIn(l).foreach(m => owner = m.group(1))
+        if (entry.findFirstIn(l).isDefined) Some(owner) else None
+      }
+    }
+    assert(mains.sorted ==
+      Seq("Bench", "Explain", "GenData", "PlanDump", "Verify"))
   }
 }

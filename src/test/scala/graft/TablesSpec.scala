@@ -75,14 +75,12 @@ class TablesSpec extends SparkSuite {
 
   test("src/main has no schema-less .read.parquet( outside Tables.parquet") {
     // a schema-less read launches a footer-inference job at every
-    // DataFrame construction; Tables.parquet memoises the schema. The
-    // probe mains are diagnostics, not queries, and are exempt.
+    // DataFrame construction; Tables.parquet memoises the schema.
     import scala.jdk.CollectionConverters._
     val schemaLess = """\.read\s*\.parquet\(""".r
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
       .iterator().asScala.toSeq
-      .filter(p => p.toString.endsWith(".scala") &&
-        !p.getFileName.toString.endsWith("Probe.scala"))
+      .filter(_.toString.endsWith(".scala"))
     assert(files.exists(_.getFileName.toString == "Tables.scala"))
     val hits = files.flatMap { p =>
       val src = java.nio.file.Files.readString(p)
